@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from ..tables import load
+from ..tables import fingerprint, load
 
 # Pre-tokenizer (shared: analysis.text_token_count counts these same
 # segments as pretok_count): letter runs / digit runs / single non-alnum
@@ -786,9 +786,7 @@ def _trained_table(spark: SparkSession, sf_dir: str, byte_level: bool = False):
     picked by TakeOrderedAndProject (no global sort materializes).
     ``byte_level`` trains over the byte family's pre-tokens and hex-byte
     seeds instead of lowercased char seeds."""
-    from .dedup import _corpus_fingerprint
-
-    fp = _corpus_fingerprint(sf_dir)
+    fp = fingerprint(sf_dir, "documents")
     key = None
     if fp is not None:
         key = (

@@ -1507,7 +1507,12 @@ _QC_SCORES_STRUCT = T.StructType(
 )
 _QC_W_TABLE = qc_weights()
 _QC_CONTRIB_MEMO: dict[str, int] = {}
-_QC_MEMO_CAP = 2_000_000  # bounds worker memory; misses just re-hash
+# Memo bound in bytes: at most _QC_MEMO_CAP entries, each keyed by a
+# feature of at most _QC_MEMO_MAX_LEN chars (about 130 B with the dict
+# slot, so about 260 MB per worker at worst). Longer features are rare
+# under Zipf and are re-hashed on every use instead of stored.
+_QC_MEMO_CAP = 2_000_000
+_QC_MEMO_MAX_LEN = 32
 
 
 @F.pandas_udf(_QC_SCORES_STRUCT)
@@ -1521,7 +1526,7 @@ def _qc_scores_arrow(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         w = memo.get(f)
         if w is None:
             w = W[int(hashlib.md5(f.encode()).hexdigest()[:8], 16) % QC_NB]
-            if len(memo) < _QC_MEMO_CAP:
+            if len(f) <= _QC_MEMO_MAX_LEN and len(memo) < _QC_MEMO_CAP:
                 memo[f] = w
         return w
 
@@ -2033,8 +2038,9 @@ def curate_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic URL synthesis + canonicalization (same host derivation),
     text_gopher_rules' rule battery (shared `_gopher_*` helpers), and
     quality_classifier_score's model in its narrow Arrow-vectorized
-    inference shape (`qc_logit_arrow` — value-identical to the JVM fold
-    `qc_logit_narrow`, pinned by test).
+    inference shape (`qc_narrow_scores` staged in its own projection, then
+    `qc_logit_expr` — value-identical to the JVM fold `qc_logit_narrow`,
+    pinned by test).
 
     Spark-first shape, 100 TB story: ONE corpus scan carrying THREE
     narrow per-row signals (host parse, rule keep, classifier logit —

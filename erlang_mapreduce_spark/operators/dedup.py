@@ -40,7 +40,7 @@ from ..ckpt import (
     shared_local_checkpoint,
 )
 from ..registry import query
-from ..tables import load, scan_parallel
+from ..tables import fingerprint, load, scan_parallel
 from .curation import _MD5_UNIFORM_SQL
 
 
@@ -101,36 +101,6 @@ def _materialize(df: DataFrame, name: str, sf_dir: str | None = None) -> DataFra
     return pooled_local_checkpoint(df)
 
 
-def _corpus_fingerprint(sf_dir: str, table: str = "documents"):
-    """Cheap stat-based fingerprint of a table under sf_dir (default:
-    documents — the corpus every dedup op reads; streaming's chunk caches
-    pass their own table), folded into shared-cache keys so a fixture
-    REWRITTEN at the same path (tests do this; production corpus snapshots
-    are immutable) misses the cache instead of serving stale blocks.
-
-    Known limit (accepted, documented): the fingerprint is size+mtime_ns —
-    a rewrite that preserves BOTH (e.g. an archiver restoring mtimes over
-    same-length bytes) is indistinguishable and would serve stale blocks.
-    Hashing file contents would close that hole at the cost of re-reading
-    the corpus on every op entry, which defeats the cache's purpose; a
-    pipeline that mutates corpora in place should version paths instead
-    (the immutable-snapshot convention every lakehouse format assumes).
-    tests/test_ckpt_guard.py pins the size+mtime case."""
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(p):
-            sts = [os.stat(os.path.join(p, e)) for e in sorted(os.listdir(p))]
-            return (
-                len(sts),
-                sum(s.st_size for s in sts),
-                max((s.st_mtime_ns for s in sts), default=0),
-            )
-        st = os.stat(p)
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return None
-
-
 # durable-mode twin of ckpt._SHARED: key -> parquet-backed DataFrame.
 # Files are durable, so entries carry no lease and never invalidate
 # dependents; the dict only dedupes the write. Keys include the
@@ -150,7 +120,7 @@ def _shared_materialize(spark, sf_dir: str, name: str, builder) -> DataFrame:
     private pool key. Local mode delegates to the LRU-bounded
     ``ckpt.shared_local_checkpoint``; durable mode snapshots to one
     namespaced parquet path per key and reuses the read-back handle."""
-    fp = _corpus_fingerprint(sf_dir)
+    fp = fingerprint(sf_dir, "documents")
     if fp is None:
         # Missing/unreadable corpus: UNCACHEABLE, not a cache key. Folding
         # None into the key would collapse every error state onto one

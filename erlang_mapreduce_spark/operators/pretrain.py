@@ -16,7 +16,8 @@ stage (or in the export round-trip) moves a downstream count. The
 components are the same machinery the standalone ops use
 (`pipeline_corpus_clean`'s gate/scrub, `text_gopher_rules`' rule
 battery, `quality_classifier_score`'s hashed-ngram linear model (in its
-narrow Arrow-vectorized inference shape, `qc_logit_arrow`),
+narrow Arrow-vectorized inference shape: `qc_narrow_scores` staged, then
+`qc_logit_expr`),
 `dedup_lines_global`'s keep-first line dedup, `dedup_exact`'s keep-first,
 `dedup_minhash`'s banded LSH + exact-Jaccard verify,
 `dedup_substring_scrub`'s gaps-and-islands span removal,

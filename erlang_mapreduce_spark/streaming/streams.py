@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from ..tables import load
+from ..tables import fingerprint, load
 
 CHUNK_ROOT = "/tmp/spark_graft_stream_chunks"
 
@@ -63,7 +63,7 @@ def _chunk_ns(sf_dir: str, table: str) -> str:
     """Namespace (two nested path components) for the on-disk chunk cache:
     ``<leaf>-<md5(abspath, table)> / <md5(stat-fingerprint)>`` — the same
     discriminator scheme as ``dedup._shared_materialize``, with the
-    fingerprint DELEGATED to ``dedup._corpus_fingerprint`` so a future
+    fingerprint DELEGATED to ``tables.fingerprint`` so a future
     tightening of the fingerprint (its known size+mtime limit) reaches
     this cache too. Keying by basename alone aliased two corpora sharing
     a leaf name, and a corpus regenerated in place kept serving the STALE
@@ -90,9 +90,7 @@ def _chunk_ns(sf_dir: str, table: str) -> str:
     from when it was first seen superseded, letting an in-flight replay
     drain, while in-place rewrites still reclaim space on the next entry
     after the window."""
-    from ..operators.dedup import _corpus_fingerprint
-
-    fp = _corpus_fingerprint(sf_dir, table)
+    fp = fingerprint(sf_dir, table)
     gdisc = hashlib.md5(
         repr((os.path.abspath(sf_dir), table)).encode()
     ).hexdigest()[:12]
@@ -202,63 +200,65 @@ def _materialize_chunks(sf_dir: str, mode: str) -> str:
     return d
 
 
-# State-store partition count pinned for every replay query in this
-# module. A stateful streaming query's shuffle partition count is captured
-# into its checkpoint at the first micro-batch and becomes the state-store
-# layout: one store per partition PER STATEFUL OPERATOR, each snapshotted
-# to the checkpoint every batch. It must therefore be sized to expected
-# STATE volume (keys held), not to the session's batch shuffle width — the
-# replay corpora hold at most a few thousand distinct keys, and inheriting
-# the 32-wide batch default cost 32 near-empty store checkpoints per
-# operator per micro-batch (measured: stream_stream_join 20.2 s → 4.3 s at
-# sf0.1 from this setting alone; it runs TWO stateful sides × N batches).
-# Production makes the same explicit first-run choice, sized to
-# keys/executors; the semantics are partition-count-independent (every op
-# here is hash-checked against its oracle at any width).
-STREAM_STATE_PARTITIONS = 8
-
-
+# The shuffle width of a stateful streaming query is captured into its
+# checkpoint at the first micro-batch and becomes the state-store layout:
+# one store per partition per stateful operator, each committed every
+# batch. A replay therefore runs at min(session width, defaultParallelism),
+# and in local mode at most os.cpu_count() (local[N] counts threads, not
+# cores): each micro-batch commits its stores in one task wave, and the
+# layout still grows with the cluster. Results do not depend on the width
+# (every op here is oracle-checked at any width).
 @contextlib.contextmanager
 def _state_sized_shuffle(spark: SparkSession):
-    """Pin spark.sql.shuffle.partitions to STREAM_STATE_PARTITIONS for the
-    duration of a replay (set before .start(), held through
-    awaitTermination — micro-batches plan while the query drains), then
-    restore the session value."""
+    """Pin spark.sql.shuffle.partitions to one task wave for the duration
+    of a replay (set before .start(), held through awaitTermination —
+    micro-batches plan while the query drains), then restore the caller's
+    value, also when the query raises."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
+    sc = spark.sparkContext
+    width = min(int(prev), sc.defaultParallelism)
+    if sc.master.startswith("local"):
+        width = min(width, os.cpu_count() or width)
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _run_stream(
-    spark: SparkSession, src_dir: str, transform, sink_name: str, output_mode: str
+def _replay(
+    spark: SparkSession, src_dir: str, schema: T.StructType = _EVENT_SCHEMA
 ) -> DataFrame:
-    """availableNow + one-file-per-trigger replay into a memory sink."""
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
+    """One-file-per-trigger streaming read of a replay chunk dir."""
+    return (
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
+
+
+def _run_stream(
+    spark: SparkSession, stream: DataFrame, sink_name: str, output_mode: str
+) -> DataFrame:
+    """Drain a built streaming DataFrame with availableNow into a memory
+    sink at the replay shuffle width, and return the sink table."""
     ckpt = f"/tmp/spark_graft_ckpt/{sink_name}-{time.time_ns()}"
-    with _state_sized_shuffle(spark):
-        q = (
-            transform(stream)
-            .writeStream.trigger(availableNow=True)
-            .format("memory")
-            .queryName(sink_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    _record_progress(q)
-    # the memory sink holds the results; the per-run state-store dir is
-    # dead weight once the query terminates — don't accumulate across runs
-    shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        with _state_sized_shuffle(spark):
+            q = (
+                stream.writeStream.trigger(availableNow=True)
+                .format("memory")
+                .queryName(sink_name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            q.awaitTermination()
+        _record_progress(q)
+    finally:
+        # the memory sink holds the results; the per-run state-store dir
+        # is dead weight once the query terminates, whether or not it failed
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(sink_name)
 
 
@@ -294,22 +294,18 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality is additionally pinned as a batch-twin test in
     tests/test_streaming.py."""
     d = _materialize_chunks(sf_dir, "late")
-
-    def agg(stream):
-        return (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "5 minutes").alias("w"))
-            .agg(F.count("*").alias("cnt"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "win_start"
-                ),
-                "cnt",
-            )
+    agg = (
+        _replay(spark, d)
+        .withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "5 minutes").alias("w"))
+        .agg(F.count("*").alias("cnt"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
+            "cnt",
         )
-
+    )
     sink = f"wm_late_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, agg, sink, "append")
+    return _run_stream(spark, agg, sink, "append")
 
 
 @query(
@@ -332,16 +328,14 @@ def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     unseen ts) — the streaming output is therefore exactly the source
     projection."""
     d = _materialize_chunks(sf_dir, "dup")
-
-    def dedup(stream):
-        return (
-            stream.withWatermark("ts", "2 hours")
-            .dropDuplicates(["event_id", "ts"])
-            .select("event_id", "user_id", "event_type")
-        )
-
+    dedup = (
+        _replay(spark, d)
+        .withWatermark("ts", "2 hours")
+        .dropDuplicates(["event_id", "ts"])
+        .select("event_id", "user_id", "event_type")
+    )
     sink = f"dedup_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, dedup, sink, "append")
+    return _run_stream(spark, dedup, sink, "append")
 
 
 @query(
@@ -426,17 +420,15 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    def transform(stream):
-        return stream.groupBy("user_id").applyInPandasWithState(
-            update,
-            outputStructType="user_id long, n_events long, sum_value double",
-            stateStructType="n long, micros long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
+    running = _replay(spark, d).groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType="user_id long, n_events long, sum_value double",
+        stateStructType="n long, micros long",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
     sink = f"custom_state_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, transform, sink, "update")
+    return _run_stream(spark, running, sink, "update")
 
 
 @query(
@@ -469,9 +461,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def side(event_type: str, prefix: str):
         return (
-            spark.readStream.schema(_EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
+            _replay(spark, d)
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -498,20 +488,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
     )
     sink = f"ssjoin_{abs(hash(sf_dir)) % 10**8}"
-    ckpt = f"/tmp/spark_graft_ckpt/{sink}-{time.time_ns()}"
-    with _state_sized_shuffle(spark):  # two stateful sides × N batches
-        q = (
-            joined.writeStream.trigger(availableNow=True)
-            .format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    _record_progress(q)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return _run_stream(spark, joined, sink, "append")
 
 
 @query(
@@ -549,11 +526,7 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{os.path.basename(os.path.normpath(sf_dir))}-{time.time_ns()}",
     )
     out, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    stream = _replay(spark, d)
     try:
         q = (
             stream.writeStream.trigger(availableNow=True)
@@ -692,11 +665,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         _upsert_merge_batch(spark, base, versions, batch_df, batch_id)
 
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    stream = _replay(spark, d)
     ckpt = os.path.join(base, "ckpt")
     try:
         with _state_sized_shuffle(spark):  # sizes the per-batch jobs too
@@ -828,11 +797,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta.write.mode("overwrite").parquet(v)
         versions[batch_id] = v
 
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    stream = _replay(spark, d)
     ckpt = os.path.join(base, "ckpt")
     try:
         with _state_sized_shuffle(spark):  # sizes the per-batch jobs too
@@ -1046,11 +1011,7 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands.unpersist()
         versions[batch_id] = sv
 
-    stream = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    stream = _replay(spark, d, _DOC_SCHEMA)
     ckpt = os.path.join(base, "ckpt")
     try:
         with _state_sized_shuffle(spark):  # sizes the per-batch jobs too
@@ -1173,11 +1134,7 @@ def stream_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta.write.mode("overwrite").parquet(v)
         versions[batch_id] = v
 
-    stream = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    stream = _replay(spark, d, _DOC_SCHEMA)
     ckpt = os.path.join(base, "ckpt")
     try:
         with _state_sized_shuffle(spark):  # sizes the per-batch jobs too
@@ -1295,8 +1252,6 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism is the partitions() fan-out; python-worker marshalling is
     the slow path, so a bulk connector emits Arrow batches or lands
     parquet instead (scan_python_datasource's note)."""
-    import time as _t
-
     _register_synth_stream(spark)
     agg = (
         spark.readStream.format("synthstream")
@@ -1310,17 +1265,4 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"pystream_{abs(hash(sf_dir)) % 10**8}"
-    ckpt = f"/tmp/spark_graft_ckpt/{sink}-{_t.time_ns()}"
-    with _state_sized_shuffle(spark):  # stateful complete-mode aggregate
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    _record_progress(q)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return _run_stream(spark, agg, sink, "complete")

@@ -9,11 +9,13 @@ reference's whole-file read + split at mapreduce.erl:41-43).
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -85,6 +87,52 @@ def scan_parallel(df: DataFrame) -> DataFrame:
     return df
 
 
+def fingerprint(sf_dir: str, table: str):
+    """Stat-based fingerprint of ``<sf_dir>/<table>.parquet`` (a file, or a
+    directory of part files), or None when it cannot be stat'ed. Every
+    cache derived from a table keys on it, so a table REWRITTEN at the same
+    path misses the cache instead of serving stale state.
+
+    Known limit: the fingerprint is size + mtime_ns, so a rewrite that
+    preserves BOTH is indistinguishable. Hashing contents would re-read the
+    table on every lookup, which defeats the caches; a pipeline that
+    mutates tables in place should version paths instead.
+    tests/test_ckpt_guard.py pins the size+mtime case."""
+    p = os.path.join(sf_dir, f"{table}.parquet")
+    try:
+        if os.path.isdir(p):
+            sts = [os.stat(os.path.join(p, e)) for e in sorted(os.listdir(p))]
+            return (
+                len(sts),
+                sum(s.st_size for s in sts),
+                max((s.st_mtime_ns for s in sts), default=0),
+            )
+        st = os.stat(p)
+        return (st.st_size, st.st_mtime_ns)
+    except OSError:
+        return None
+
+
+@functools.lru_cache(maxsize=256)
+def _inferred_schema(spark: SparkSession, path: str, fp) -> StructType:
+    """The RAW schema parquet inference gives ``path``, once per (session,
+    path, fingerprint): inference is a Spark job (a parallel footer read),
+    and a known schema handed to spark.read.schema() starts none. One
+    entry per table version; the parquet inference confs are taken as
+    fixed for the life of a session."""
+    return spark.read.parquet(path).schema
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    fp = fingerprint(sf_dir, name)
+    if fp is None:
+        # unreadable or non-local: uncacheable, let the reader raise or infer
+        return spark.read.parquet(path)
+    schema = _inferred_schema(spark, os.path.abspath(path), fp)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}")
@@ -102,7 +150,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, sf_dir, name)
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS). How Spark surfaces it is
         # version-dependent: 4.1+ reads it natively as TIMESTAMP_NTZ

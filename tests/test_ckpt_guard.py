@@ -103,7 +103,7 @@ def test_shared_cache_fingerprint_miss_on_rewrite(spark, sf_dir, tmp_path):
     is inserted) instead of serving the old corpus's blocks. The
     fingerprint is stat-based (size + mtime_ns): a rewrite that preserves
     BOTH size and mtime_ns would defeat it — that caveat is documented on
-    `_corpus_fingerprint`; production corpus snapshots are immutable."""
+    `tables.fingerprint`; production corpus snapshots are immutable."""
     from erlang_mapreduce_spark.operators.dedup import _shared_members
 
     corpus = tmp_path / "corpus"

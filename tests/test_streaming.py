@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
+from erlang_mapreduce_spark.streaming import streams
 from erlang_mapreduce_spark.streaming.streams import (
     stream_stateful_dedup,
     stream_watermark_late,
@@ -231,3 +235,46 @@ def test_stream_minhash_state_versions_are_deltas(spark, sf_dir, monkeypatch):
         if full_index[(r.band_id, r.bkey)] < r.doc_id
     }
     assert flagged == expect
+
+
+_WIDTH = "spark.sql.shuffle.partitions"
+
+
+@pytest.mark.parametrize("session_width", [2, 64])
+def test_replay_runs_one_task_wave_wide(spark, sf_dir, session_width):
+    """A replay's state layout (its shuffle width) is min(session width,
+    defaultParallelism, cores) on a local master, read from the query's
+    own progress, and the caller's width is back in place afterwards."""
+    old = spark.conf.get(_WIDTH)
+    spark.conf.set(_WIDTH, str(session_width))
+    try:
+        streams.LAST_PROGRESS.pop("__last__", None)
+        stream_stateful_dedup(spark, sf_dir).collect()
+        assert spark.conf.get(_WIDTH) == str(session_width)
+    finally:
+        spark.conf.set(_WIDTH, old)
+    widths = {
+        s["numShufflePartitions"]
+        for p in streams.LAST_PROGRESS["__last__"]
+        for s in p["stateOperators"]
+    }
+    assert spark.sparkContext.master.startswith("local")
+    expected = min(
+        session_width, spark.sparkContext.defaultParallelism, os.cpu_count()
+    )
+    assert widths == {expected}
+
+
+def test_replay_width_restored_when_query_raises(spark, sf_dir):
+    old = spark.conf.get(_WIDTH)
+    spark.conf.set(_WIDTH, "5")
+    try:
+        d = streams._materialize_chunks(sf_dir, "plain")
+        failing = streams._replay(spark, d).select(
+            F.raise_error(F.lit("replay width probe"))
+        )
+        with pytest.raises(Exception, match="replay width probe"):
+            streams._run_stream(spark, failing, "width_probe_fail", "append")
+        assert spark.conf.get(_WIDTH) == "5"
+    finally:
+        spark.conf.set(_WIDTH, old)

@@ -12,7 +12,8 @@ Per-batch accounting (durationMs fields):
   exec_wall   = addBatch                          (source read + plan exec
                                                    + state checkpoint)
   state_task  = sum(stateOperators[].commitTimeMs) — TASK-parallel ms
-                across state partitions (8 stores x operators), reported
+                across state partitions (one store per replay shuffle
+                partition x stateful operators), reported
                 separately because it is cumulative CPU, not wall: it
                 shows how much of exec_wall is state-checkpoint work
 
@@ -105,8 +106,9 @@ def main() -> None:
         "`fixed` = driver-serial trigger planning + offset-log + WAL",
         "commit (per-batch constants); `exec` = addBatch wall (source",
         "read + plan execution + state checkpoint); `state task-ms` =",
-        "cumulative state-store commit time across the 8 store partitions",
-        "per stateful operator (task-parallel CPU inside exec, NOT wall —",
+        "cumulative state-store commit time across the state partitions",
+        "(one store per core, at most the shuffle width, per stateful",
+        "operator; task-parallel CPU inside exec, NOT wall —",
         "it shows how much of exec is state checkpointing when the data",
         "share is tiny). Fixed share at sf0.1 is the 4-5-chunk replay",
         "cadence's per-batch constant: it amortizes as batches carry more",
@@ -132,8 +134,8 @@ def main() -> None:
         "(this table); the remainder of an isolated cell is fresh-session",
         "JVM/codegen + chunk materialization OUTSIDE the streaming query —",
         "session constants, not per-batch or per-row cost. Within the",
-        "query, fixed-per-batch (driver planning/WAL ~100-200 ms + ~170 ms",
-        "per state-store commit x 8 stores x operators) dominates exec",
+        "query, fixed-per-batch (driver planning/WAL ~100-200 ms + one",
+        "task wave of state-store commits per operator) dominates exec",
         "because sf0.1 batches are tiny; stream_minhash_dedup is the",
         "exception — its exec is real banding/join/state-version work",
         "(data-proportional, the foreachBatch pipeline), with fixed <4%.",
