@@ -1,4 +1,5 @@
-"""Order-independent numeric aggregation helpers.
+"""Cross-engine-exact devices: order-independent numeric aggregation and
+the md5-prefix integer hash.
 
 IEEE-754 addition is not associative: Spark (partition-parallel partial
 aggregation, the generalization of the reference's per-mapper ETS combine at
@@ -9,6 +10,12 @@ identically on both engines because a double can never sit exactly on a
 10^-6 half-way boundary (those are non-dyadic rationals).
 
 Use ``dsum``/``dsum_sql`` for every double-typed SUM/AVG the oracle checks.
+
+Spark's built-in hashes (xxhash64, murmur3) have no bit-identical DuckDB
+counterpart, so every hash the oracle must reproduce is a hex prefix of
+md5, which both engines compute identically: ``md5_prefix_int`` is the
+Spark side, DuckDB spells it
+``('0x' || substr(md5(CAST(col AS VARCHAR)), 1, n_hex))::BIGINT``.
 """
 
 from __future__ import annotations
@@ -40,4 +47,14 @@ def davg_sql(expr: str) -> str:
     """DuckDB equivalent of ``davg``."""
     return (
         f"CAST(SUM(CAST(({expr}) AS DECIMAL(29,6))) AS DOUBLE) / COUNT({expr})"
+    )
+
+
+def md5_prefix_int(col: Column | str, n_hex: int) -> Column:
+    """The first ``n_hex`` hex digits of md5(cast(col as string)) as a
+    BIGINT; ``n_hex <= 15`` keeps it a non-negative long. NULL in, NULL
+    out."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.conv(F.substring(F.md5(c.cast("string")), 1, n_hex), 16, 10).cast(
+        "long"
     )

@@ -26,6 +26,7 @@ back to per-doc rows.
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -34,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..exact import md5_prefix_int
 from ..registry import query
 from ..tables import load, scan_parallel
 
@@ -51,11 +53,7 @@ _MD5_UNIFORM_SQL = (
 
 
 def _md5_uniform(col: Column) -> Column:
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-        .cast("double")
-        / F.lit(4294967296.0)
-    )
+    return md5_prefix_int(col, 8).cast("double") / F.lit(4294967296.0)
 
 
 def _word_ngrams(ws: Column, n: int) -> Column:
@@ -73,6 +71,14 @@ def _word_ngrams(ws: Column, n: int) -> Column:
             lambda i: F.array_join(F.slice(ws, i, n), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def _feature_words(text: Column) -> Column:
+    """The hashed-feature tokenizer shared by DSIR and the classifier:
+    lower, split on ``\\s+``, drop empty words — the ``toks`` CTE of
+    `_hashed_feats_ctes` on the DuckDB side."""
+    return F.filter(F.split(F.lower(text), r"\s+"), lambda w: F.length(w) > 0)
+
 
 _TOKS_CTE = """
 WITH toks AS (
@@ -1087,14 +1093,18 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("c"),
     ).select("doc_id", "c.chunk_idx", "c.chunk_text", "c.n_tokens")
-    return c.withColumn(
-        "chunk_hash",
-        F.conv(F.substring(F.md5("chunk_text"), 1, 15), 16, 10).cast("long"),
-    )
+    return c.withColumn("chunk_hash", md5_prefix_int("chunk_text", 15))
 
 
 _SPLIT_TRAIN_LT = 230
 _SPLIT_VAL_LT = 243
+
+
+def _split_bucket() -> Column:
+    """The source-keyed split bucket in [0, 256): the first md5 byte of the
+    source, NULL keyed as '' (train below _SPLIT_TRAIN_LT, val below
+    _SPLIT_VAL_LT, test above)."""
+    return md5_prefix_int(F.coalesce(F.col("source"), F.lit("")), 2)
 
 
 @query(
@@ -1126,11 +1136,7 @@ def sample_split_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL sources key as md5('') — deterministic on both engines rather
     than a NULL-propagating no-split."""
     d = load(spark, sf_dir, "documents")
-    b = F.conv(
-        F.substring(F.md5(F.coalesce(F.col("source"), F.lit(""))), 1, 2),
-        16,
-        10,
-    ).cast("long")
+    b = _split_bucket()
     return d.select(
         "doc_id",
         "source",
@@ -1274,11 +1280,10 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..exact import _DEC
 
     d = load(spark, sf_dir, "documents")
-    ws = F.split(F.lower("text"), r"\s+")
     docs = scan_parallel(d).select(
         "doc_id",
         (F.col("source") == DSIR_TARGET_SRC).alias("is_t"),
-        F.filter(ws, lambda w: F.length(w) > 0).alias("ws"),
+        _feature_words(F.col("text")).alias("ws"),
     )
     feats = docs.select(
         "doc_id",
@@ -1291,10 +1296,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats.select(
             "doc_id",
             "is_t",
-            F.pmod(
-                F.conv(F.substring(F.md5("f"), 1, 8), 16, 10).cast("long"),
-                F.lit(DSIR_NB),
-            ).alias("bucket"),
+            F.pmod(md5_prefix_int("f", 8), F.lit(DSIR_NB)).alias("bucket"),
         )
         .groupBy("doc_id", "is_t", "bucket")
         .agg(F.count("*").alias("tf"))
@@ -1328,9 +1330,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic identical clamp on both engines), and the outer log is
     # −ln(g1) = ln(10^6) − ln(m) — integer arguments again. Every
     # intermediate is DECIMAL, so the key is bit-identical cross-engine.
-    a32 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    a32 = md5_prefix_int("doc_id", 8)
     g1 = F.round(F.log(F.lit(8589934592.0)), 6).cast(dec6) - F.round(
         F.log((2 * a32 + 1).cast("double")), 6
     ).cast(dec6)
@@ -1423,89 +1423,27 @@ def _qc_score_ctes(p: str = "") -> str:
 )"""
 
 
-def qc_weights() -> list[int]:
-    """The fixed seeded classifier weights as Python ints — the SAME
-    md5("qcw-"||bucket) derivation as the engine-side ``w`` CTE / wtab
-    (both operands nonnegative, so Python %, SQL %, and Spark ``%`` agree),
-    so the constant-folded narrow scorer below is bit-identical to the
-    broadcast-join form."""
-    import hashlib
-
-    return [
-        int(hashlib.md5(f"qcw-{b}".encode()).hexdigest()[:8], 16)
-        % (2 * QC_W_SCALE + 1)
-        - QC_W_SCALE
-        for b in range(QC_NB)
-    ]
-
-
-def qc_logit_narrow(text_col: Column) -> Column:
-    """Per-row classifier logit as a PURE-JVM NARROW fold — zero shuffle,
-    zero join: the same hashed unigram+bigram features and seeded weights
-    as quality_classifier_score, with the QC_NB-entry weight table
-    CONSTANT-FOLDED into an element_at lookup inside an `F.aggregate`
-    fold. num/tf/weights are exact integers, the logit is the module's
-    round-6 single divide, so every scorer shape agrees bit-for-bit.
-
-    Since r17 this is the REFERENCE implementation, not the hot path:
-    Spark evaluates array higher-order functions as CodegenFallback
-    (interpreted, per-element md5+conv+element_at with no common-
-    subexpression elimination — the r16 VERDICT's #1 named cost), and the
-    Arrow-vectorized `qc_logit_arrow` below measured 2.3× faster on the
-    same narrow projection (interleaved A/B at sf0.1: HOF medians
-    [1.216, 1.263, 1.061, 0.956, 1.013] vs Arrow [0.562, 0.458, 0.462,
-    0.384, 0.438]) with bit-identical output (pinned by
-    tests/test_operators.py::test_qc_arrow_equals_jvm_fold). Query paths
-    use `qc_logit_arrow`; this fold stays as the cross-checkable JVM twin
-    the pin test compares against."""
-    ws = F.filter(
-        F.split(F.lower(text_col), r"\s+"), lambda w: F.length(w) > 0
-    )
-    feats = F.concat(ws, _word_ngrams(ws, 2))
-    warr = F.array(*[F.lit(w) for w in qc_weights()])
-    num = F.aggregate(
-        feats,
-        F.lit(0).cast("long"),
-        lambda acc, f: acc
-        + F.element_at(
-            warr,
-            (
-                F.pmod(
-                    F.conv(F.substring(F.md5(f), 1, 8), 16, 10).cast("long"),
-                    F.lit(QC_NB),
-                )
-                + 1
-            ).cast("int"),
-        ).cast("long"),
-    )
-    return F.round(
-        F.try_divide(
-            num.cast("double"),
-            (F.size(feats).cast("long") * QC_W_SCALE).cast("double"),
-        ),
-        6,
-    )
-
-
-# Arrow-vectorized classifier scorer (r17, guide §4.2 + r16 VERDICT task 3).
-# The JVM fold above is interpreted (HOFs are CodegenFallback) and its
-# feats subexpression is re-evaluated per reference inside the interpreted
-# projection; this scorer ships ONLY the JVM-tokenized word array across
-# the Arrow boundary (lower+split+filter stay in Spark so no Python
-# unicode-semantics drift can change a hash) and computes per-doc
-# (num, n_feats) in one pass per batch with a module-level word/bigram →
-# weight memo (Zipf makes the md5 cost amortize to dict lookups; the
-# module is importable so reused workers keep the memo across tasks,
-# guide §4.5). The logit divide/round stays a Spark expression, so
-# rounding semantics are Spark's own — bit-identical to the fold (pinned
-# by tests/test_operators.py::test_qc_arrow_equals_jvm_fold).
+# Arrow-vectorized classifier scorer: only the JVM-tokenized word array
+# crosses the Arrow boundary (tokenizing stays in Spark, so no Python
+# unicode-semantics drift can change a hash), and each batch computes
+# per-doc (num, n_feats) in one pass with a word/bigram → weight memo
+# (Zipf amortizes the md5 cost to dict lookups). The UDF is pickled by
+# value, so each task starts from its own copy of the memo. The logit
+# divide/round stays a Spark expression, so its rounding is Spark's own.
 _QC_SCORES_STRUCT = T.StructType(
     [
         T.StructField("num", T.LongType()),
         T.StructField("n_feats", T.LongType()),
     ]
 )
-_QC_W_TABLE = qc_weights()
+# the fixed seeded weights: the SAME md5("qcw-"||bucket) derivation as the
+# oracle's ``w`` CTE (both operands nonnegative, so Python % and SQL % agree)
+_QC_W_TABLE = [
+    int(hashlib.md5(f"qcw-{b}".encode()).hexdigest()[:8], 16)
+    % (2 * QC_W_SCALE + 1)
+    - QC_W_SCALE
+    for b in range(QC_NB)
+]
 _QC_CONTRIB_MEMO: dict[str, int] = {}
 # Memo bound in bytes: at most _QC_MEMO_CAP entries, each keyed by a
 # feature of at most _QC_MEMO_MAX_LEN chars (about 130 B with the dict
@@ -1517,8 +1455,6 @@ _QC_MEMO_MAX_LEN = 32
 
 @F.pandas_udf(_QC_SCORES_STRUCT)
 def _qc_scores_arrow(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    import hashlib
-
     W = _QC_W_TABLE
     memo = _QC_CONTRIB_MEMO
 
@@ -1558,63 +1494,36 @@ def _qc_scores_arrow(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         )
 
 
-# Non-deterministic marking (guide §4.4): consumers filter on columns
-# derived from this UDF (keep >= 0, n_feats >= 1), and the optimizer's
-# filter pushdown otherwise duplicates the evaluation — one ArrowEvalPython
-# below the pushed filter plus one in the projection, doubling the
-# scorer's cost per surviving row (observed: 2 ArrowEvalPython nodes in
-# quality_classifier_score's plan before this line; the plan pin asserts
-# exactly 1). The function is semantically deterministic — the marker
-# only tells the optimizer not to clone/reorder it.
+# Non-deterministic so the optimizer cannot push a consumer's filter on the
+# scores below the staged projection, which evaluates the scorer twice:
+# without it test_quality_classifier_narrow_zero_exchange sees 2
+# ArrowEvalPython nodes.
 _qc_scores_arrow = _qc_scores_arrow.asNondeterministic()
 
 
-def qc_narrow_scores(text_col: Column) -> Column:
-    """(num, n_feats) struct for the classifier over a text column — the
-    JVM-side tokenize (lower → \\s+ split → drop empties, exactly
-    `qc_logit_narrow`'s ws) feeding the Arrow scorer.
-
-    USAGE CONTRACT: stage this through its own projection (select/
-    withColumn alias) and derive the logit from the ALIASED struct's
-    fields with `qc_logit_expr` in a later expression. Because the UDF is
-    non-deterministic (see above), two direct field references on the
-    returned Column are two separate evaluations — staging makes the
-    plan carry exactly one ArrowEvalPython (the plan pins assert it)."""
-    ws = F.filter(
-        F.split(F.lower(text_col), r"\s+"), lambda w: F.length(w) > 0
+def with_qc_scores(df: DataFrame, text_col: str) -> DataFrame:
+    """``df`` plus the classifier's ``qc_n_feats`` (hashed unigram+bigram
+    feature count) and round-6 ``qc_logit`` over ``text_col`` — the one
+    classifier scorer. The Arrow scorer runs in its own projection, so
+    the plan carries exactly one ArrowEvalPython however often callers
+    reference the two columns. NULL text gives NULL for both; wordless
+    text gives qc_n_feats 0 and a NULL logit (the rows the oracle's
+    GROUP BY drops)."""
+    staged = df.withColumn(
+        "_qc", _qc_scores_arrow(_feature_words(F.col(text_col)))
     )
-    return _qc_scores_arrow(ws)
-
-
-def qc_logit_expr(s: Column) -> Column:
-    """Round-6 classifier logit from a STAGED (num, n_feats) struct
-    column — value-identical to `qc_logit_narrow` over the same text
-    (NULL text → NULL scores → NULL logit; wordless → 0/0 try_divide →
-    NULL; pinned by tests/test_operators.py::test_qc_arrow_equals_jvm_fold)."""
-    return F.round(
-        F.try_divide(
-            s["num"].cast("double"),
-            (s["n_feats"] * QC_W_SCALE).cast("double"),
-        ),
-        6,
-    )
-
-
-def qc_logit_arrow(text_col: Column) -> Column:
-    """Arrow-scored classifier logit over a text column — the one-call
-    composition `qc_logit_expr(qc_narrow_scores(text_col))`, value-
-    identical to `qc_logit_narrow` (pinned by
-    tests/test_operators.py::test_qc_arrow_equals_jvm_fold).
-
-    NOTE: because the logit expression references the struct's two
-    fields and the scorer UDF is non-deterministic (no CSE), using this
-    directly can evaluate the scorer twice in one projection. Hot paths
-    that keep the row (filters, flag columns) should stage
-    `qc_narrow_scores` through its own projection and apply
-    `qc_logit_expr` to the ALIASED struct — see the usage contract on
-    qc_narrow_scores. This composition exists for the equality pin test
-    and one-shot expressions where a second evaluation is acceptable."""
-    return qc_logit_expr(qc_narrow_scores(text_col))
+    return staged.withColumns(
+        {
+            "qc_n_feats": F.col("_qc.n_feats"),
+            "qc_logit": F.round(
+                F.try_divide(
+                    F.col("_qc.num").cast("double"),
+                    (F.col("_qc.n_feats") * QC_W_SCALE).cast("double"),
+                ),
+                6,
+            ),
+        }
+    ).drop("_qc")
 
 
 @query(
@@ -1641,47 +1550,26 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight table, single corpus scan) is exactly what transfers when a
     real trained weight vector is dropped in.
 
-    Spark-first shape, 100 TB story: ONE corpus scan carrying the
-    Arrow-vectorized narrow scorer (`qc_narrow_scores` — JVM tokenize,
-    batched Python (num, n_feats), memoized hashed-feature weights) into
-    a narrow projection — ZERO exchanges, zero joins, no window, no sort,
-    no driver collect (pinned in tests/test_plans.py). r17 rewrite
-    (guide §4.2, r16 VERDICT task 3): the previous
-    explode → 2 hash aggs → broadcast-model-join plan measured flat vs
-    an exploded element_at variant (both ~1.06 s at sf0.1) while the
-    Arrow narrow form runs the same scoring at 0.46 s median AND drops
-    both keyed exchanges — at 100 TB the score attaches to each row
-    without shuffling the corpus at all, the same posture the capstone
-    and domain filter already used. Docs with zero features (NULL/
-    wordless texts) produce no output row, exactly like the explode
-    form (and the oracle's qtf GROUP BY). Cross-engine exactness: tf
-    (via per-feature contributions) and weights are
-    integers, sums are exact, the logit is ONE IEEE divide of exact
+    Spark-first shape, 100 TB story: ONE corpus scan carrying the staged
+    Arrow scorer (`with_qc_scores` — JVM tokenize, batched Python
+    (num, n_feats), memoized hashed-feature weights) into a narrow
+    projection — ZERO exchanges, zero joins, no window, no sort, no
+    driver collect (pinned in tests/test_plans.py): the score attaches to
+    each row without shuffling the corpus. Docs with zero features (NULL/
+    wordless texts) produce no output row, like the oracle's qtf GROUP
+    BY. Cross-engine exactness: tf (via per-feature contributions) and
+    weights are integers, sums are exact, the logit is ONE IEEE divide of exact
     integers rounded to 6 (the module's established convention), and keep
     compares the rounded value — so the decision is bit-identical on any
     engine, run, or partitioning. Reference scope: beyond mapreduce.erl
     (no reference counterpart); included per the LLM-pipeline brief."""
     d = load(spark, sf_dir, "documents")
-    scored = (
-        scan_parallel(d)
-        .select("doc_id", qc_narrow_scores(F.col("text")).alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.num").alias("num"),
-            F.col("s.n_feats").alias("n_feats"),
-        )
-        .filter(F.col("n_feats") >= 1)
-    )
-    logit = F.round(
-        F.col("num").cast("double")
-        / (F.col("n_feats") * QC_W_SCALE).cast("double"),
-        6,
-    )
-    return scored.select(
+    scored = with_qc_scores(scan_parallel(d), "text")
+    return scored.filter(F.col("qc_n_feats") >= 1).select(
         "doc_id",
-        "n_feats",
-        logit.alias("logit"),
-        (logit >= 0.0).alias("keep"),
+        F.col("qc_n_feats").alias("n_feats"),
+        F.col("qc_logit").alias("logit"),
+        (F.col("qc_logit") >= 0.0).alias("keep"),
     )
 
 
@@ -1950,10 +1838,7 @@ def curate_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(
             F.lit("https://"), chost, F.parse_url(F.col("url"), F.lit("PATH"))
         ).alias("canonical_url"),
-        (
-            F.conv(F.substring(F.md5(chost), 1, 2), 16, 10).cast("long")
-            < URL_BLOCK_LT
-        ).alias("blocked"),
+        (md5_prefix_int(chost, 2) < URL_BLOCK_LT).alias("blocked"),
     )
     w = Window.partitionBy("canonical_url")
     first_keep = F.min(
@@ -2037,10 +1922,8 @@ def curate_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes three proven devices end-to-end: curate_url_dedup's
     deterministic URL synthesis + canonicalization (same host derivation),
     text_gopher_rules' rule battery (shared `_gopher_*` helpers), and
-    quality_classifier_score's model in its narrow Arrow-vectorized
-    inference shape (`qc_narrow_scores` staged in its own projection, then
-    `qc_logit_expr` — value-identical to the JVM fold `qc_logit_narrow`,
-    pinned by test).
+    quality_classifier_score's model through the one staged Arrow scorer
+    (`with_qc_scores`: one ArrowEvalPython, pinned in tests/test_plans.py).
 
     Spark-first shape, 100 TB story: ONE corpus scan carrying THREE
     narrow per-row signals (host parse, rule keep, classifier logit —
@@ -2069,17 +1952,12 @@ def curate_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     chost = F.regexp_replace(F.lower(host_raw), r"^www\.", "")
     ws, ls, n_sym = _gopher_arrays(F.col("text"))
-    per_doc = scan_parallel(d).select(
+    per_doc = with_qc_scores(scan_parallel(d), "text").select(
         chost.alias("host"),
         ws.alias("_ws"),
         ls.alias("_ls"),
         n_sym.alias("_sym"),
-        # r17: Arrow-vectorized scorer (identical values to the JVM fold —
-        # see qc_logit_narrow's docstring and the equality pin test); the
-        # plan stays narrow/zero-join, the scoring is 2.3× faster. Staged
-        # as a struct per qc_narrow_scores' usage contract (one
-        # ArrowEvalPython, pinned).
-        qc_narrow_scores(F.col("text")).alias("_s"),
+        "qc_logit",
     )
     rule_keep = _gopher_keep(
         _gopher_metrics(F.col("_ws"), F.col("_ls"), F.col("_sym"))
@@ -2087,9 +1965,7 @@ def curate_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = per_doc.select(
         "host",
         F.when(rule_keep, 1).otherwise(0).alias("rk"),
-        F.when(qc_logit_expr(F.col("_s")) >= 0.0, 1)
-        .otherwise(0)
-        .alias("ck"),
+        F.when(F.col("qc_logit") >= 0.0, 1).otherwise(0).alias("ck"),
     )
     agg = flags.groupBy("host").agg(
         F.count("*").alias("n_docs"),

@@ -39,6 +39,7 @@ from ..ckpt import (
     release_transient_storage,
     shared_local_checkpoint,
 )
+from ..exact import md5_prefix_int
 from ..registry import query
 from ..tables import fingerprint, load, scan_parallel
 from .curation import _MD5_UNIFORM_SQL
@@ -790,12 +791,7 @@ def simhash(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"),
     ).filter(F.length("tok") > 0)
-    h = toks.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
+    h = toks.select("doc_id", md5_prefix_int("tok", 15).alias("h"))
     votes = h.groupBy("doc_id").agg(
         *[
             F.sum(

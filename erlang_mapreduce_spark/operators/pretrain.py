@@ -15,9 +15,8 @@ the hash check proves the operators COMPOSE exactly: any drift in any
 stage (or in the export round-trip) moves a downstream count. The
 components are the same machinery the standalone ops use
 (`pipeline_corpus_clean`'s gate/scrub, `text_gopher_rules`' rule
-battery, `quality_classifier_score`'s hashed-ngram linear model (in its
-narrow Arrow-vectorized inference shape: `qc_narrow_scores` staged, then
-`qc_logit_expr`),
+battery, `quality_classifier_score`'s hashed-ngram linear model (through
+the one staged Arrow scorer `with_qc_scores`),
 `dedup_lines_global`'s keep-first line dedup, `dedup_exact`'s keep-first,
 `dedup_minhash`'s banded LSH + exact-Jaccard verify,
 `dedup_substring_scrub`'s gaps-and-islands span removal,
@@ -91,8 +90,8 @@ from .curation import (
     _packed_first_key,
     _qc_score_ctes,
     _SPLIT_TRAIN_LT,
-    qc_logit_expr,
-    qc_narrow_scores,
+    _split_bucket,
+    with_qc_scores,
 )
 from .dedup import (
     JACCARD_T,
@@ -154,16 +153,15 @@ def gopher_filter(gated: DataFrame) -> DataFrame:
 
 def classifier_filter(g4: DataFrame) -> DataFrame:
     """Stage 5: model-based quality filter (quality_classifier_score's
-    hashed unigram+bigram linear model) in its INFERENCE shape — the
-    QC_NB-entry seeded weight table constant-folded into a per-row
-    Arrow-vectorized `qc_narrow_scores` scorer (curation.py; r17 —
-    value-identical to the r16 JVM fold, 2.3× faster, see the equality
-    pin test), so the stage adds ZERO exchanges and ZERO joins to the
-    pipeline; keep logit >= 0 (the standalone op's keep rule). The
-    struct is STAGED through its own projection per the scorer's usage
-    contract (one ArrowEvalPython, not two)."""
-    staged = g4.withColumn("_qs", qc_narrow_scores(F.col("scrubbed")))
-    return staged.filter(qc_logit_expr(F.col("_qs")) >= 0.0).drop("_qs")
+    hashed unigram+bigram linear model) through the one staged Arrow
+    scorer `with_qc_scores` — the QC_NB-entry seeded weight table is a
+    per-row lookup, so the stage adds ZERO exchanges, ZERO joins and one
+    ArrowEvalPython to the pipeline; keep logit >= 0 (the standalone op's
+    keep rule)."""
+    scored = with_qc_scores(g4, "scrubbed")
+    return scored.filter(F.col("qc_logit") >= 0.0).drop(
+        "qc_n_feats", "qc_logit"
+    )
 
 
 def quality_flags(gated: DataFrame) -> DataFrame:
@@ -179,16 +177,10 @@ def quality_flags(gated: DataFrame) -> DataFrame:
     the dominant repeated work in the capstone's ~28 s cell). Still
     ZERO exchanges and no joins — the same plan-budget class as the
     filters it fuses; the classifier verdict crosses the Arrow boundary
-    as ONE narrow batched projection (r17 — qc_narrow_scores staged per
-    its usage contract, logit derived from the aliased struct)."""
+    as ONE narrow batched projection (`with_qc_scores`)."""
     ws, ls, n_sym = _gopher_arrays(F.col("scrubbed"))
-    g = gated.withColumns(
-        {
-            "_gws": ws,
-            "_gls": ls,
-            "_gsym": n_sym,
-            "_qs": qc_narrow_scores(F.col("scrubbed")),
-        }
+    g = with_qc_scores(gated, "scrubbed").withColumns(
+        {"_gws": ws, "_gls": ls, "_gsym": n_sym}
     )
     keep = _gopher_keep(
         _gopher_metrics(F.col("_gws"), F.col("_gls"), F.col("_gsym"))
@@ -199,7 +191,7 @@ def quality_flags(gated: DataFrame) -> DataFrame:
         "source",
         "scrubbed",
         keep.alias("rule_keep"),
-        (qc_logit_expr(F.col("_qs")) >= 0.0).alias("cls_keep"),
+        (F.col("qc_logit") >= 0.0).alias("cls_keep"),
     )
 
 
@@ -989,12 +981,7 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     rows.append((13, "mix_temperature", m["c"] or 0, m["t"] or 0))
 
-    split_b = F.conv(
-        F.substring(F.md5(F.coalesce(F.col("source"), F.lit(""))), 1, 2),
-        16,
-        10,
-    ).cast("long")
-    tr = mkept.filter(split_b < _SPLIT_TRAIN_LT)
+    tr = mkept.filter(_split_bucket() < _SPLIT_TRAIN_LT)
     t = tr.agg(
         F.sum("n").cast("bigint").alias("c"),
         F.sum(F.col("n") * F.col("n_tokens")).cast("bigint").alias("t"),

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..exact import davg, davg_sql, dsum, dsum_sql
+from ..exact import davg, davg_sql, dsum, dsum_sql, md5_prefix_int
 from ..registry import query
 from ..tables import load
 
@@ -1119,9 +1119,7 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull())
     hashed = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_prefix_int("o_custkey", 15).alias("h"),
     )
     sk = hashed.mapInPandas(kmv_sketch_partition(KMV_K), "grp string, h long")
     arr = sk.groupBy("grp").agg(
@@ -1196,13 +1194,7 @@ def rollup_sketch_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.date_trunc("hour", "ts").alias("hr"),
             F.date_format("ts", "yyyy-MM-dd").alias("day"),
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h"),
+            md5_prefix_int("user_id", 15).alias("h"),
         )
         .repartition("event_type", "hr")
         .dropDuplicates(["event_type", "hr", "h"])

@@ -29,6 +29,7 @@ import pandas as pd  # module scope: pandas_udf type hints must resolve
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exact import md5_prefix_int
 from ..registry import query
 from ..tables import load, scan_parallel
 
@@ -336,11 +337,7 @@ _MICRO = 1_000_000
 def _spread_hash(col: Column) -> Column:
     """Deterministic cross-engine 1-in-4 spread: md5-derived 60-bit int
     (the `_doc_gram_sets_md5` trick — xxhash64 has no DuckDB twin) mod 4."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % 4
-    )
+    return md5_prefix_int(col, 15) % 4
 
 
 def _train_sample(e: DataFrame) -> DataFrame:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..exact import md5_prefix_int
 from ..registry import query
 from ..tables import fingerprint, load
 
@@ -757,16 +758,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     def batch_sketch(df: DataFrame) -> DataFrame:
         return (
             df.filter(F.col("user_id").isNotNull())
-            .select(
-                "event_type",
-                F.conv(
-                    F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-                    16,
-                    10,
-                )
-                .cast("long")
-                .alias("h"),
-            )
+            .select("event_type", md5_prefix_int("user_id", 15).alias("h"))
             .distinct()
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= KMV_K)

@@ -1104,38 +1104,59 @@ def test_dedup_lines_global_semantics(spark, tmp_path):
     assert out[5].clean_text == "" and out[5].n_removed == 0
 
 
-def test_qc_arrow_equals_jvm_fold(spark, sf_dir):
-    """r17: the Arrow-vectorized classifier scorer (`qc_logit_arrow`) is
-    VALUE-IDENTICAL to the pure-JVM HOF fold (`qc_logit_narrow`) on every
-    fixture document — including NULL texts (both NULL) and wordless
-    texts (both NULL via the 0/0 try_divide) — so the r17 hot-path swap
-    cannot drift from the reference implementation the oracles mirror.
-    Also pins the scorer's n_feats against the JVM feats size."""
-    from pyspark.sql import functions as F
-
+def test_with_qc_scores_matches_duckdb_oracle(spark, sf_dir):
+    """`with_qc_scores`, the one classifier scorer, agrees value-for-value
+    with the DuckDB reference chain (`_hashed_feats_ctes` +
+    `_qc_score_ctes` + `_QC_LOGIT_SQL`) on every fixture document plus
+    hostile texts: NULL, empty, whitespace-only, padded, one-word and
+    non-ASCII. Texts without features, which the oracle's GROUP BY drops,
+    score a NULL logit, with a NULL feature count for NULL text and 0 for
+    wordless text."""
     from erlang_mapreduce_spark.operators.curation import (
-        _word_ngrams,
-        qc_logit_arrow,
-        qc_logit_narrow,
-        qc_narrow_scores,
+        _QC_LOGIT_SQL,
+        _hashed_feats_ctes,
+        _qc_score_ctes,
+        with_qc_scores,
     )
-    from erlang_mapreduce_spark.tables import load
+    from tests.oracle import duck_con
 
-    d = load(spark, sf_dir, "documents")
-    ws = F.filter(
-        F.split(F.lower("text"), r"\s+"), lambda w: F.length(w) > 0
-    )
-    feats_size = F.size(F.concat(ws, _word_ngrams(ws, 2)))
-    rows = d.select(
-        "doc_id",
-        qc_logit_narrow(F.col("text")).alias("jvm"),
-        qc_logit_arrow(F.col("text")).alias("arrow"),
-        feats_size.alias("jvm_nf"),
-        qc_narrow_scores(F.col("text"))["n_feats"].alias("arrow_nf"),
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r.jvm == r.arrow, r
-        # size(NULL) is -1 in non-ANSI Spark; the Arrow scorer reports NULL
-        exp_nf = None if r.jvm_nf == -1 else r.jvm_nf
-        assert r.arrow_nf == exp_nf, r
+    hostile = [
+        None,
+        "",
+        "   ",
+        " \t\n\r\f ",
+        "  Padded  Words here \n",
+        "\tLonely ",
+        "Ünïcödé Straße naïve café Straße",
+        "日本語 のテキスト 日本語",
+        "Привет МИР привет мир",
+    ]
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    first = d.agg(F.max("doc_id")).first()[0] + 1
+    extra = [(first + i, t) for i, t in enumerate(hostile)]
+    src = d.unionByName(spark.createDataFrame(extra, d.schema))
+    got = {
+        r.doc_id: (r.text, r.qc_n_feats, r.qc_logit)
+        for r in with_qc_scores(src, "text").collect()
+    }
+
+    con = duck_con(sf_dir)
+    con.execute("CREATE TABLE qc_src AS SELECT doc_id, text FROM documents")
+    con.executemany("INSERT INTO qc_src VALUES (?, ?)", extra)
+    want = {
+        doc_id: (n_feats, logit)
+        for doc_id, n_feats, logit in con.execute(
+            f"WITH {_hashed_feats_ctes(src='qc_src')},\n{_qc_score_ctes()}\n"
+            f"SELECT doc_id, n_feats, {_QC_LOGIT_SQL} FROM qsc"
+        ).fetchall()
+    }
+    assert set(want) <= set(got)
+    for doc_id, (text, n_feats, logit) in got.items():
+        if doc_id in want:
+            assert (n_feats, logit) == want[doc_id], (doc_id, text)
+        else:
+            assert logit is None, (doc_id, text)
+            assert n_feats == (None if text is None else 0), (doc_id, text)
+    # the first four hostile rows have no features; the rest are scored
+    assert all(first + i not in want for i in range(4))
+    assert all(first + i in want for i in range(4, len(hostile)))

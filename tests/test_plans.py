@@ -556,6 +556,22 @@ def test_pretrain_capstone_stage_budgets(spark, sf_dir):
     assert "BroadcastHashJoin" in p7  # eval grams broadcast, never shuffled
 
 
+def test_capstone_quality_flags_single_arrow_scorer(spark, sf_dir):
+    """The capstone's fused stage-4+5 flag pass (`pretrain.quality_flags`)
+    scores the classifier through ONE Arrow boundary crossing — never the
+    row-at-a-time path, never a second scorer evaluation — and stays
+    narrow: no join, no exchange."""
+    from erlang_mapreduce_spark.operators import pretrain as pt
+    from erlang_mapreduce_spark.tables import load
+
+    gated = pt.gate_and_scrub(load(spark, sf_dir, "documents"))
+    p = plan_of(pt.quality_flags(gated))
+    assert count_nodes(p, "ArrowEvalPython") == 1, p
+    assert "BatchEvalPython" not in p, p
+    assert "Join" not in p, p
+    assert count_nodes(p, "Exchange") == 0, p
+
+
 def test_semantic_collapse_key_is_digest_not_vector(spark, sf_dir):
     """The verbatim-collapse window in dedup_semantic must exchange on the
     md5 digest of the embedding (16 bytes/row), never on the raw

@@ -96,11 +96,17 @@ def main() -> None:
     ).mode("overwrite").save()
     release_transient_storage()
     rows = probe(spark, sf_dir)
+    with streams._state_sized_shuffle(spark):
+        width = spark.conf.get("spark.sql.shuffle.partitions")
 
     lines = [
         MARK_S,
         "",
         "## Streaming-replay fixed-cost split (tools/stream_cost_probe.py)",
+        "",
+        f"Measured on {os.cpu_count()} cores, master"
+        f" `{spark.sparkContext.master}`, replay shuffle width {width}"
+        " (one state store per width partition per stateful operator).",
         "",
         "Per-micro-batch wall split from StreamingQueryProgress at sf0.1:",
         "`fixed` = driver-serial trigger planning + offset-log + WAL",
@@ -130,8 +136,8 @@ def main() -> None:
     lines += [
         "",
         "Reading this against the isolated BENCH cells (12-13 s for the",
-        "memory-sink stateful ops): the query itself runs 2.5-4 s warm",
-        "(this table); the remainder of an isolated cell is fresh-session",
+        "memory-sink stateful ops): the query itself takes the wall",
+        "above; the remainder of an isolated cell is fresh-session",
         "JVM/codegen + chunk materialization OUTSIDE the streaming query —",
         "session constants, not per-batch or per-row cost. Within the",
         "query, fixed-per-batch (driver planning/WAL ~100-200 ms + one",
