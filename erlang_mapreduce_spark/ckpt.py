@@ -49,12 +49,20 @@ raises :class:`CheckpointReleasedError` naming the releasing op instead
 of a Spark internals error. Shared-cache leases die only on LRU eviction,
 so results that depend exclusively on shared tables stay forceable across
 op invocations.
+
+Scratch files: ``scratch(spark, sf_dir, tag)`` is the one lifecycle for
+the throwaway files an op writes and reads back within one invocation
+(sinks it accounts against, streaming checkpoints, foreachBatch deltas).
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+import time
 from collections import OrderedDict
-from typing import Callable
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -62,6 +70,38 @@ try:  # Spark 4 layout: the instantiable implementation is the classic one
     from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 except ImportError:  # pragma: no cover — Spark 3 layout
     _ClassicDataFrame = DataFrame  # type: ignore[misc]
+
+
+SCRATCH_ROOT = "/tmp/spark_graft_scratch"
+
+
+@contextlib.contextmanager
+def scratch(spark, sf_dir: str, tag: str) -> Iterator[str]:
+    """Yield a fresh, existing directory
+    ``SCRATCH_ROOT/<applicationId>/<leaf>-<tag>-<time_ns>`` private to this
+    invocation: concurrent or nested calls with the same (sf_dir, tag) get
+    distinct dirs, so one invocation's cleanup never deletes another's
+    files. On exit, also when the body raises, the dir is removed and its
+    parents are pruned if empty. Anything the caller returns must already
+    be materialized off these files."""
+    app_root = os.path.join(SCRATCH_ROOT, spark.sparkContext.applicationId)
+    leaf = os.path.basename(os.path.normpath(sf_dir))
+    while True:
+        d = os.path.join(app_root, f"{leaf}-{tag}-{time.time_ns()}")
+        try:
+            os.makedirs(d)
+            break
+        except (FileExistsError, FileNotFoundError):
+            continue  # same-ns twin, or a sibling pruned the parent
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+        for parent in (app_root, SCRATCH_ROOT):
+            try:
+                os.rmdir(parent)
+            except OSError:
+                break
 
 
 class CheckpointReleasedError(RuntimeError):

@@ -733,10 +733,10 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_doc_gram_sets), and Jaccard verification is a per-row
     `array_intersect` — no groupBy, no sizes table, no second pass over
     grams. The gram-set table feeds three consumers (bands + verify ×2);
-    `_materialize` computes it once — pooled persist() by default (blocks
-    freed at the next invocation, recomputable on executor loss), or a
-    durable parquet snapshot under $SPARK_GRAFT_CHECKPOINT_DIR, the
-    100 TB posture for a corpus-scale gram-set table.
+    `_shared_gram_sets_md5` builds it once per (session, corpus) — a
+    shared, LRU-bounded eager localCheckpoint by default, or a durable
+    parquet snapshot under $SPARK_GRAFT_CHECKPOINT_DIR, the 100 TB
+    posture for a corpus-scale gram-set table.
 
     Like dedup_ngram_jaccard, verbatim-duplicate groups collapse to one
     representative before signing and expand after: identical texts have

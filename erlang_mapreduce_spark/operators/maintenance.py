@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ckpt import scratch
 from ..exact import dsum, dsum_sql
 from ..registry import query
 from ..tables import load
@@ -156,20 +157,13 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger in production is a file-listing pass filtering dirs whose
     mean file size is under target — the rewrite plan is unchanged."""
     import os
-    import shutil
-
-    from ..sources.scans import SINK_ROOT
 
     src = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_returnflag",
     )
-    app_root = os.path.join(SINK_ROOT, spark.sparkContext.applicationId)
-    base = os.path.join(
-        app_root, os.path.basename(os.path.normpath(sf_dir)), "compact"
-    )
-    frag, tidy = os.path.join(base, "frag"), os.path.join(base, "tidy")
-    try:
+    with scratch(spark, sf_dir, "compact") as base:
+        frag, tidy = os.path.join(base, "frag"), os.path.join(base, "tidy")
         # 1. the "before" state: a fragmented sink (every round-robin task
         # writes one sliver per partition value it holds). Written snappy
         # (r16, guide §6): this table is the op's OWN synthetic fixture —
@@ -265,13 +259,6 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_returnflag string, n_rows bigint, n_files bigint, "
             "sum_price double",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        for d_ in (os.path.dirname(base), app_root):
-            try:
-                os.rmdir(d_)
-            except OSError:
-                pass
 
 
 ZORDER_BITS = 16  # per-dimension bits interleaved into a 32-bit z-value
@@ -388,20 +375,12 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-level pruning) without changing the read semantics. Scratch
     snapshots are deleted after the bounded accounting collect."""
     import os
-    import shutil
-    import time
 
     from ..exact import _DEC
-    from ..sources.scans import SINK_ROOT
 
-    base = os.path.join(
-        SINK_ROOT,
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-tt-{time.time_ns()}",
-    )
     v0_df = load(spark, sf_dir, "supplier")
     v1_df = merge_upsert(spark, sf_dir)
-    try:
+    with scratch(spark, sf_dir, "tt") as base:
         paths = {}
         for ver, df in ((0, v0_df), (1, v1_df)):
             p = os.path.join(base, f"v{ver}")
@@ -422,14 +401,8 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         out = reports[0].unionAll(reports[1])
         # bounded collect: one accounting row per snapshot version (2) —
-        # materialized because the snapshot dir is deleted in the finally
+        # materialized because the snapshot dirs go with the scratch dir
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        try:
-            os.rmdir(os.path.dirname(base))
-        except OSError:
-            pass
 
 
 # dq_expectations thresholds: (check_name, threshold). Metrics are defined

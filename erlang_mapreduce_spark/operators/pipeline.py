@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..ckpt import scratch
 from ..registry import query
 from ..session import scoped_conf
 from ..tables import load
@@ -161,11 +162,6 @@ def pipeline_dataset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup shuffle, one partitioned write; at 100 TB shard count scales
     to O(corpus/target-file-size) and the sink is the shuffle-free
     partitionBy writer (each task writes its own shard files)."""
-    import os
-    import shutil
-
-    from ..sources.scans import SINK_ROOT
-
     d = load(spark, sf_dir, "documents")
     gated = d.filter(F.col("n_chars") >= 100)
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
@@ -181,16 +177,7 @@ def pipeline_dataset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shard_col(F.col("doc_id")).alias("shard"),
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
     )
-    # Namespace the sink per session: two concurrent sessions exporting the
-    # same sf would otherwise race on one path (one overwrites while the
-    # other reads back, silently corrupting the accounting).
-    app_root = os.path.join(SINK_ROOT, spark.sparkContext.applicationId)
-    out = os.path.join(
-        app_root,
-        os.path.basename(os.path.normpath(sf_dir)),
-        "export_shards",
-    )
-    try:
+    with scratch(spark, sf_dir, "export_shards") as out:
         # Scoped AQE floor override (see session.scoped_conf): the export's
         # dedup-window shuffle is byte-light, and the session-wide 32k
         # floor kept it at ~32 tasks → each task writing its own file per
@@ -222,20 +209,7 @@ def pipeline_dataset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             # shard, 8 here) so the scratch export can be deleted before
             # returning — the result must not dangle on a temp dir that
             # accumulates per run.
-            result = spark.createDataFrame(acct.collect(), acct.schema)
-    finally:
-        # remove only THIS invocation's leaf: two exports in one Spark
-        # application (different sf_dirs, or concurrent callers) must not
-        # delete each other's in-flight files. The surrounding per-sf dir
-        # and app_root are pruned only when empty, so the app tree still
-        # vanishes with the last invocation.
-        shutil.rmtree(out, ignore_errors=True)
-        for d_ in (os.path.dirname(out), app_root):
-            try:
-                os.rmdir(d_)
-            except OSError:
-                pass
-    return result
+            return spark.createDataFrame(acct.collect(), acct.schema)
 
 
 SEQ_BUDGET = 512  # tokens per packed training sequence

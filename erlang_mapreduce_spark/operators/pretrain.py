@@ -48,13 +48,10 @@ discipline over the north-star corpus workload.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import release_transient_storage
+from ..ckpt import release_transient_storage, scratch
 from ..registry import query
 from ..tables import load, scan_parallel
 from .analysis import (
@@ -792,8 +789,6 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     provenance: split_train is computed from the plan, export is
     re-counted from the files the partitioned sink wrote — equality IS
     the round-trip proof (pipeline_dataset_export's device)."""
-    from ..sources.scans import SINK_ROOT
-
     release_transient_storage()  # free the previous invocation's blocks
     docs = load(spark, sf_dir, "documents")
     rows: list[tuple] = []
@@ -998,13 +993,7 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         _shard_col(F.col("doc_id")).alias("shard"),
     )
-    app_root = os.path.join(SINK_ROOT, spark.sparkContext.applicationId)
-    out = os.path.join(
-        app_root,
-        os.path.basename(os.path.normpath(sf_dir)),
-        "pretrain_export",
-    )
-    try:
+    with scratch(spark, sf_dir, "pretrain_export") as out:
         out_df.write.mode("overwrite").partitionBy("shard").parquet(out)
         back = spark.read.schema(out_df.schema).parquet(out)
         e = back.agg(
@@ -1012,13 +1001,6 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").cast("bigint").alias("t"),
         ).first()
         rows.append((15, "export", e["c"], e["t"] or 0))
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        for d_ in (os.path.dirname(out), app_root):
-            try:
-                os.rmdir(d_)
-            except OSError:
-                pass
 
     # bounded by construction: `rows` is the 15 Python-side stage tuples
     # accumulated above (one per pipeline stage), never a collected corpus

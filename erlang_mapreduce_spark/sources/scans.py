@@ -16,13 +16,13 @@ and the DuckDB oracle read the same materialized file.
 from __future__ import annotations
 
 import os
-import time
 
 import duckdb
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..ckpt import scratch
 from ..registry import query
 from ..tables import load
 
@@ -312,20 +312,12 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     query. The op demonstrates the reconciliation semantics; the
     accounting collect is ≤ |priorities|+1 rows, and the scratch sink is
     deleted before returning (the pipeline_dataset_export pattern)."""
-    import shutil
-    import time
-
     from ..exact import _DEC
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    base = os.path.join(
-        SINK_ROOT,
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-evolve-{time.time_ns()}",
-    )
-    try:
+    with scratch(spark, sf_dir, "evolve") as base:
         k = F.col("o_orderkey")
         # generation 1: the column does not exist yet. The split must be
         # exhaustive even for NULL keys (k % 2 is NULL for them, which
@@ -362,15 +354,9 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # bounded collect: acct is one row per orderpriority (<= 5) —
-        # materialized because the mixed-version sink dir is deleted in
-        # the finally below
+        # materialized because the mixed-version sink dir is deleted when
+        # the scratch scope exits
         return spark.createDataFrame(acct.collect(), acct.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        try:
-            os.rmdir(os.path.dirname(base))
-        except OSError:
-            pass
 
 
 # --- custom Python data source (PySpark 4 pyspark.sql.datasource API) ---
@@ -514,9 +500,6 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     never arrive through this path). The driver-side writes are bounded
     by BINFILE_MAX_DOC (setup for the demonstrated SCAN, not the data
     path)."""
-    import re
-    import shutil
-
     docs = (
         load(spark, sf_dir, "documents")
         .filter(
@@ -527,13 +510,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .collect()
     )
-    base = os.path.join(
-        SINK_ROOT,
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-binfiles",
-    )
-    try:
-        os.makedirs(base, exist_ok=True)
+    with scratch(spark, sf_dir, "binfiles") as base:
         for r in docs:
             with open(os.path.join(base, f"doc_{r.doc_id}.bin"), "wb") as f:
                 f.write(r.text.encode("utf-8"))
@@ -556,13 +533,6 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the scratch dir is deleted on return, so the accounting must be
         # materialized first (same reason as scan_schema_evolution)
         return spark.createDataFrame(scanned.collect(), scanned.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        for d_ in (os.path.dirname(base),):
-            try:
-                os.rmdir(d_)
-            except OSError:
-                pass
 
 
 def _register_pysink(spark: SparkSession) -> None:
@@ -686,19 +656,8 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     count; the python-worker serialization is the slow path vs a JVM
     sink (scan_python_datasource's note) — this is the extension-point
     showcase, production bulk paths land parquet."""
-    import shutil as _shutil
-
     _register_pysink(spark)
-    # time_ns suffix: two concurrent invocations in one application on the
-    # same corpus must not share a scratch dir — the finally-rmtree of one
-    # would delete the other's committed shards mid-read (round-12 ADVICE
-    # item 4; matches stream_token_budget's pattern).
-    base = os.path.join(
-        SINK_ROOT,
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-pysink-{time.time_ns()}",
-    )
-    try:
+    with scratch(spark, sf_dir, "pysink") as base:
         (
             load(spark, sf_dir, "orders")
             .filter(F.col("o_orderstatus") == "F")
@@ -718,12 +677,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scratch shards are deleted on return — materialize first (the
         # scan_binary_files device); ≤ 5 priority rows
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
-        try:
-            os.rmdir(os.path.dirname(base))
-        except OSError:
-            pass
 
 
 _ARROW_PARTS = 8

@@ -20,40 +20,24 @@ from __future__ import annotations
 import contextlib
 import hashlib
 import os
+import re
 import shutil
 import time
 import uuid
+from typing import Callable, NamedTuple
 
 import duckdb
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..ckpt import scratch
 from ..exact import md5_prefix_int
 from ..registry import query
 from ..tables import fingerprint, load
 
 CHUNK_ROOT = "/tmp/spark_graft_stream_chunks"
 
-# Per-micro-batch progress of the most recent replay, for the fixed-cost
-# probe (tools/stream_cost_probe.py, r14 VERDICT task 7): recentProgress
-# is a bounded local list the query keeps anyway — capturing it after
-# awaitTermination costs nothing and changes no behavior. Keyed "__last__"
-# (the probe runs ops one at a time) — not a public API.
-LAST_PROGRESS: dict[str, list] = {}
-
-
-def _record_progress(q) -> None:
-    import json as _json
-
-    try:
-        LAST_PROGRESS["__last__"] = [
-            p if isinstance(p, dict) else _json.loads(p.json)
-            for p in (q.recentProgress or [])
-            if p is not None
-        ]
-    except Exception:  # diagnostics only — never fail the query path
-        LAST_PROGRESS["__last__"] = []
 # Grace window before a superseded fingerprint's chunk dir is reclaimed:
 # long enough for an in-flight replay (chunks replay in seconds) to drain,
 # short enough that a rewritten-corpus leak is bounded to one window.
@@ -150,52 +134,57 @@ _EVENT_SCHEMA = T.StructType(
 )
 
 
+# Chunked replay tables: table -> (select list, total replay order).
+_CHUNK_TABLES = {
+    "events": (
+        "event_id, ts::TIMESTAMP AS ts, user_id, event_type, value, props",
+        "ts, event_id",
+    ),
+    "documents": ("doc_id, text, lang, source, n_chars", "doc_id"),
+}
+
+
 def _materialize_chunks(sf_dir: str, mode: str) -> str:
-    """Split events into 4 time-quantile chunks (+ a 5th: replayed/late
-    rows). mode='late': chunk 4 re-sends the EARLIEST quartile with shifted
-    ids (arrives after the watermark has passed → must be dropped).
-    mode='dup': chunk 4 re-sends chunk 3 verbatim (duplicate event_ids
-    within the watermark → must be suppressed by stateful dedup).
-    mode='plain': just the 4 in-order chunks — no late/duplicate rows."""
-    d = os.path.join(CHUNK_ROOT, _chunk_ns(sf_dir, "events"), mode)
+    """Split a table into 4 quantile chunks of its total replay order,
+    with strictly increasing mtimes so the file source replays them in
+    order. Events modes: 'plain' is just the 4 in-order chunks; 'late'
+    adds a 5th chunk re-sending the EARLIEST quartile with shifted ids
+    (arrives after the watermark has passed → must be dropped); 'dup'
+    adds a 5th chunk re-sending chunk 3 verbatim (duplicate event_ids
+    within the watermark → must be suppressed by stateful dedup). Mode
+    'docs' chunks documents by ascending doc_id: every id smaller than a
+    given doc has already streamed by the time that doc arrives — the
+    property stream_minhash_dedup's batch-equivalence argument rests on."""
+    table = "documents" if mode == "docs" else "events"
+    cols, order = _CHUNK_TABLES[table]
+    d = os.path.join(CHUNK_ROOT, _chunk_ns(sf_dir, table), mode)
     sentinel = os.path.join(d, ".done")
     if os.path.exists(sentinel):
         return d
     os.makedirs(d, exist_ok=True)
     con = duckdb.connect()
-    src = f"{sf_dir}/events.parquet"
     con.execute(
-        f"""CREATE TEMP TABLE ev AS
-            SELECT event_id, ts::TIMESTAMP AS ts, user_id, event_type,
-                   value, props,
-                   ntile(4) OVER (ORDER BY ts, event_id) AS q
-            FROM '{src}'"""
+        f"""CREATE TEMP TABLE t AS
+            SELECT {cols}, ntile(4) OVER (ORDER BY {order}) AS q
+            FROM '{sf_dir}/{table}.parquet'"""
     )
-    for i in range(4):
-        con.execute(
-            f"""COPY (SELECT event_id, ts, user_id, event_type, value, props
-                      FROM ev WHERE q = {i + 1} ORDER BY ts, event_id)
-                TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-        )
+    chunks = [f"* EXCLUDE (q) FROM t WHERE q = {i}" for i in (1, 2, 3, 4)]
     if mode == "late":
-        con.execute(
-            f"""COPY (SELECT event_id + 10000000 AS event_id, ts, user_id,
-                             event_type, value, props
-                      FROM ev WHERE q = 1 ORDER BY ts, event_id)
-                TO '{d}/chunk_4.parquet' (FORMAT PARQUET)"""
+        chunks.append(
+            "* EXCLUDE (q) REPLACE (event_id + 10000000 AS event_id) "
+            "FROM t WHERE q = 1"
         )
     elif mode == "dup":
-        con.execute(
-            f"""COPY (SELECT event_id, ts, user_id, event_type, value, props
-                      FROM ev WHERE q = 4 ORDER BY ts, event_id)
-                TO '{d}/chunk_4.parquet' (FORMAT PARQUET)"""
-        )
-    con.close()
-    n_chunks = 4 if mode == "plain" else 5
-    # strictly increasing mtimes so the file source replays in chunk order
+        chunks.append(chunks[3])
     base = time.time() - 100
-    for i in range(n_chunks):
-        os.utime(os.path.join(d, f"chunk_{i}.parquet"), (base + i, base + i))
+    for i, sel in enumerate(chunks):
+        path = os.path.join(d, f"chunk_{i}.parquet")
+        con.execute(
+            f"COPY (SELECT {sel} ORDER BY {order}) "
+            f"TO '{path}' (FORMAT PARQUET)"
+        )
+        os.utime(path, (base + i, base + i))
+    con.close()
     with open(sentinel, "w") as f:
         f.write("ok")
     return d
@@ -239,28 +228,41 @@ def _replay(
 
 
 def _run_stream(
-    spark: SparkSession, stream: DataFrame, sink_name: str, output_mode: str
-) -> DataFrame:
-    """Drain a built streaming DataFrame with availableNow into a memory
-    sink at the replay shuffle width, and return the sink table."""
-    ckpt = f"/tmp/spark_graft_ckpt/{sink_name}-{time.time_ns()}"
+    spark: SparkSession,
+    stream: DataFrame,
+    base: str,
+    output_mode: str = "append",
+    sink: str | Callable[[DataFrame, int], None] = "memory",
+) -> DataFrame | None:
+    """The one drain: start ``stream`` with availableNow, checkpointing
+    under the scratch dir ``base``, and await it at the replay shuffle
+    width. ``sink`` is "memory" (returns the result table), "parquet"
+    (files under ``base``, exactly-once through the ``_spark_metadata``
+    log; returns their committed read-back, valid while ``base`` lives)
+    or a foreachBatch function (returns None)."""
+    path = os.path.join(base, "data")
+    name = "stream_" + re.sub(r"\W", "_", os.path.basename(base))
+    w = (
+        stream.writeStream.trigger(availableNow=True)
+        .outputMode(output_mode)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+    )
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    elif sink == "parquet":
+        w = w.format("parquet").option("path", path)
+    else:
+        w = w.format("memory").queryName(name)
     try:
         with _state_sized_shuffle(spark):
-            q = (
-                stream.writeStream.trigger(availableNow=True)
-                .format("memory")
-                .queryName(sink_name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        _record_progress(q)
+            w.start().awaitTermination()
+        if sink == "parquet":
+            return spark.read.schema(stream.schema).parquet(path)
+        return spark.table(name) if sink == "memory" else None
     finally:
-        # the memory sink holds the results; the per-run state-store dir
-        # is dead weight once the query terminates, whether or not it failed
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink_name)
+        # the returned plan holds the memory sink itself: dropping the
+        # per-run view keeps finished runs from piling up in the catalog
+        spark.catalog.dropTempView(name)
 
 
 @query(
@@ -305,8 +307,8 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    sink = f"wm_late_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, agg, sink, "append")
+    with scratch(spark, sf_dir, "wm_late") as base:
+        return _run_stream(spark, agg, base, "append")
 
 
 @query(
@@ -335,8 +337,8 @@ def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["event_id", "ts"])
         .select("event_id", "user_id", "event_type")
     )
-    sink = f"dedup_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, dedup, sink, "append")
+    with scratch(spark, sf_dir, "dedup") as base:
+        return _run_stream(spark, dedup, base, "append")
 
 
 @query(
@@ -428,8 +430,8 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"custom_state_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, running, sink, "update")
+    with scratch(spark, sf_dir, "custom_state") as base:
+        return _run_stream(spark, running, base, "update")
 
 
 @query(
@@ -488,8 +490,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("view_ts", "yyyy-MM-dd HH:mm:ss").alias("view_ts"),
         F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
     )
-    sink = f"ssjoin_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, joined, sink, "append")
+    with scratch(spark, sf_dir, "ssjoin") as base:
+        return _run_stream(spark, joined, base, "append")
 
 
 @query(
@@ -504,7 +506,7 @@ GROUP BY event_type
 def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once streaming FILE sink — the production shape the memory
     sinks above stand in for: raw events append to a parquet directory
-    under a checkpointed writeStream, where the `_spark_metadata`
+    under a checkpointed streaming query, where the `_spark_metadata`
     transaction log is what makes the sink exactly-once (a micro-batch's
     files count only once committed; re-running after a crash replays
     from the checkpoint without double-writing). The read-back goes
@@ -515,97 +517,101 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated). At 100 TB this is the landing-zone pattern: partitioned
     parquet + metadata log, compacted downstream.
 
-    The scratch sink is materialized into the 5-row summary and deleted
-    before returning (same bounded-collect accounting pattern as
+    The scratch sink is materialized into the 5-row summary before the
+    scratch scope deletes it (same bounded-collect accounting pattern as
     pipeline_dataset_export)."""
     from ..exact import _DEC
 
     d = _materialize_chunks(sf_dir, "plain")
-    base = os.path.join(
-        "/tmp/spark_graft_file_sink",
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{time.time_ns()}",
-    )
-    out, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    stream = _replay(spark, d)
-    try:
-        q = (
-            stream.writeStream.trigger(availableNow=True)
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination()
-        back = spark.read.schema(_EVENT_SCHEMA).parquet(out)
+    with scratch(spark, sf_dir, "file_sink") as base:
+        back = _run_stream(spark, _replay(spark, d), base, sink="parquet")
         acct = back.groupBy("event_type").agg(
             F.count("*").alias("cnt"),
             F.sum(F.col("value").cast(_DEC)).cast("double").alias("sum_value"),
         )
-        # bounded collect: acct is one row per event_type (O(types)); snapshotted to the driver
-        # because the temp sink it reads is deleted in the finally below
+        # bounded collect: one row per event_type (O(types)), materialized
+        # because the sink it reads is deleted with the scratch dir
         return spark.createDataFrame(acct.collect(), acct.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
-_UPSERT_SNAP_SCHEMA = (
-    "user_id long, ts timestamp, event_id long, event_type string, "
-    "value double, n long"
-)
+class _DeltaLog(NamedTuple):
+    """State of a foreachBatch op kept as a delta log: each micro-batch
+    writes only ``summary(batch)`` — its own mergeable summary — under
+    ``v{batch_id}``, and the state is ``fold`` over the union of all
+    deltas, taken once after the drain. ``summary`` is a deterministic
+    function of the batch, so an at-least-once replay of a batch rewrites
+    its own delta with identical content and the fold cannot count it
+    twice. ``fold(summary(all rows))`` equals ``fold`` of the per-batch
+    deltas for any disjoint batching (mergeability), which is what lets
+    these ops carry the one-shot batch aggregate as their oracle."""
+
+    schema: str
+    summary: Callable[[DataFrame], DataFrame]
+    fold: Callable[[DataFrame], DataFrame]
 
 
-def _upsert_batch_latest(df: DataFrame) -> DataFrame:
-    """Per-user mergeable summary of one micro-batch: latest event by
-    (ts, event_id) via max(struct) argmax, plus the event count."""
+def _write_delta(log: _DeltaLog, d: str, batch_df: DataFrame, batch_id: int):
+    log.summary(batch_df).write.mode("overwrite").parquet(
+        os.path.join(d, f"v{batch_id}")
+    )
+
+
+def _deltas(
+    spark: SparkSession, d: str, schema: str, upto: int | None = None
+) -> DataFrame:
+    """Union of the deltas ``v{id}`` under ``d`` with id <= ``upto`` (all
+    if None); an empty frame of ``schema`` when there are none."""
+    ids = sorted(int(v[1:]) for v in os.listdir(d)) if os.path.isdir(d) else []
+    paths = [
+        os.path.join(d, f"v{i}") for i in ids if upto is None or i <= upto
+    ]
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def _fold_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    stream: DataFrame,
+    log: _DeltaLog,
+    finish: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Drain ``stream`` into ``log``'s deltas inside a scratch dir, fold
+    them, and return ``finish(state)`` materialized on the driver."""
+    with scratch(spark, sf_dir, tag) as base:
+        d = os.path.join(base, "deltas")
+        _run_stream(
+            spark, stream, base, sink=lambda df, i: _write_delta(log, d, df, i)
+        )
+        out = finish(log.fold(_deltas(spark, d, log.schema)))
+        # bounded collect: a per-key summary (O(keys)), materialized
+        # because the deltas it reads are deleted with the scratch dir
+        return spark.createDataFrame(out.collect(), out.schema)
+
+
+def _latest_per_user(df: DataFrame, n) -> DataFrame:
+    """Per-user latest event by (ts, event_id) via max(struct) argmax,
+    plus the event-count aggregate ``n``."""
     return (
         df.groupBy("user_id")
         .agg(
             F.max(
                 F.struct("ts", "event_id", "event_type", "value")
             ).alias("last"),
-            F.count("*").alias("n"),
+            n.alias("n"),
         )
         .select("user_id", "last.*", "n")
     )
 
 
-def _upsert_merge_batch(
-    spark: SparkSession,
-    base: str,
-    versions: dict[int, str],
-    batch_df: DataFrame,
-    batch_id: int,
-) -> None:
-    """One foreachBatch merge step of stream_foreachbatch_upsert —
-    module-level so tests can re-invoke a committed batch (an at-least-once
-    replay) directly. prev is derived from BATCH ID, never from "latest
-    written": on a replay of batch N (v{N} committed, checkpoint not yet
-    advanced), the previous snapshot must be the highest version < N —
-    reading v{N} itself would merge batch N into its own output
-    (double-counting `n`, argmax over its own result) AND overwrite the
-    parquet path being read. Same device as stream_token_budget's merge."""
-    delta = _upsert_batch_latest(batch_df)
-    prev_ids = [b for b in versions if b < batch_id]
-    if prev_ids:
-        prev = spark.read.schema(_UPSERT_SNAP_SCHEMA).parquet(
-            versions[max(prev_ids)]
-        )
-        delta = (
-            prev.unionByName(delta)
-            .groupBy("user_id")
-            .agg(
-                F.max(
-                    F.struct("ts", "event_id", "event_type", "value")
-                ).alias("last"),
-                F.sum("n").alias("n"),
-            )
-            .select("user_id", "last.*", "n")
-        )
-    v = os.path.join(base, f"v{batch_id}")
-    delta.write.mode("overwrite").parquet(v)
-    versions[batch_id] = v
+_UPSERT = _DeltaLog(
+    "user_id long, ts timestamp, event_id long, event_type string, "
+    "value double, n long",
+    lambda batch: _latest_per_user(batch, F.count("*")),
+    lambda deltas: _latest_per_user(deltas, F.sum("n")),
+)
 
 
 @query(
@@ -632,75 +638,70 @@ FROM rk WHERE rn = 1
 )
 def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MERGE via foreachBatch — the incremental materialized-view
-    pattern: each micro-batch is pre-aggregated (per-user latest event +
-    event count: max(struct) argmax, mergeable), then upserted into a
-    keyed parquet snapshot by re-aggregating snapshot ∪ batch — the
+    pattern: each micro-batch is pre-aggregated to a per-user latest event
+    + event count (max(struct) argmax and count, both mergeable), the
     foreachBatch escape hatch Spark prescribes for sinks with merge
-    semantics (JDBC upserts, Delta MERGE). Each batch writes a NEW
-    versioned snapshot dir keyed by batch id, and the merge reads its
-    predecessor as the highest committed version < batch_id (never
-    "latest written"): that makes the merge idempotent under
-    foreachBatch's at-least-once replay (a re-run of batch k rewrites
-    v{k} from the same v{<k} ∪ batch-k inputs instead of double-counting
-    batch k into its own output) — the roll-your-own analog of a
-    transactional sink. tests/test_streaming.py replays the last batch
-    and pins snapshot equality.
+    semantics (JDBC upserts, Delta MERGE). The state is a delta log
+    (``_DeltaLog``): batches write only their own summaries, and the view
+    is their max/sum fold — the roll-your-own analog of a transactional
+    sink, idempotent under foreachBatch's at-least-once replay.
 
-    State per version is O(distinct users), not O(events) — the
-    max(struct)+sum summaries are mergeable, which is exactly what lets
-    the pattern absorb 100 TB of history into a bounded snapshot; at that
-    scale the union-reaggregate becomes a MERGE into a bucketed/Delta
-    table so each batch touches only matched files. In-order plain replay
-    + inner accumulation loses nothing, so the final snapshot must equal
-    the batch argmax/count over all events — the oracle. The bounded
-    per-user result is materialized and the scratch snapshots deleted
-    (the pipeline_dataset_export accounting pattern)."""
+    Each delta is O(distinct users in the batch), not O(events); at 100 TB
+    the fold becomes a MERGE into a bucketed/Delta table so each batch
+    touches only matched files. In-order plain replay loses nothing, so
+    the folded view must equal the batch argmax/count over all events —
+    the oracle. The bounded per-user result is materialized before the
+    scratch deltas are deleted (the pipeline_dataset_export pattern)."""
     d = _materialize_chunks(sf_dir, "plain")
-    base = os.path.join(
-        "/tmp/spark_graft_upsert",
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{time.time_ns()}",
-    )
-    versions: dict[int, str] = {}  # batch_id -> committed snapshot path
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        _upsert_merge_batch(spark, base, versions, batch_df, batch_id)
-
-    stream = _replay(spark, d)
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        with _state_sized_shuffle(spark):  # sizes the per-batch jobs too
-            q = (
-                stream.writeStream.trigger(availableNow=True)
-                .foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        if not versions:  # empty source: no batch ever fired
-            return spark.createDataFrame(
-                [],
-                "user_id long, n_events long, last_ts string, "
-                "last_type string, last_value double",
-            )
-        snap = spark.read.schema(_UPSERT_SNAP_SCHEMA).parquet(
-            versions[max(versions)]
-        )
-        out = snap.select(
+    return _fold_stream(
+        spark,
+        sf_dir,
+        "upsert",
+        _replay(spark, d),
+        _UPSERT,
+        lambda view: view.select(
             "user_id",
             F.col("n").alias("n_events"),
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
             F.col("event_type").alias("last_type"),
             F.col("value").alias("last_value"),
+        ),
+    )
+
+
+from ..operators.relational import _KMV_NUM, KMV_K  # noqa: E402
+
+
+def _kmv_min_k(df: DataFrame) -> DataFrame:
+    """The KMV_K smallest distinct hashes per event_type."""
+    w = Window.partitionBy("event_type").orderBy("h")
+    return (
+        df.distinct()
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= KMV_K)
+        .drop("rn")
+    )
+
+
+_KMV = _DeltaLog(
+    "event_type string, h long",
+    lambda batch: _kmv_min_k(
+        batch.filter(F.col("user_id").isNotNull()).select(
+            "event_type", md5_prefix_int("user_id", 15).alias("h")
         )
-        # bounded collect: out is a per-group summary (O(groups/keys), fixture <=100s of rows); snapshotted to the driver
-        # because the temp sink it reads is deleted in the finally below
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    ),
+    _kmv_min_k,
+)
 
 
-from ..operators.relational import _KMV_NUM, KMV_K  # one KMV device
+def _kmv_estimate(sketch: DataFrame) -> DataFrame:
+    m = F.count("*")
+    return sketch.groupBy("event_type").agg(
+        m.cast("long").alias("k_used"),
+        F.when(m < KMV_K, m.cast("double"))
+        .otherwise(F.lit(_KMV_NUM) / F.max("h").cast("double"))
+        .alias("est_distinct"),
+    )
 
 
 @query(
@@ -727,11 +728,9 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental distinct-user estimation over the stream — a KMV
     sketch per event_type maintained across micro-batches via
     foreachBatch, the streaming twin of `agg_kmv_distinct`
-    (relational.py): each batch folds to its k smallest distinct
-    md5-hashes per group, merges with the previous snapshot (union →
-    distinct → k smallest), and writes a NEW versioned snapshot keyed by
-    batch id (the stream_foreachbatch_upsert idempotence device — a
-    replayed batch rewrites its version from the same inputs).
+    (relational.py): each batch writes its k smallest distinct
+    md5-hashes per group as its delta (``_DeltaLog``), and the sketch is
+    the min-k fold of all deltas.
 
     Why this streaming op can carry a FULL exact-hash oracle when the
     watermark ops cannot: KMV state is a deterministic function of the
@@ -739,86 +738,12 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min-k of a union is the min-k of mins-k) — so after any in-order,
     late, or duplicated replay the final sketch equals the one-shot
     batch sketch over all events, which is exactly the SQL the oracle
-    runs. This is mergeability doing the work replay-equivalence proofs
-    do for the other foreachBatch ops, and it is precisely why a 100 TB
-    pipeline keeps sketches (not raw keys) as streaming state: O(k)
-    rows per group, exchange-free merges, and a restart can rebuild
-    from any snapshot version."""
-    from pyspark.sql import Window
-
+    runs. This is why a 100 TB pipeline keeps sketches (not raw keys) as
+    streaming state: O(k) rows per group and exchange-free merges."""
     d = _materialize_chunks(sf_dir, "plain")
-    base = os.path.join(
-        "/tmp/spark_graft_kmv",
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{time.time_ns()}",
+    return _fold_stream(
+        spark, sf_dir, "kmv", _replay(spark, d), _KMV, _kmv_estimate
     )
-    versions: dict[int, str] = {}
-    w = Window.partitionBy("event_type").orderBy("h")
-
-    def batch_sketch(df: DataFrame) -> DataFrame:
-        return (
-            df.filter(F.col("user_id").isNotNull())
-            .select("event_type", md5_prefix_int("user_id", 15).alias("h"))
-            .distinct()
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= KMV_K)
-            .drop("rn")
-        )
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_sketch(batch_df)
-        # prev = highest version < batch_id (the _upsert_merge_batch replay
-        # device). The KMV merge itself is additionally IDEMPOTENT —
-        # min-k(distinct(S ∪ B ∪ B)) = min-k(distinct(S ∪ B)) — so unlike
-        # the summing upsert, even merging a replayed batch into its own
-        # v{N} output would not corrupt values; versioning by batch id
-        # still matters to avoid overwriting the parquet path being read.
-        prev_ids = [b for b in versions if b < batch_id]
-        if prev_ids:
-            prev = spark.read.schema("event_type string, h long").parquet(
-                versions[max(prev_ids)]
-            )
-            delta = (
-                prev.unionByName(delta)
-                .distinct()
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= KMV_K)
-                .drop("rn")
-            )
-        v = os.path.join(base, f"v{batch_id}")
-        delta.write.mode("overwrite").parquet(v)
-        versions[batch_id] = v
-
-    stream = _replay(spark, d)
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        with _state_sized_shuffle(spark):  # sizes the per-batch jobs too
-            q = (
-                stream.writeStream.trigger(availableNow=True)
-                .foreachBatch(merge)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        if not versions:  # empty source: no batch ever fired
-            return spark.createDataFrame(
-                [], "event_type string, k_used long, est_distinct double"
-            )
-        snap = spark.read.schema("event_type string, h long").parquet(
-            versions[max(versions)]
-        )
-        m = F.count("*")
-        out = snap.groupBy("event_type").agg(
-            m.cast("long").alias("k_used"),
-            F.when(m < KMV_K, m.cast("double"))
-            .otherwise(F.lit(_KMV_NUM) / F.max("h").cast("double"))
-            .alias("est_distinct"),
-        )
-        # bounded collect: out is a per-group summary (O(groups/keys), fixture <=100s of rows); snapshotted to the driver
-        # because the temp sink it reads is deleted in the finally below
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 _DOC_SCHEMA = T.StructType(
@@ -830,39 +755,6 @@ _DOC_SCHEMA = T.StructType(
         T.StructField("n_chars", T.LongType()),
     ]
 )
-
-
-def _materialize_doc_chunks(sf_dir: str) -> str:
-    """Split documents into 4 ASCENDING-doc_id chunks (quartiles of the id
-    order, mtime-ordered like `_materialize_chunks`): replaying them in
-    order means every id smaller than a given doc has already streamed by
-    the time that doc arrives — the property stream_minhash_dedup's
-    batch-equivalence argument rests on."""
-    d = os.path.join(CHUNK_ROOT, _chunk_ns(sf_dir, "documents"), "docs")
-    sentinel = os.path.join(d, ".done")
-    if os.path.exists(sentinel):
-        return d
-    os.makedirs(d, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"""CREATE TEMP TABLE dv AS
-            SELECT doc_id, text, lang, source, n_chars,
-                   ntile(4) OVER (ORDER BY doc_id) AS q
-            FROM '{sf_dir}/documents.parquet'"""
-    )
-    for i in range(4):
-        con.execute(
-            f"""COPY (SELECT doc_id, text, lang, source, n_chars
-                      FROM dv WHERE q = {i + 1} ORDER BY doc_id)
-                TO '{d}/chunk_{i}.parquet' (FORMAT PARQUET)"""
-        )
-    con.close()
-    base = time.time() - 100
-    for i in range(4):
-        os.utime(os.path.join(d, f"chunk_{i}.parquet"), (base + i, base + i))
-    with open(sentinel, "w") as f:
-        f.write("ok")
-    return d
 
 
 def _minhash_oracle_prefix() -> str:
@@ -933,13 +825,18 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags equal the batch predicate the oracle computes. Band keys are
     the raw signature strings here (minhash_bands string_keys mode):
     flags ARE the final output, so the in-engine-only xxhash64 would
-    leave an unverifiable collision gap. Snapshots are versioned by
-    batch id (the stream_foreachbatch_upsert idempotence device).
+    leave an unverifiable collision gap. The owner index is a delta log
+    (``_DeltaLog``): each batch writes only its own per-bucket mins, and
+    the index a batch probes is the min-fold of the deltas up to it.
 
     These are LSH-candidate flags (the recall stage): production chains
     the exact-Jaccard verify behind them exactly as dedup_minhash does —
     kept out here so the op isolates the streaming-state semantics."""
-    from ..ckpt import release_transient_storage
+    from ..ckpt import (
+        guard_result,
+        pooled_local_checkpoint,
+        release_transient_storage,
+    )
     from ..operators.dedup import _doc_gram_sets_md5, minhash_bands
 
     # Scope the pooled-checkpoint lease snapshot to THIS invocation: without
@@ -948,96 +845,87 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # earlier runs, so LRU eviction of an unrelated entry could spuriously
     # raise CheckpointReleasedError when this result is forced (r13 ADVICE).
     release_transient_storage()
-    d = _materialize_doc_chunks(sf_dir)
-    base = os.path.join(
-        "/tmp/spark_graft_sdedup",
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{time.time_ns()}",
-    )
-    versions: dict[int, str] = {}
+    d = _materialize_chunks(sf_dir, "docs")
     state_schema = "band_id int, bkey string, owner long"
+    with scratch(spark, sf_dir, "sdedup") as base:
+        state, flags = os.path.join(base, "state"), os.path.join(base, "flags")
 
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: the shingling + 64-perm minhash is the batch's dominant
-        # cost and TWO actions read it (the owner-index write and the flag
-        # join) — without the cache each batch ran the signature pipeline
-        # twice (measured ~2x this op's wall time at sf0.1)
-        bands = minhash_bands(
-            _doc_gram_sets_md5(batch_df), string_keys=True
-        ).persist()
-        batch_min = bands.groupBy("band_id", "bkey").agg(
-            F.min("doc_id").alias("owner")
-        )
-        # DELTA snapshots (r17, guide §2.3/§6 — r16 VERDICT task 6): each
-        # version persists only THIS batch's per-bucket mins, not the full
-        # merged owner index — the r16 shape rewrote the entire cumulative
-        # state every micro-batch (O(total_state) bytes per batch, the
-        # dominant per-batch constant at any scale); owner state is a
-        # mergeable MIN, so re-aggregating the union of all deltas ≤ this
-        # batch is exactly the full-snapshot value (replay ≡ batch holds
-        # unchanged). Versioning by batch id keeps the
-        # stream_foreachbatch_upsert idempotence device: a replayed batch
-        # rewrites its OWN delta with identical content (batch_min is a
-        # deterministic function of the batch) and never self-merges.
-        sv = os.path.join(base, "state", f"v{batch_id}")
-        batch_min.write.mode("overwrite").parquet(sv)
-        prev_ids = [b for b in versions if b < batch_id]
-        deltas = spark.read.schema(state_schema).parquet(
-            sv, *(versions[b] for b in prev_ids)
-        )
-        owners = deltas.groupBy("band_id", "bkey").agg(
-            F.min("owner").alias("owner")
-        )
-        flags = (
-            bands.join(owners, ["band_id", "bkey"])
-            .groupBy("doc_id")
-            .agg(
-                F.max(
-                    (F.col("owner") < F.col("doc_id")).cast("int")
-                ).alias("dup")
+        def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # persist: the shingling + 64-perm minhash is the batch's
+            # dominant cost and TWO actions read it (the owner-delta write
+            # and the flag join) — without the cache each batch ran the
+            # signature pipeline twice (measured ~2x this op's wall time
+            # at sf0.1)
+            bands = minhash_bands(
+                _doc_gram_sets_md5(batch_df), string_keys=True
+            ).persist()
+            bands.groupBy("band_id", "bkey").agg(
+                F.min("doc_id").alias("owner")
+            ).write.mode("overwrite").parquet(
+                os.path.join(state, f"v{batch_id}")
             )
-        )
-        flags.write.mode("overwrite").parquet(
-            os.path.join(base, "flags", f"v{batch_id}")
-        )
-        bands.unpersist()
-        versions[batch_id] = sv
+            owners = (
+                _deltas(spark, state, state_schema, upto=batch_id)
+                .groupBy("band_id", "bkey")
+                .agg(F.min("owner").alias("owner"))
+            )
+            bands.join(owners, ["band_id", "bkey"]).groupBy("doc_id").agg(
+                F.max((F.col("owner") < F.col("doc_id")).cast("int")).alias(
+                    "dup"
+                )
+            ).write.mode("overwrite").parquet(
+                os.path.join(flags, f"v{batch_id}")
+            )
+            bands.unpersist()
 
-    stream = _replay(spark, d, _DOC_SCHEMA)
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        with _state_sized_shuffle(spark):  # sizes the per-batch jobs too
-            q = (
-                stream.writeStream.trigger(availableNow=True)
-                .foreachBatch(on_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
+        _run_stream(spark, _replay(spark, d, _DOC_SCHEMA), base, sink=on_batch)
+        fl = _deltas(spark, flags, "doc_id long, dup int")
+        out = (
+            load(spark, sf_dir, "documents")
+            .join(fl, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.coalesce(F.col("dup") == 1, F.lit(False)).alias("is_dup"),
             )
-            q.awaitTermination()
-        _record_progress(q)
-        docs = load(spark, sf_dir, "documents")
-        if not versions:  # empty source: no batch ever fired
-            return docs.select("doc_id", F.lit(False).alias("is_dup"))
-        fl = spark.read.schema("doc_id long, dup int").parquet(
-            os.path.join(base, "flags", "*")
-        )
-        out = docs.join(fl, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(F.col("dup") == 1, F.lit(False)).alias("is_dup"),
         )
         # eager localCheckpoint (pooled), NOT an O(docs) driver collect:
-        # the result must survive the scratch rmtree below, and executor
-        # blocks do that distributedly — the previous
-        # createDataFrame(collect()) shipped the whole corpus's flags
-        # through the driver, data-proportional at 100 TB
-        from ..ckpt import guard_result, pooled_local_checkpoint
-
+        # the result must survive the scratch dir's removal, and executor
+        # blocks do that distributedly
         return guard_result(pooled_local_checkpoint(out))
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
-from ..operators.bpe import ORACLE_DOC_TOKENS_CTES  # noqa: E402 — one CTE chain
+from ..operators.bpe import (  # noqa: E402 — one tokenizer, one CTE chain
+    ORACLE_DOC_TOKENS_CTES,
+    doc_token_counts_pre_rejoin,
+)
+
+
+def _token_delta(batch: DataFrame) -> DataFrame:
+    """(source, n_docs, total_tokens) of one batch. Source rides through
+    the wordless-doc left join directly (one batch-keyed shuffle, not a
+    second join), and coalesce(n_tokens, 0) keeps wordless docs in n_docs
+    with 0 tokens."""
+    return (
+        batch.select("doc_id", "source")
+        .join(doc_token_counts_pre_rejoin(batch), "doc_id", "left")
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum(F.coalesce("n_tokens", F.lit(0)))
+            .cast("long")
+            .alias("total_tokens"),
+        )
+    )
+
+
+_TOKENS = _DeltaLog(
+    "source string, n_docs long, total_tokens long",
+    _token_delta,
+    lambda deltas: deltas.groupBy("source").agg(
+        F.sum("n_docs").alias("n_docs"),
+        F.sum("total_tokens").alias("total_tokens"),
+    ),
+)
 
 
 @query(
@@ -1058,95 +946,27 @@ def stream_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixing weights `sample_temperature` / `sample_mix_rebalance` consume
     are available AS data lands, not after a full-corpus re-scan. Each
     batch runs the SAME byte-level tokenizer as the batch path
-    (bpe.doc_token_counts — real ids for every script), folds to
-    (source, n_docs, total_tokens), and merges with the previous
-    snapshot by summed union into a NEW versioned snapshot keyed by
-    batch id (the stream_foreachbatch_upsert idempotence device).
+    (bpe.doc_token_counts_pre_rejoin — real ids for every script) and
+    writes its (source, n_docs, total_tokens) as its delta
+    (``_DeltaLog``); the totals are the summed fold of all deltas.
 
     Why this op carries a FULL exact-hash oracle like stream_kmv_distinct:
     per-doc token counts are a deterministic pure function of each doc's
-    text, and per-source SUMs are mergeable — any in-order replay of a
-    disjoint chunking telescopes to the one-shot batch aggregate, which
-    is exactly what the oracle computes (the byte-BPE recursive-CTE chain
-    grouped by source). At 100 TB the snapshot is O(sources) rows — the
-    accounting table rides along with ingest for free; the heavy work
-    (the per-DISTINCT-word Arrow encode) is per-batch and
-    vocabulary-sized, identical to the batch plan shape."""
-    d = _materialize_doc_chunks(sf_dir)
-    base = os.path.join(
-        "/tmp/spark_graft_tokbudget",
-        spark.sparkContext.applicationId,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{time.time_ns()}",
+    text, and per-source SUMs are mergeable — any disjoint chunking folds
+    to the one-shot batch aggregate, which is exactly what the oracle
+    computes (the byte-BPE recursive-CTE chain grouped by source). At
+    100 TB each delta is O(sources) rows; the heavy work (the
+    per-DISTINCT-word Arrow encode) is per-batch and vocabulary-sized,
+    identical to the batch plan shape."""
+    d = _materialize_chunks(sf_dir, "docs")
+    return _fold_stream(
+        spark,
+        sf_dir,
+        "tokbudget",
+        _replay(spark, d, _DOC_SCHEMA),
+        _TOKENS,
+        lambda totals: totals,
     )
-    snap_schema = "source string, n_docs long, total_tokens long"
-    versions: dict[int, str] = {}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        # prev is derived from BATCH ID, never from "latest written": on an
-        # at-least-once replay of batch N, the previous snapshot must be the
-        # highest version < N (v{N} itself may already exist from the first
-        # attempt — reading it would double-count N and self-overwrite the
-        # parquet path being read; round-12 ADVICE item 1).
-        # fused delta (r16, guide §2.4): doc_token_counts' own wordless-doc
-        # rejoin (docs ⋈ per_doc LEFT) fed a SECOND join against (doc_id,
-        # source) — two batch-keyed shuffles per micro-batch where one
-        # suffices. Carrying source through the left join directly drops
-        # one join per batch; coalesce(n_tokens, 0) keeps wordless docs in
-        # n_docs with 0 tokens, so the per-source sums are identical.
-        # The per-doc aggregate is bpe's own pre-rejoin builder (r16
-        # ADVICE item 3): ONE tokenizer definition for batch and stream.
-        from ..operators.bpe import doc_token_counts_pre_rejoin
-
-        per_doc = doc_token_counts_pre_rejoin(batch_df)
-        delta = (
-            batch_df.select("doc_id", "source")
-            .join(per_doc, "doc_id", "left")
-            .groupBy("source")
-            .agg(
-                F.count("*").cast("long").alias("n_docs"),
-                F.sum(F.coalesce("n_tokens", F.lit(0)))
-                .cast("long")
-                .alias("total_tokens"),
-            )
-        )
-        prev_ids = [b for b in versions if b < batch_id]
-        if prev_ids:
-            prev = spark.read.schema(snap_schema).parquet(
-                versions[max(prev_ids)]
-            )
-            delta = (
-                prev.unionByName(delta)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("total_tokens").alias("total_tokens"),
-                )
-            )
-        v = os.path.join(base, f"v{batch_id}")
-        delta.write.mode("overwrite").parquet(v)
-        versions[batch_id] = v
-
-    stream = _replay(spark, d, _DOC_SCHEMA)
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        with _state_sized_shuffle(spark):  # sizes the per-batch jobs too
-            q = (
-                stream.writeStream.trigger(availableNow=True)
-                .foreachBatch(merge)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        if not versions:  # empty source: no batch ever fired
-            return spark.createDataFrame([], snap_schema)
-        snap = spark.read.schema(snap_schema).parquet(
-            versions[max(versions)]
-        )
-        # bounded collect: snap is the final keyed snapshot (O(distinct keys)); snapshotted to the driver
-        # because the temp sink it reads is deleted in the finally below
-        return spark.createDataFrame(snap.collect(), snap.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --- custom PYTHON streaming source (pyspark.sql.datasource stream API) ---
@@ -1256,5 +1076,5 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_score"),
         )
     )
-    sink = f"pystream_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, agg, sink, "complete")
+    with scratch(spark, sf_dir, "pystream") as base:
+        return _run_stream(spark, agg, base, "complete")

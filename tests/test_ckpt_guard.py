@@ -169,7 +169,7 @@ def test_stream_chunk_cache_rewrite_miss_and_prune(tmp_path):
         return ids
 
     write_docs([f"alpha doc {i}" for i in range(8)])
-    d1 = streams._materialize_doc_chunks(str(tmp_path))
+    d1 = streams._materialize_chunks(str(tmp_path), "docs")
     assert chunk_docids(d1) == list(range(1, 9))
 
     # back-date the FIRST build far past the grace window before
@@ -181,7 +181,7 @@ def test_stream_chunk_cache_rewrite_miss_and_prune(tmp_path):
     # rewrite IN PLACE with different content (different size => new
     # fingerprint): the cache must rebuild, not replay the stale chunks
     write_docs([f"beta document rewritten {i}" for i in range(12)])
-    d2 = streams._materialize_doc_chunks(str(tmp_path))
+    d2 = streams._materialize_chunks(str(tmp_path), "docs")
     assert d2 != d1
     assert chunk_docids(d2) == list(range(1, 13))
 
@@ -198,14 +198,14 @@ def test_stream_chunk_cache_rewrite_miss_and_prune(tmp_path):
     assert os.path.exists(marker)
 
     # a sweep INSIDE the grace window (marker is fresh) must still skip
-    d2b = streams._materialize_doc_chunks(str(tmp_path))
+    d2b = streams._materialize_chunks(str(tmp_path), "docs")
     assert d2b == d2
     assert sorted(os.listdir(group_dir)) == sorted({live, stale})
 
     # back-date the MARKER past the grace window: the next cache entry
     # must reclaim the dir, leaving only the live fingerprint
     os.utime(marker, (old, old))
-    d3 = streams._materialize_doc_chunks(str(tmp_path))
+    d3 = streams._materialize_chunks(str(tmp_path), "docs")
     assert d3 == d2
     assert os.listdir(group_dir) == [live]
 
@@ -229,3 +229,36 @@ def test_none_fingerprint_is_uncacheable(tmp_path):
     b = streams._chunk_ns(missing, "documents")
     assert "uncached-" in a and a != b
     assert os.path.dirname(a) == os.path.dirname(b)  # same (path) group
+
+
+def test_scratch_nested_distinct_removed_and_pruned(
+    spark, tmp_path, monkeypatch
+):
+    """ckpt.scratch is the one lifecycle for per-invocation scratch files:
+    two nested calls with the same (sf_dir, tag) get distinct dirs; leaving
+    the inner one, normally or by a raised error, removes only that dir
+    (the outer dir and its files survive); empty parents are pruned."""
+    root = tmp_path / "scratch"
+    monkeypatch.setattr(ckpt, "SCRATCH_ROOT", str(root))
+    sf = str(tmp_path / "corpus" / "sf0.01")
+    app_dir = root / spark.sparkContext.applicationId
+    with ckpt.scratch(spark, sf, "t") as outer:
+        assert os.path.dirname(outer) == str(app_dir)
+        assert os.path.basename(outer).startswith("sf0.01-t-")
+        with open(os.path.join(outer, "keep"), "w") as f:
+            f.write("x")
+        with ckpt.scratch(spark, sf, "t") as inner:
+            assert inner != outer and os.path.isdir(inner)
+            with open(os.path.join(inner, "f"), "w") as f:
+                f.write("x")
+        assert not os.path.exists(inner)
+        with pytest.raises(RuntimeError, match="scratch body failed"):
+            with ckpt.scratch(spark, sf, "t") as failed:
+                assert failed not in (inner, outer)
+                os.makedirs(os.path.join(failed, "sub"))
+                raise RuntimeError("scratch body failed")
+        assert not os.path.exists(failed)
+        assert os.listdir(outer) == ["keep"]
+        assert os.listdir(app_dir) == [os.path.basename(outer)]
+    assert not os.path.exists(outer)
+    assert not root.exists(), "empty scratch parents were not pruned"

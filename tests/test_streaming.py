@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from erlang_mapreduce_spark.ckpt import scratch
 from erlang_mapreduce_spark.streaming import streams
 from erlang_mapreduce_spark.streaming.streams import (
     stream_stateful_dedup,
@@ -120,48 +121,39 @@ def test_custom_state_running_counts(spark, sf_dir):
     assert len(final) == ev.select("user_id").distinct().count()
 
 
-def test_foreachbatch_upsert_replay_idempotent(spark, sf_dir, tmp_path):
-    """At-least-once replay pin (r13 VERDICT task 1): foreachBatch may
-    re-deliver a batch whose snapshot version already committed (v{N}
-    written, checkpoint not yet advanced). The merge derives prev from
-    the highest version < batch_id, so re-running the committed batch
-    must (a) leave the final snapshot byte-identical and (b) still equal
-    the one-shot batch argmax/count over all events."""
-    from erlang_mapreduce_spark.streaming.streams import (
-        _UPSERT_SNAP_SCHEMA,
-        _upsert_batch_latest,
-        _upsert_merge_batch,
-    )
+@pytest.mark.parametrize(
+    "log_name, table, key",
+    [
+        ("_UPSERT", "events", "event_id"),
+        ("_KMV", "events", "event_id"),
+        ("_TOKENS", "documents", "doc_id"),
+    ],
+)
+def test_foreachbatch_delta_log_replay_idempotent(
+    spark, sf_dir, tmp_path, log_name, table, key
+):
+    """At-least-once replay pin for the foreachBatch delta logs (upsert,
+    KMV, token budget): foreachBatch may re-deliver a batch whose delta
+    already committed. Writing the deltas of batches 0 and 1, replaying
+    batch 1, then folding must (a) equal the fold without the replay and
+    (b) equal the one-shot batch aggregate over all rows."""
+    log = getattr(streams, log_name)
+    rows = load(spark, sf_dir, table)
+    even = F.coalesce(F.col(key) % 2, F.lit(0)) == 0
+    b0, b1 = rows.filter(even), rows.filter(~even)
+    d = str(tmp_path / "deltas")
 
-    ev = load(spark, sf_dir, "events")
-    b0 = ev.filter(F.col("event_id") % 2 == 0)
-    b1 = ev.filter(F.col("event_id") % 2 == 1)
-    base = str(tmp_path / "upsert")
-    versions: dict[int, str] = {}
-    _upsert_merge_batch(spark, base, versions, b0, 0)
-    _upsert_merge_batch(spark, base, versions, b1, 1)
-    clean = sorted(
-        map(
-            tuple,
-            spark.read.schema(_UPSERT_SNAP_SCHEMA)
-            .parquet(versions[1])
-            .collect(),
-        )
-    )
-    # replay batch 1: with the old cur[-1] shape this merged v1 into
-    # itself (n double-counted, argmax reading its own output)
-    _upsert_merge_batch(spark, base, versions, b1, 1)
-    replayed = sorted(
-        map(
-            tuple,
-            spark.read.schema(_UPSERT_SNAP_SCHEMA)
-            .parquet(versions[1])
-            .collect(),
-        )
-    )
-    assert replayed == clean, "replay of a committed batch changed the snapshot"
-    truth = sorted(map(tuple, _upsert_batch_latest(ev).collect()))
-    assert replayed == truth, "snapshot != one-shot batch argmax/count"
+    def fold():
+        state = log.fold(streams._deltas(spark, d, log.schema))
+        return sorted(map(tuple, state.collect()), key=repr)
+
+    streams._write_delta(log, d, b0, 0)
+    streams._write_delta(log, d, b1, 1)
+    clean = fold()
+    streams._write_delta(log, d, b1, 1)  # the replay
+    assert fold() == clean, "replay of a committed batch changed the fold"
+    truth = sorted(map(tuple, log.summary(rows).collect()), key=repr)
+    assert clean == truth, "folded deltas != one-shot batch aggregate"
 
 
 def test_stream_minhash_state_versions_are_deltas(spark, sf_dir, monkeypatch):
@@ -175,14 +167,14 @@ def test_stream_minhash_state_versions_are_deltas(spark, sf_dir, monkeypatch):
     op's flags are unchanged vs the batch predicate on verbatim texts."""
     import os
 
+    from erlang_mapreduce_spark import ckpt
     from erlang_mapreduce_spark.operators.dedup import (
         _doc_gram_sets_md5,
         minhash_bands,
     )
-    from erlang_mapreduce_spark.streaming import streams
 
     captured: dict[str, list[tuple]] = {}
-    real_rmtree = streams.shutil.rmtree
+    real_rmtree = ckpt.shutil.rmtree
 
     def spy_rmtree(path, **kw):
         st = os.path.join(path, "state")
@@ -198,7 +190,7 @@ def test_stream_minhash_state_versions_are_deltas(spark, sf_dir, monkeypatch):
                 ]
         real_rmtree(path, **kw)
 
-    monkeypatch.setattr(streams.shutil, "rmtree", spy_rmtree)
+    monkeypatch.setattr(ckpt.shutil, "rmtree", spy_rmtree)
     out = streams.stream_minhash_dedup(spark, sf_dir).collect()
     assert len(captured) >= 2, "expected multiple micro-batch versions"
 
@@ -245,19 +237,22 @@ def test_replay_runs_one_task_wave_wide(spark, sf_dir, session_width):
     """A replay's state layout (its shuffle width) is min(session width,
     defaultParallelism, cores) on a local master, read from the query's
     own progress, and the caller's width is back in place afterwards."""
+    from tools.stream_cost_probe import recorded_progress
+
     old = spark.conf.get(_WIDTH)
     spark.conf.set(_WIDTH, str(session_width))
     try:
-        streams.LAST_PROGRESS.pop("__last__", None)
-        stream_stateful_dedup(spark, sf_dir).collect()
+        with recorded_progress(spark) as progress:
+            stream_stateful_dedup(spark, sf_dir).collect()
         assert spark.conf.get(_WIDTH) == str(session_width)
     finally:
         spark.conf.set(_WIDTH, old)
     widths = {
         s["numShufflePartitions"]
-        for p in streams.LAST_PROGRESS["__last__"]
+        for p in progress
         for s in p["stateOperators"]
     }
+    assert widths, "no stateful progress recorded"
     assert spark.sparkContext.master.startswith("local")
     expected = min(
         session_width, spark.sparkContext.defaultParallelism, os.cpu_count()
@@ -274,7 +269,8 @@ def test_replay_width_restored_when_query_raises(spark, sf_dir):
             F.raise_error(F.lit("replay width probe"))
         )
         with pytest.raises(Exception, match="replay width probe"):
-            streams._run_stream(spark, failing, "width_probe_fail", "append")
+            with scratch(spark, sf_dir, "width_probe") as base:
+                streams._run_stream(spark, failing, base)
         assert spark.conf.get(_WIDTH) == "5"
     finally:
         spark.conf.set(_WIDTH, old)

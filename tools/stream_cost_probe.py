@@ -1,9 +1,9 @@
-"""Streaming-replay fixed-cost probe (r14 VERDICT task 7): for the
-expensive replay ops, split each micro-batch's wall time into FIXED
-overhead (trigger planning, offset/WAL bookkeeping, state-store commit)
-vs DATA work, from the query's own StreamingQueryProgress — the numbers
-that decide whether a slow sf0.1 cell is per-batch overhead that
-amortizes on a real cluster or data work that won't.
+"""Streaming-replay fixed-cost probe: for the replay ops, split each
+micro-batch's wall time into FIXED overhead (trigger planning, offset/WAL
+bookkeeping, state-store commit) vs DATA work, from the query's own
+StreamingQueryProgress — the numbers that decide whether a slow sf0.1
+cell is per-batch overhead that amortizes on a real cluster or data work
+that won't.
 
 Per-batch accounting (durationMs fields):
   total       = triggerExecution                  (wall)
@@ -17,13 +17,20 @@ Per-batch accounting (durationMs fields):
                 separately because it is cumulative CPU, not wall: it
                 shows how much of exec_wall is state-checkpoint work
 
+Each op is sampled SAMPLES times; the table reports the median of every
+column and the min-max of the op's wall time. Progress is read from a
+StreamingQueryListener, drained with the listener bus's waitUntilEmpty.
+
 Writes a marker-delimited section into SCALING.md. Run on an idle box:
     python tools/stream_cost_probe.py
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import statistics
 import sys
 import time
 
@@ -39,49 +46,86 @@ OPS = (
     "stream_watermark_late",
     "stream_minhash_dedup",
     "stream_stream_join",
+    "stream_foreachbatch_upsert",
+    "stream_kmv_distinct",
+    "stream_token_budget",
+    "stream_file_sink",
 )
+SAMPLES = 5
 
 MARK_S, MARK_E = "<!-- stream-cost:start -->", "<!-- stream-cost:end -->"
 
 
-def probe(spark, sf_dir: str):
-    rows = []
-    for op in OPS:
-        streams.LAST_PROGRESS.pop("__last__", None)
+@contextlib.contextmanager
+def recorded_progress(spark):
+    """Yield a list that collects the JSON progress of every micro-batch
+    of every streaming query the body runs; the listener bus is drained
+    before the body's exit returns, so the list is complete."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    progress: list[dict] = []
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        yield progress
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def sample(spark, sf_dir: str, op: str) -> dict:
+    """One timed run of ``op`` with its per-batch split."""
+    with recorded_progress(spark) as prog:
         t0 = time.perf_counter()
         QUERIES[op](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         wall = time.perf_counter() - t0
-        release_transient_storage()
-        prog = streams.LAST_PROGRESS.get("__last__", [])
-        n, tot, fixed, execw, st_task, in_rows = len(prog), 0.0, 0.0, 0.0, 0.0, 0
-        for p in prog:
-            d = p.get("durationMs", {})
-            t = d.get("triggerExecution", 0)
-            ab = d.get("addBatch", 0)
-            tot += t
-            fixed += t - ab
-            execw += ab
-            st_task += sum(
-                s.get("commitTimeMs", 0)
-                for s in p.get("stateOperators", []) or []
-            )
-            in_rows += p.get("numInputRows", 0)
-        rows.append(
-            {
-                "op": op,
-                "wall": round(wall, 2),
-                "batches": n,
-                "batch_ms": round(tot / n, 0) if n else 0,
-                "fixed_ms": round(fixed, 0),
-                "exec_ms": round(execw, 0),
-                "state_task_ms": round(st_task, 0),
-                "fixed_pct": round(100 * fixed / tot, 1) if tot else 0.0,
-                "rows": in_rows,
-            }
+    release_transient_storage()
+    tot = fixed = st_task = 0.0
+    for p in prog:
+        d = p.get("durationMs", {})
+        t = d.get("triggerExecution", 0)
+        tot += t
+        fixed += t - d.get("addBatch", 0)
+        st_task += sum(
+            s.get("commitTimeMs", 0) for s in p.get("stateOperators", []) or []
         )
-        print(rows[-1], flush=True)
+    n = len(prog)
+    return {
+        "wall": wall,
+        "batches": n,
+        "batch_ms": tot / n if n else 0.0,
+        "fixed_ms": fixed,
+        "exec_ms": tot - fixed,
+        "state_task_ms": st_task,
+        "fixed_pct": 100 * fixed / tot if tot else 0.0,
+    }
+
+
+def probe(spark, sf_dir: str) -> list[dict]:
+    rows = []
+    for op in OPS:
+        runs = [sample(spark, sf_dir, op) for _ in range(SAMPLES)]
+        row = {k: statistics.median(r[k] for r in runs) for k in runs[0]}
+        walls = [r["wall"] for r in runs]
+        row.update(op=op, wall_min=min(walls), wall_max=max(walls))
+        rows.append(row)
+        print(json.dumps(row), flush=True)
     return rows
 
 
@@ -122,38 +166,31 @@ def main() -> None:
         "fixture), while exec minus state commit is what scales with",
         "volume.",
         "",
-        "| op | wall (s) | batches | avg batch (ms) | fixed (ms) |"
-        " exec (ms) | state (task-ms) | fixed % |",
+        f"Every column is the median of {SAMPLES} samples per op; the"
+        " wall column adds the min-max over those samples.",
+        "",
+        "| op | wall (s), median (min-max) | batches | avg batch (ms) |"
+        " fixed (ms) | exec (ms) | state (task-ms) | fixed % |",
         "|---|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         lines.append(
-            f"| {r['op']} | {r['wall']:.2f} | {r['batches']} "
+            f"| {r['op']} | {r['wall']:.2f} ({r['wall_min']:.2f}-"
+            f"{r['wall_max']:.2f}) | {r['batches']:.0f} "
             f"| {r['batch_ms']:.0f} | {r['fixed_ms']:.0f} "
             f"| {r['exec_ms']:.0f} | {r['state_task_ms']:.0f} "
             f"| {r['fixed_pct']:.1f} |"
         )
     lines += [
         "",
-        "Reading this against the isolated BENCH cells (12-13 s for the",
-        "memory-sink stateful ops): the query itself takes the wall",
-        "above; the remainder of an isolated cell is fresh-session",
-        "JVM/codegen + chunk materialization OUTSIDE the streaming query —",
-        "session constants, not per-batch or per-row cost. Within the",
-        "query, fixed-per-batch (driver planning/WAL ~100-200 ms + one",
-        "task wave of state-store commits per operator) dominates exec",
-        "because sf0.1 batches are tiny; stream_minhash_dedup is the",
-        "exception — its exec is real banding/join/state-version work",
-        "(data-proportional, the foreachBatch pipeline), with fixed <4%.",
-        "",
-        "r15 isolated refresh (tools/isolated_timing.py, chunk cache",
-        "warm): stream_stateful_dedup 2.43 s, stream_watermark_late",
-        "2.85 s, stream_stream_join 4.94 s — the r14 12-13 s isolated",
-        "cells included FIRST-TIME chunk materialization (duckdb quantile",
-        "split + parquet write), a per-corpus one-off, not query cost.",
-        "stream_minhash_dedup 10.07 s is the data-work exception",
-        "documented above. Three of the four cells are now under the 8 s",
-        "target; the fourth is justified.",
+        "Within the query, fixed-per-batch (driver planning/WAL plus one",
+        "task wave of state-store commits per stateful operator)",
+        "dominates exec because sf0.1 batches are tiny.",
+        "stream_minhash_dedup is the exception: its exec is real",
+        "banding/join/delta-read work, data-proportional. The",
+        "foreachBatch ops (upsert, KMV, token budget) and the file sink",
+        "keep no state store; their exec is the per-batch delta or file",
+        "write.",
         "",
         "Chunk-cadence decision: the 4-quantile (+1 late/dup) replay is",
         "NOT a tunable batch size for these ops — it IS the semantics",
