@@ -54,32 +54,16 @@ _DEFAULTS = {
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     """Set runtime SQL confs for the duration of a block, restoring the
-    caller's values (or unsetting keys the session never had) on exit.
+    caller's values (or unsetting keys the session never had) on exit,
+    also when the block raises.
 
-    Only affects executions that START inside the block — Spark snapshots
-    the session conf when a query begins, so this is useful exactly for
-    operators that materialize EAGERLY inside their own body (an action,
-    a write, a localCheckpoint). A lazily returned plan executes later
-    under whatever conf is live then; scoping it here would be a silent
-    no-op, which is why graph_pagerank checkpoints its (tiny) result
-    inside the scope instead of returning the raw lazy plan.
+    Only executions that START inside the block see the scoped values:
+    Spark snapshots the session conf when a query begins, so a lazily
+    returned plan runs under whatever conf is live when it is forced.
 
-    Single-threaded-session assumption: the override mutates the
-    SESSION-GLOBAL runtime conf, so a query launched concurrently from
-    another thread of the same session during the block would snapshot
-    (and silently run under) the scoped values. The engine's contract is
-    one driving thread per session (bench, driver, and tests all comply);
-    concurrent drivers should use separate sessions
-    (``SparkSession.newSession()`` shares the context but not the conf).
-
-    Motivation (round-6 regression): the session-wide AQE
-    coalescePartitions.minPartitionSize=32k floor keeps CPU-heavy gram
-    shuffles from collapsing to one task, but it also pinned
-    graph_pagerank's ~8 tiny exchanges at ~32 near-empty tasks each
-    (measured 2.49 s → 4.75 s at sf0.1) and multiplied
-    pipeline_dataset_export's shard-file count. Those byte-light ops scope
-    the floor back to Spark's default here rather than dragging the whole
-    session's tuning with them."""
+    The values are session-global while the block runs, so this assumes
+    one driving thread per session; concurrent drivers need separate
+    sessions (``SparkSession.newSession()``)."""
     saved: dict[str, str | None] = {}
     for k, v in confs.items():
         # get(k) with no default falls back to Spark's BUILT-IN default

@@ -17,7 +17,6 @@ because chunk boundaries are fixed quantiles of ts.
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import os
 import re
@@ -34,6 +33,7 @@ from pyspark.sql import types as T
 from ..ckpt import scratch
 from ..exact import md5_prefix_int
 from ..registry import query
+from ..session import scoped_conf
 from ..tables import fingerprint, load
 
 CHUNK_ROOT = "/tmp/spark_graft_stream_chunks"
@@ -198,22 +198,28 @@ def _materialize_chunks(sf_dir: str, mode: str) -> str:
 # cores): each micro-batch commits its stores in one task wave, and the
 # layout still grows with the cluster. Results do not depend on the width
 # (every op here is oracle-checked at any width).
-@contextlib.contextmanager
-def _state_sized_shuffle(spark: SparkSession):
-    """Pin spark.sql.shuffle.partitions to one task wave for the duration
-    of a replay (set before .start(), held through awaitTermination —
-    micro-batches plan while the query drains), then restore the caller's
-    value, also when the query raises."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+def _replay_width(spark: SparkSession) -> int:
+    """The shuffle width a replay runs at under the session's live conf."""
     sc = spark.sparkContext
-    width = min(int(prev), sc.defaultParallelism)
+    width = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        sc.defaultParallelism,
+    )
     if sc.master.startswith("local"):
         width = min(width, os.cpu_count() or width)
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return width
+
+
+# Replay checkpoints (offset WAL, commit log, state-store deltas) are
+# written through the FileSystem API. The default FileContext manager, on a
+# host without native libhadoop (pip PySpark ships none), shells out to
+# chmod/stat for every checkpoint file. FileSystem-based writes are safe
+# here: the checkpoint is a per-invocation local scratch dir with a single
+# writer, and a local rename is atomic.
+_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def _replay(
@@ -235,11 +241,12 @@ def _run_stream(
     sink: str | Callable[[DataFrame, int], None] = "memory",
 ) -> DataFrame | None:
     """The one drain: start ``stream`` with availableNow, checkpointing
-    under the scratch dir ``base``, and await it at the replay shuffle
-    width. ``sink`` is "memory" (returns the result table), "parquet"
-    (files under ``base``, exactly-once through the ``_spark_metadata``
-    log; returns their committed read-back, valid while ``base`` lives)
-    or a foreachBatch function (returns None)."""
+    under the scratch dir ``base`` through ``_CHECKPOINT_MANAGER``, and
+    await it at the replay shuffle width; the caller's confs are back on
+    return or raise. ``sink`` is "memory" (returns the result table),
+    "parquet" (files under ``base``, exactly-once through the
+    ``_spark_metadata`` log; returns their committed read-back, valid
+    while ``base`` lives) or a foreachBatch function (returns None)."""
     path = os.path.join(base, "data")
     name = "stream_" + re.sub(r"\W", "_", os.path.basename(base))
     w = (
@@ -254,7 +261,17 @@ def _run_stream(
     else:
         w = w.format("memory").queryName(name)
     try:
-        with _state_sized_shuffle(spark):
+        # held through awaitTermination: micro-batches plan and commit
+        # while the query drains
+        with scoped_conf(
+            spark,
+            {
+                "spark.sql.shuffle.partitions": str(_replay_width(spark)),
+                "spark.sql.streaming.checkpointFileManagerClass": (
+                    _CHECKPOINT_MANAGER
+                ),
+            },
+        ):
             w.start().awaitTermination()
         if sink == "parquet":
             return spark.read.schema(stream.schema).parquet(path)

@@ -125,7 +125,7 @@ def test_shared_cache_fingerprint_miss_on_rewrite(spark, sf_dir, tmp_path):
     assert n2 == n1  # same bytes -> same member map, freshly rebuilt
 
 
-def test_stream_chunk_cache_rewrite_miss_and_prune(tmp_path):
+def test_stream_chunk_cache_rewrite_miss_and_prune(tmp_path, monkeypatch):
     """The streaming chunk cache must (a) miss when a corpus is rewritten
     in place — round-8 ADVICE: the basename-keyed cache replayed STALE
     chunks behind its .done sentinel — (b) LEAVE the superseded
@@ -141,6 +141,10 @@ def test_stream_chunk_cache_rewrite_miss_and_prune(tmp_path):
     import duckdb
 
     from erlang_mapreduce_spark.streaming import streams
+
+    # a chunk root of this test's own: an older fingerprint dir left by
+    # an earlier run at the same tmp_path cannot join the group listing
+    monkeypatch.setattr(streams, "CHUNK_ROOT", str(tmp_path / "chunks"))
 
     def write_docs(texts):
         con = duckdb.connect()

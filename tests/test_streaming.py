@@ -260,9 +260,52 @@ def test_replay_runs_one_task_wave_wide(spark, sf_dir, session_width):
     assert widths == {expected}
 
 
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _set_or_unset(spark, key, value):
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
+@pytest.mark.parametrize("preset", [None, _FILE_CONTEXT_MANAGER])
+def test_replay_checkpoints_through_filesystem_manager(spark, sf_dir, preset):
+    """Every micro-batch of a drain runs with the FileSystem-based
+    checkpoint manager, read from the batch's own session; afterwards the
+    caller's value is back: unset when it was never set, the old value
+    when it was."""
+    seen = []
+    old = spark.conf.get(_MANAGER, None)
+    _set_or_unset(spark, _MANAGER, preset)
+    try:
+        d = streams._materialize_chunks(sf_dir, "plain")
+        with scratch(spark, sf_dir, "manager_probe") as base:
+            streams._run_stream(
+                spark,
+                streams._replay(spark, d),
+                base,
+                sink=lambda df, i: seen.append(
+                    df.sparkSession.conf.get(_MANAGER, None)
+                ),
+            )
+        assert spark.conf.get(_MANAGER, None) == preset
+    finally:
+        _set_or_unset(spark, _MANAGER, old)
+    assert seen, "no micro-batch reached the sink"
+    assert set(seen) == {streams._CHECKPOINT_MANAGER}
+
+
 def test_replay_width_restored_when_query_raises(spark, sf_dir):
     old = spark.conf.get(_WIDTH)
+    old_manager = spark.conf.get(_MANAGER, None)
     spark.conf.set(_WIDTH, "5")
+    spark.conf.unset(_MANAGER)
     try:
         d = streams._materialize_chunks(sf_dir, "plain")
         failing = streams._replay(spark, d).select(
@@ -272,5 +315,7 @@ def test_replay_width_restored_when_query_raises(spark, sf_dir):
             with scratch(spark, sf_dir, "width_probe") as base:
                 streams._run_stream(spark, failing, base)
         assert spark.conf.get(_WIDTH) == "5"
+        assert spark.conf.get(_MANAGER, None) is None
     finally:
         spark.conf.set(_WIDTH, old)
+        _set_or_unset(spark, _MANAGER, old_manager)

@@ -140,8 +140,7 @@ def main() -> None:
     ).mode("overwrite").save()
     release_transient_storage()
     rows = probe(spark, sf_dir)
-    with streams._state_sized_shuffle(spark):
-        width = spark.conf.get("spark.sql.shuffle.partitions")
+    width = streams._replay_width(spark)
 
     lines = [
         MARK_S,
@@ -150,7 +149,9 @@ def main() -> None:
         "",
         f"Measured on {os.cpu_count()} cores, master"
         f" `{spark.sparkContext.master}`, replay shuffle width {width}"
-        " (one state store per width partition per stateful operator).",
+        " (one state store per width partition per stateful operator),"
+        " checkpoints written through"
+        f" `{streams._CHECKPOINT_MANAGER.rsplit('.', 1)[-1]}`.",
         "",
         "Per-micro-batch wall split from StreamingQueryProgress at sf0.1:",
         "`fixed` = driver-serial trigger planning + offset-log + WAL",
@@ -161,10 +162,15 @@ def main() -> None:
         "operator; task-parallel CPU inside exec, NOT wall —",
         "it shows how much of exec is state checkpointing when the data",
         "share is tiny). Fixed share at sf0.1 is the 4-5-chunk replay",
-        "cadence's per-batch constant: it amortizes as batches carry more",
-        "data (production batches are GBs, not quartiles of a 60k-row",
-        "fixture), while exec minus state commit is what scales with",
-        "volume.",
+        "cadence's per-batch constant, and it does not simply amortize as",
+        "batches carry more data: part of it is per checkpoint FILE (one",
+        "offset-log and one commit-log entry per batch, one state-store",
+        "delta per state partition per batch), so it scales with batches",
+        "x state partitions, not rows. Through the default FileContext",
+        "checkpoint manager on a host without native libhadoop, each such",
+        "file also cost several chmod/stat subprocess launches; the",
+        "FileSystem-based manager the drain uses cuts most of those. Exec",
+        "minus state commit is what scales with volume.",
         "",
         f"Every column is the median of {SAMPLES} samples per op; the"
         " wall column adds the min-max over those samples.",
@@ -204,8 +210,8 @@ def main() -> None:
         "(each batch probes state built by earlier batches). Raising",
         "maxFilesPerTrigger to coalesce chunks would collapse each of",
         "these into the batch op and void the oracle's premise, so the",
-        "per-batch fixed cost stays — and amortizes at production batch",
-        "sizes, as the fixed-vs-data split above shows.",
+        "per-batch fixed cost stays: its row-independent part grows with",
+        "the number of checkpoint files, not with the data.",
         "",
         MARK_E,
     ]
