@@ -384,7 +384,7 @@ def main() -> None:
 
     # Cold first-invocation probes for the shared-cache consumers (r16
     # VERDICT task 2): every op below reads at least one table built via
-    # dedup._shared_materialize (gram sets, member map, jaccard pairs,
+    # ckpt.shared_checkpoint (gram sets, member map, jaccard pairs,
     # substring spans), so its warm official cell NEVER includes the
     # one-time shared build — the untimed warmup pays it. One probe per
     # op, shared caches cleared first, makes the build-inclusive cost a
@@ -394,7 +394,6 @@ def main() -> None:
     # an official cell, in the same (warm-JVM) session so cold isolates
     # the cache state, not JVM startup.
     from erlang_mapreduce_spark.ckpt import release_shared
-    from erlang_mapreduce_spark.operators import dedup as _dedup_mod
 
     SHARED_CONSUMERS = (
         "dedup_ngram_jaccard",
@@ -409,7 +408,6 @@ def main() -> None:
     shared_cold: dict[str, dict[str, float]] = {}
     for name in SHARED_CONSUMERS:
         release_shared()
-        _dedup_mod._DURABLE_SHARED.clear()
         release_transient_storage()
         t0 = time.perf_counter()
         _force(QUERIES[name](spark, sf_dir))

@@ -1,70 +1,41 @@
-"""Transient-storage lifecycle for materialization-heavy operators.
+"""Materialization lifecycle: pooled, shared and scratch storage.
 
-Why this exists (BENCH_r03 lesson): the pair-dedup ops truncate lineage
-with ``localCheckpoint`` and pagerank ``cache()``-es its edge table, but
-nothing ever FREED those executor-local blocks — repeated invocations in
-one long-lived JVM (the bench's median-of-3, the driver's 50-query sweep)
-accumulated storage until eviction pressure produced 2× cross-pass
-variance on dedup_cluster_cc (5.07/6.26/11.74 s) and dedup_minhash
-(2.69/2.37/6.13 s) while every non-checkpointing query stayed stable.
+- Pooled (``pooled_checkpoint``, ``pooled_persist``): a table that one
+  operator invocation reads several times. It is held until the next
+  ``release_transient_storage()``, which every pooled op calls on entry.
+- Shared (``shared_checkpoint``): a table derived from a corpus's
+  documents that several operators of one session reuse. It is held in an
+  LRU of ``_SHARED_CAP`` entries until evicted.
+- Scratch (``scratch``): files an op writes and reads back within one
+  invocation, removed when the op's block exits.
 
-Three tools, matched to three materialization kinds:
+``_durable_dir`` alone decides where a checkpoint lives. With
+``SPARK_GRAFT_CHECKPOINT_DIR`` unset it is executor-local blocks
+(``localCheckpoint``: fast, unreplicated, so losing an executor fails the
+query). With it set it is a parquet snapshot at a fresh
+``<dir>/<applicationId>/<desc>-<time_ns>``, which survives executor loss.
 
-- ``pooled_persist(df)`` — for *non-iterative* reuse (a table read by 2-3
-  consumers of one query): plain ``persist()`` registered in a pool.
-  Unpersisting a persisted plan is ALWAYS safe — if some still-lazy plan
-  references it later, Spark just recomputes from lineage (and on a real
-  cluster that recompute path is also what makes executor loss survivable,
-  unlike localCheckpoint's unreplicated blocks which fail the job).
-- ``free_local_checkpoint(df)`` — for *iterative* lineage truncation
-  (connected components), where ``localCheckpoint`` is genuinely needed:
-  drops the checkpointed blocks through the JVM handle
-  (``queryExecution().analyzed().rdd()``), since ``DataFrame.unpersist``
-  only talks to the CacheManager and ignores RDD-level persistence.
-  Freeing a checkpointed plan's blocks makes RE-executing that exact plan
-  impossible (lineage was truncated), so callers only free blocks that are
-  provably superseded — see ``connected_components``'s per-round release —
-  or park the final round's blocks in the pool for the next invocation.
-- ``shared_local_checkpoint(key, builder)`` — for tables REUSED ACROSS
-  operator invocations (the verbatim-rep member map and the per-doc gram
-  sets feed dedup_ngram_jaccard, dedup_containment, dedup_minhash, and
-  dedup_cluster_cc's internal jaccard): a small keyed LRU of eager
-  localCheckpoints that ``release_transient_storage`` deliberately does
-  NOT drain, so one (session, corpus) pays each build exactly once.
-  Keys embed the corpus fingerprint (file stats), so a rewritten
-  fixture at the same path misses rather than returning stale data.
-
-``release_transient_storage()`` drains the per-invocation pool. Every
-pooled op calls it on entry (so invocation N+1 frees invocation N's blocks
-even when nobody else does), and ``bench.py`` calls it between timed
-passes (outside the timed region).
-
-Stale-read guard: a returned lazy DataFrame whose plan reads pooled or
-parked checkpoint blocks would die with Spark's raw "checkpoint block not
-found" if forced after a later pooled op released those blocks. The
-contract is now ENFORCED, not conventional: every block grant carries a
-``BlockLease``, ops wrap their returned plan with ``guard_result``, and a
-guarded DataFrame re-checks its leases on every use — a stale force
-raises :class:`CheckpointReleasedError` naming the releasing op instead
-of a Spark internals error. Shared-cache leases die only on LRU eviction,
-so results that depend exclusively on shared tables stay forceable across
-op invocations.
-
-Scratch files: ``scratch(spark, sf_dir, tag)`` is the one lifecycle for
-the throwaway files an op writes and reads back within one invocation
-(sinks it accounts against, streaming checkpoints, foreachBatch deltas).
+Every grant carries a ``BlockLease``. Freeing the storage (dropping the
+blocks, or deleting the snapshot through the Hadoop FileSystem API) kills
+the lease. Ops wrap their returned plan with ``guard_result``; forcing a
+guarded plan whose storage was freed raises ``CheckpointReleasedError`` in
+both modes, not a Spark block-not-found or file-not-found error.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import shutil
 import time
+import warnings
 from collections import OrderedDict
-from typing import Callable, Iterator
+from typing import Callable, Iterator, NamedTuple
 
 from pyspark.sql import DataFrame
+
+from .tables import fingerprint
 
 try:  # Spark 4 layout: the instantiable implementation is the classic one
     from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
@@ -105,14 +76,14 @@ def scratch(spark, sf_dir: str, tag: str) -> Iterator[str]:
 
 
 class CheckpointReleasedError(RuntimeError):
-    """A lazy result backed by executor-local checkpoint blocks was forced
-    after those blocks were released (by a later pooled-operator invocation
+    """A lazy result backed by checkpoint blocks or a snapshot was forced
+    after that storage was released (by a later pooled-operator invocation
     or a shared-cache eviction). Force or collect a pooled op's result
     before invoking the next pooled op, or re-run the query."""
 
 
 class BlockLease:
-    """Liveness token for one grant of checkpoint/persist blocks."""
+    """Liveness token for one grant of checkpoint/persist storage."""
 
     __slots__ = ("alive", "desc")
 
@@ -124,142 +95,210 @@ class BlockLease:
         self.alive = False
 
 
-# (kind, df, lease) where kind is "persist" (unpersist is always safe) or
-# "ckpt" (blocks are dropped via the JVM handle; plan must be done).
-_POOL: list[tuple[str, DataFrame, BlockLease]] = []
+class _Held(NamedTuple):
+    df: DataFrame
+    lease: BlockLease
+    free: Callable[[], None]  # drops the blocks or deletes the snapshot
+
+
+# Per-invocation storage, freed by release_transient_storage().
+_POOL: list[_Held] = []
 
 # Leases granted since the last release_transient_storage(): the set a
 # returned plan built "now" may depend on. guard_result snapshots it.
 _CURRENT_LEASES: list[BlockLease] = []
 
-# Cross-invocation keyed cache: key -> (df, lease). Bounded LRU; eviction
-# frees blocks and kills the lease.
-_SHARED: "OrderedDict[object, tuple[DataFrame, BlockLease]]" = OrderedDict()
-# 8 = one corpus's full shared-table set (members, rep docs, 2× gram sets,
-# jaccard pairs, substring spans — 6 as of r16) plus headroom: sitting
-# exactly at the cap made every additional shared key evict a live LRU
-# entry mid-pass (the r13-ADVICE thrash class this cap exists to avoid).
+# Cross-invocation keyed cache, least recently used first. Holds at most
+# _SHARED_CAP entries; eviction frees the storage and kills the lease.
+_SHARED: "OrderedDict[object, _Held]" = OrderedDict()
+# One corpus's full shared-table set plus headroom, so a further key does
+# not evict a live entry in the middle of a pass.
 _SHARED_CAP = 8
 
 
+def _drop(h: _Held) -> None:
+    try:
+        h.free()
+    except Exception as e:
+        # the block handle is Spark-internal API and the snapshot's file
+        # system may be gone; leaking storage beats failing a correct query
+        warnings.warn(f"could not free {h.lease.desc}: {e!r}")
+    h.lease.kill()
+
+
+def _evict(cap: int) -> None:
+    while len(_SHARED) > cap:
+        _drop(_SHARED.popitem(last=False)[1])
+
+
 def set_shared_cap(n: int) -> int:
-    """Resize the shared-checkpoint LRU cap; returns the PREVIOUS cap so
-    callers restore the caller's value rather than a hardcoded default
-    (r14 ADVICE: a hardcoded restore clobbers non-default caps and drifts
-    if this module's default changes). Sweep/bench tooling that
-    alternates corpora (warmup SF + timed SF ⇒ ~10 live keys) raises this
-    so warming one corpus does not evict the other's gram-set/pair-graph
-    entries — otherwise every timed dedup cell silently includes a full
-    shared-table rebuild (r13 ADVICE item 2). Shrinking evicts LRU-first."""
+    """Resize the shared LRU, evicting least-recently-used entries down to
+    ``n``; returns the previous cap, which the caller restores."""
     global _SHARED_CAP
-    prev = _SHARED_CAP
-    _SHARED_CAP = n
-    while len(_SHARED) > _SHARED_CAP:
-        _, (old, old_lease) = _SHARED.popitem(last=False)
-        free_local_checkpoint(old)
-        old_lease.kill()
+    prev, _SHARED_CAP = _SHARED_CAP, n
+    _evict(n)
     return prev
 
 
+def _durable_dir() -> str | None:
+    """The one read of ``SPARK_GRAFT_CHECKPOINT_DIR``: a directory any
+    Hadoop FileSystem resolves, where checkpoints become parquet snapshots;
+    None keeps them as executor-local blocks. Read per call."""
+    return os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
+
+
+def _snapshot(df: DataFrame, root: str, desc: str) -> _Held:
+    """Write ``df`` to a fresh parquet dir ``<root>/<applicationId>/
+    <desc>-<time_ns>`` and hold the read-back; freeing deletes the dir."""
+    spark = df.sparkSession
+    path = os.path.join(
+        root, spark.sparkContext.applicationId, f"{desc}-{time.time_ns()}"
+    )
+    df.write.parquet(path)  # error-if-exists: never clobbers a twin
+
+    def delete() -> None:
+        sc = spark.sparkContext
+        p = sc._jvm.org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
+
+    return _Held(
+        spark.read.parquet(path), BlockLease(f"snapshot {desc}"), delete
+    )
+
+
 def free_local_checkpoint(df: DataFrame) -> None:
-    """Drop the executor-local blocks behind a localCheckpointed DataFrame.
-
-    Reaches through py4j to the ``LogicalRDD`` the checkpoint produced —
-    the only handle that owns the persisted internal RDD (``df.rdd`` would
-    build a NEW conversion RDD whose unpersist is a no-op on the blocks).
-    Defensive except: the accessor chain is Spark-internal API; on a Spark
-    where it moved, leaking the block (old behavior) beats crashing a
-    correct query.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    """Drop the executor-local blocks behind a localCheckpointed DataFrame,
+    through the ``LogicalRDD`` the checkpoint produced: the only handle
+    that owns the persisted internal RDD (``df.rdd`` builds a new
+    conversion RDD, and ``DataFrame.unpersist`` only reaches the
+    CacheManager)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def pooled_local_checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` + register the blocks for release at the next
-    ``release_transient_storage()``. Use only when lineage truncation is
-    required AND the checkpointed plan will not be re-executed after the
-    next pooled operator runs — results derived from it must pass through
-    ``guard_result`` so a late force fails with a named error."""
-    ck = df.localCheckpoint()
-    lease = BlockLease("pooled localCheckpoint")
-    _POOL.append(("ckpt", ck, lease))
-    _CURRENT_LEASES.append(lease)
-    return ck
+def _local(ck: DataFrame, desc: str) -> _Held:
+    return _Held(
+        ck, BlockLease(desc), functools.partial(free_local_checkpoint, ck)
+    )
+
+
+def _pool(h: _Held) -> DataFrame:
+    _POOL.append(h)
+    _CURRENT_LEASES.append(h.lease)
+    return h.df
 
 
 def park_local_checkpoint(df: DataFrame) -> None:
-    """Register an ALREADY-localCheckpointed DataFrame whose blocks must
-    outlive the current function (a returned plan reads them) but become
-    garbage once the next pooled operator starts."""
-    lease = BlockLease("parked localCheckpoint")
-    _POOL.append(("ckpt", df, lease))
-    _CURRENT_LEASES.append(lease)
+    """Pool an already-localCheckpointed DataFrame: its blocks are freed at
+    the next ``release_transient_storage()``."""
+    _pool(_local(df, "pooled localCheckpoint"))
+
+
+def pooled_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``localCheckpoint`` pooled until the next
+    ``release_transient_storage()``. Results derived from it must pass
+    through ``guard_result``."""
+    ck = df.localCheckpoint(eager)
+    park_local_checkpoint(ck)
+    return ck
+
+
+def pooled_checkpoint(
+    df: DataFrame, desc: str, eager: bool = True
+) -> DataFrame:
+    """Truncate ``df``'s lineage, pooled until the next
+    ``release_transient_storage()``: ``pooled_local_checkpoint`` in local
+    mode, a snapshot (always written eagerly) in durable mode. For a table
+    several branches of one query read, eager beats ``persist()``, whose
+    consumers race to fill the cache inside one job. Results derived from
+    it must pass through ``guard_result``."""
+    root = _durable_dir()
+    if root is None:
+        return pooled_local_checkpoint(df, eager)
+    return _pool(_snapshot(df, root, desc))
+
+
+def release(df: DataFrame) -> None:
+    """Free one pooled checkpoint before the next release, for a caller
+    that knows nothing reads it any more (a superseded round of an
+    iteration). Its lease leaves the current set, so ``guard_result``
+    does not see it."""
+    for i, h in enumerate(_POOL):
+        if h.df is df:
+            del _POOL[i]
+            _CURRENT_LEASES.remove(h.lease)
+            _drop(h)
+            return
+    raise KeyError("not a pooled checkpoint")
 
 
 def pooled_persist(df: DataFrame) -> DataFrame:
-    """``persist()`` + register for release at the next
-    ``release_transient_storage()``. Safe for any reuse pattern — an
-    unpersisted plan silently recomputes (no lease needed for correctness,
-    but one is granted so guard semantics stay uniform)."""
+    """``persist()`` pooled until the next ``release_transient_storage()``.
+    Safe for any reuse pattern: an unpersisted plan recomputes from
+    lineage, so its lease never enters the set ``guard_result`` checks."""
     p = df.persist()
-    lease = BlockLease("pooled persist")
-    _POOL.append(("persist", p, lease))
+    _POOL.append(_Held(p, BlockLease("pooled persist"), p.unpersist))
     return p
+
+
+def _shared(key: object, build: Callable[[], _Held]) -> DataFrame:
+    h = _SHARED.get(key)
+    if h is None:
+        h = _SHARED[key] = build()
+        _evict(_SHARED_CAP)
+    else:
+        _SHARED.move_to_end(key)
+    _CURRENT_LEASES.append(h.lease)
+    return h.df
 
 
 def shared_local_checkpoint(
     key: object, builder: Callable[[], DataFrame], desc: str = ""
 ) -> DataFrame:
-    """Keyed, LRU-bounded, eager ``localCheckpoint`` cache for tables that
-    several OPERATORS of one session reuse (gram sets, member maps). On a
-    hit the build is skipped entirely; on a miss ``builder()`` runs once.
-    Entries survive ``release_transient_storage`` — they die only by LRU
-    eviction (blocks freed, lease killed, so guarded dependents fail with
-    the named error rather than a raw block-not-found)."""
-    hit = _SHARED.get(key)
-    if hit is not None:
-        _SHARED.move_to_end(key)
-        df, lease = hit
-        _CURRENT_LEASES.append(lease)
-        return df
-    ck = builder().localCheckpoint()
-    lease = BlockLease(f"shared localCheckpoint {desc or key!r}")
-    _SHARED[key] = (ck, lease)
-    _CURRENT_LEASES.append(lease)
-    while len(_SHARED) > _SHARED_CAP:
-        _, (old, old_lease) = _SHARED.popitem(last=False)
-        free_local_checkpoint(old)
-        old_lease.kill()
-    return ck
+    """Eager ``localCheckpoint`` of ``builder()`` in the shared LRU under
+    ``key``; a hit skips the build. Entries survive
+    ``release_transient_storage`` and die only by eviction."""
+    return _shared(
+        key,
+        lambda: _local(
+            builder().localCheckpoint(),
+            f"shared localCheckpoint {desc or key!r}",
+        ),
+    )
+
+
+def shared_checkpoint(
+    spark, sf_dir: str, name: str, builder: Callable[[], DataFrame]
+) -> DataFrame:
+    """Materialize a table derived from ``sf_dir``'s documents once per
+    (durable dir, applicationId, corpus path, name, documents fingerprint)
+    and hand the same table to every later caller: a
+    ``shared_local_checkpoint`` in local mode, a snapshot in durable mode.
+    A corpus whose fingerprint is None (missing or unreadable) is never
+    cached: ``builder()`` is returned as is."""
+    fp = fingerprint(sf_dir, "documents")
+    if fp is None:
+        # a None key would alias every error state, and a corpus that
+        # appears later, onto one entry
+        return builder()
+    root = _durable_dir()
+    app = spark.sparkContext.applicationId
+    key = (root, app, os.path.abspath(sf_dir), name, fp)
+    if root is None:
+        return shared_local_checkpoint(key, builder, desc=name)
+    return _shared(key, lambda: _snapshot(builder(), root, name))
 
 
 def release_shared() -> None:
-    """Drop every shared-cache entry (blocks freed, leases killed). For
-    teardown / memory pressure; normal operation relies on the LRU cap."""
-    for df, lease in _SHARED.values():
-        free_local_checkpoint(df)
-        lease.kill()
-    _SHARED.clear()
+    """Free every shared-cache entry. For teardown and tooling; normal
+    operation relies on the LRU cap."""
+    _evict(0)
 
 
 def release_transient_storage() -> None:
-    """Free every per-invocation pooled block (shared-cache entries stay).
-    Idempotent; called by pooled ops on entry and by bench.py between
-    timed passes. Kills the freed blocks' leases, so any still-lazy result
-    that depended on them now raises CheckpointReleasedError instead of a
-    raw Spark block-not-found when forced."""
-    for kind, df, lease in _POOL:
-        if kind == "ckpt":
-            free_local_checkpoint(df)
-        else:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        lease.kill()
+    """Free every pooled entry (shared entries stay) and kill its lease.
+    Idempotent; pooled ops call it on entry."""
+    for h in _POOL:
+        _drop(h)
     _POOL.clear()
     _CURRENT_LEASES.clear()
 
@@ -289,7 +328,7 @@ class _GuardedDataFrame(_ClassicDataFrame):
         dead = [l for l in self._sg_leases if not l.alive]
         if dead:
             raise CheckpointReleasedError(
-                "this result's checkpoint blocks were released "
+                "this result's checkpoint storage was released "
                 f"({dead[0].desc}); force pooled-operator results before "
                 "invoking the next pooled operator, or re-run the query"
             )
@@ -303,7 +342,7 @@ class _GuardedDataFrame(_ClassicDataFrame):
 def guard_result(df: DataFrame) -> DataFrame:
     """Wrap an operator's returned plan with the leases granted since the
     operator's entry ``release_transient_storage()`` call. If the plan
-    depends on no pooled/parked/shared blocks, the wrap is a no-op."""
+    depends on no pooled or shared checkpoint, the wrap is a no-op."""
     if not _CURRENT_LEASES:
         return df
     return _GuardedDataFrame(df._jdf, df.sparkSession, _CURRENT_LEASES)

@@ -123,17 +123,20 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     side — at 100 TB the corpus is scanned exactly once and never
     shuffled. The oracle joins raw gram strings; xxhash64 equality is
     collision-equivalent up to 2^-64."""
-    from ..ckpt import guard_result, release_transient_storage
-    from .dedup import _doc_gram_sets, _materialize
+    from ..ckpt import (
+        guard_result,
+        pooled_checkpoint,
+        release_transient_storage,
+    )
+    from .dedup import _doc_gram_sets
 
     release_transient_storage()  # free the previous invocation's blocks
     docs = scan_parallel(load(spark, sf_dir, "documents"))
     # three consumers (eval grams + train explode + train doc_ids):
-    # materialize once — dedup's _materialize (pooled eager checkpoint, or
-    # a durable parquet snapshot under $SPARK_GRAFT_CHECKPOINT_DIR);
-    # raw-scan input, so parallelism is restored before the narrow build
-    sets = _materialize(
-        _doc_gram_sets(docs, n=DECON_N), "decon_gram_sets", sf_dir=sf_dir
+    # materialize once as a pooled checkpoint; raw-scan input, so
+    # parallelism is restored before the narrow build
+    sets = pooled_checkpoint(
+        _doc_gram_sets(docs, n=DECON_N), "decon_gram_sets"
     )
     ev_grams = (
         sets.filter(F.col("doc_id") < EVAL_MAX_DOC)

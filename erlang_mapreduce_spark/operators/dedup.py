@@ -25,148 +25,27 @@ candidates against exact Jaccard/hamming ground truth computed in-engine.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd  # module scope: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..ckpt import (
-    free_local_checkpoint,
     guard_result,
-    park_local_checkpoint,
-    pooled_local_checkpoint,
+    pooled_checkpoint,
+    release,
     release_transient_storage,
-    shared_local_checkpoint,
+    shared_checkpoint,
 )
 from ..exact import md5_prefix_int
 from ..registry import query
-from ..tables import fingerprint, load, scan_parallel
+from ..tables import load, scan_parallel
 from .curation import _MD5_UNIFORM_SQL
-
-
-def _materialize(df: DataFrame, name: str, sf_dir: str | None = None) -> DataFrame:
-    """Materialize a table consumed by several downstream branches of ONE
-    query (gram sets feed bands + verify ×2; the member map feeds the
-    expansion twice). Mode is selected like connected_components' rounds:
-
-    - default (sandbox/local): pooled eager ``localCheckpoint`` — computed
-      exactly once up front, read by every consumer, blocks freed at the
-      next dedup invocation (``ckpt.release_transient_storage``; results
-      built on the blocks must go through ``guard_result``). On a real
-      cluster an executor loss during the query fails it (blocks are
-      unreplicated) — acceptable for a single query, or use the durable
-      mode below.
-    - $SPARK_GRAFT_CHECKPOINT_DIR set (production): snapshot to parquet
-      under that fault-tolerant path and read back — the durable form the
-      100 TB posture wants for a corpus-scale gram-set table (survives
-      executor loss without recompute). Paths are namespaced by
-      applicationId + sf tag so two concurrent sessions (or two corpora in
-      one session) never clobber each other's snapshot between its write
-      and a lazy read-back; within one namespace re-invocations overwrite
-      with identical data, so a long-running cluster reuses paths instead
-      of accumulating.
-
-    For tables reused ACROSS queries of one corpus (rep members, gram
-    sets), use ``_shared_materialize`` instead — it dedupes the build.
-    """
-    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if ckpt_dir:
-        import hashlib
-
-        spark = df.sparkSession
-        if sf_dir:
-            # basename alone would alias two corpora that share a leaf
-            # dir name; suffix a digest of the full path (same reasoning
-            # as _shared_materialize's durable snapshots)
-            disc = hashlib.md5(
-                os.path.abspath(sf_dir).encode()
-            ).hexdigest()[:12]
-            tag = f"{os.path.basename(os.path.normpath(sf_dir))}-{disc}"
-        else:
-            tag = "default"
-        path = os.path.join(
-            ckpt_dir,
-            spark.sparkContext.applicationId,
-            tag,
-            f"dedup_{name}.parquet",
-        )
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-    # eager localCheckpoint, NOT lazy persist: with persist() the three
-    # consumers race-fill the InMemoryRelation inside one job (measured
-    # 2× median regression with wild 4-11 s pass variance on jaccard);
-    # the eager checkpoint computes the table exactly once up front and
-    # stores raw blocks. Pooled, so the blocks are freed at the next
-    # dedup invocation instead of accumulating for the JVM's lifetime.
-    return pooled_local_checkpoint(df)
-
-
-# durable-mode twin of ckpt._SHARED: key -> parquet-backed DataFrame.
-# Files are durable, so entries carry no lease and never invalidate
-# dependents; the dict only dedupes the write. Keys include the
-# checkpoint dir itself: if $SPARK_GRAFT_CHECKPOINT_DIR changes
-# mid-session (tests use a fresh tmp dir per test), a later call must
-# write under the NEW dir, not return a handle onto the old — possibly
-# deleted — path.
-_DURABLE_SHARED: dict = {}
-
-
-def _shared_materialize(spark, sf_dir: str, name: str, builder) -> DataFrame:
-    """Materialize a corpus-derived table ONCE per (session, corpus) and
-    reuse it across operators: the verbatim-rep member map and the per-doc
-    gram sets feed dedup_ngram_jaccard, dedup_containment, dedup_simhash,
-    dedup_minhash, and dedup_cluster_cc's internal jaccard — without
-    sharing, each op (and each bench pass) rebuilt the same table under a
-    private pool key. Local mode delegates to the LRU-bounded
-    ``ckpt.shared_local_checkpoint``; durable mode snapshots to one
-    namespaced parquet path per key and reuses the read-back handle."""
-    fp = fingerprint(sf_dir, "documents")
-    if fp is None:
-        # Missing/unreadable corpus: UNCACHEABLE, not a cache key. Folding
-        # None into the key would collapse every error state onto one
-        # entry — and a table that appears (or becomes readable) later
-        # would share the error state's namespace (round-9 ADVICE).
-        return builder()
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        fp,
-    )
-    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if ckpt_dir:
-        cached = _DURABLE_SHARED.get((ckpt_dir, *key))
-        if cached is not None:
-            return cached
-        # the path must discriminate everything the CACHE KEY does: two
-        # corpora sharing a basename (or one rewritten in place, changing
-        # the fingerprint) would otherwise overwrite the same parquet
-        # while an earlier cached handle keeps lazily reading it —
-        # silently serving the other corpus's rows. A short digest of
-        # (abspath, fingerprint) makes each key's snapshot its own file.
-        import hashlib
-
-        disc = hashlib.md5(
-            repr((os.path.abspath(sf_dir), key[-1])).encode()
-        ).hexdigest()[:12]
-        path = os.path.join(
-            ckpt_dir,
-            spark.sparkContext.applicationId,
-            f"{os.path.basename(os.path.normpath(sf_dir))}-{disc}",
-            f"shared_{name}.parquet",
-        )
-        builder().write.mode("overwrite").parquet(path)
-        df = spark.read.parquet(path)
-        _DURABLE_SHARED[(ckpt_dir, *key)] = df
-        return df
-    return shared_local_checkpoint(key, builder, desc=name)
 
 
 def _shared_members(spark, sf_dir: str) -> DataFrame:
     """Shared (doc_id, rep_id) verbatim-group member map — see
     `_verbatim_reps`."""
-    return _shared_materialize(
+    return shared_checkpoint(
         spark,
         sf_dir,
         "verbatim_members",
@@ -177,7 +56,7 @@ def _shared_members(spark, sf_dir: str) -> DataFrame:
 def _shared_rep_docs(spark, sf_dir: str) -> DataFrame:
     """Shared (doc_id, text) representative documents — one row per
     distinct text; the input every gram/signature builder shares."""
-    return _shared_materialize(
+    return shared_checkpoint(
         spark,
         sf_dir,
         "verbatim_rep_docs",
@@ -188,7 +67,7 @@ def _shared_rep_docs(spark, sf_dir: str) -> DataFrame:
 def _shared_gram_sets(spark, sf_dir: str) -> DataFrame:
     """Shared xxhash64 gram-set table over the rep docs (jaccard,
     containment, cluster ops)."""
-    return _shared_materialize(
+    return shared_checkpoint(
         spark,
         sf_dir,
         "gram_sets_xx",
@@ -199,7 +78,7 @@ def _shared_gram_sets(spark, sf_dir: str) -> DataFrame:
 def _shared_gram_sets_md5(spark, sf_dir: str) -> DataFrame:
     """Shared md5-derived double-hash gram-set table over the rep docs
     (minhash — the cross-engine-exact variant)."""
-    return _shared_materialize(
+    return shared_checkpoint(
         spark,
         sf_dir,
         "gram_sets_md5",
@@ -465,7 +344,7 @@ def _rep_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure as the expanded one, at a fraction of the edges — see
     dedup_cluster_cc's expansion argument).
 
-    Materialized ONCE per (session, corpus) via ``_shared_materialize``,
+    Materialized ONCE per (session, corpus) via ``ckpt.shared_checkpoint``,
     like the gram sets it consumes: FIVE operators walk this graph
     (ngram_jaccard, cluster_cc, cluster_keep_best via cluster_cc,
     cluster_downweight, plus graph_triangle_count), and before round 13
@@ -473,7 +352,7 @@ def _rep_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant term in dedup_cluster_cc's wall time (measured ~2.1 s of its
     ~3.5 s at sf0.1). The pair graph is orders of magnitude smaller than
     the corpus (pairs over DISTINCT texts, threshold-filtered), so the
-    snapshot is cheap in either mode (localCheckpoint blocks / parquet)."""
+    checkpoint is cheap in either storage mode."""
 
     def build() -> DataFrame:
         doc_sets = _shared_gram_sets(spark, sf_dir)
@@ -496,7 +375,7 @@ def _rep_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _verify_jaccard(prefiltered, doc_sets)
 
-    return _shared_materialize(spark, sf_dir, "rep_jaccard_pairs", build)
+    return shared_checkpoint(spark, sf_dir, "rep_jaccard_pairs", build)
 
 
 N_HASH = 64
@@ -733,10 +612,8 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_doc_gram_sets), and Jaccard verification is a per-row
     `array_intersect` — no groupBy, no sizes table, no second pass over
     grams. The gram-set table feeds three consumers (bands + verify ×2);
-    `_shared_gram_sets_md5` builds it once per (session, corpus) — a
-    shared, LRU-bounded eager localCheckpoint by default, or a durable
-    parquet snapshot under $SPARK_GRAFT_CHECKPOINT_DIR, the 100 TB
-    posture for a corpus-scale gram-set table.
+    `_shared_gram_sets_md5` builds it once per (session, corpus) as a
+    shared checkpoint (``ckpt.shared_checkpoint``).
 
     Like dedup_ngram_jaccard, verbatim-duplicate groups collapse to one
     representative before signing and expand after: identical texts have
@@ -874,7 +751,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_verbatim_reps`."""
     release_transient_storage()  # free the previous invocation's blocks
     # shared member map: one build per (session, corpus) across the whole
-    # dedup family — see _shared_materialize
+    # dedup family — see ckpt.shared_checkpoint
     members = _shared_members(spark, sf_dir)
     sh = simhash(_shared_rep_docs(spark, sf_dir))
     banded = sh.select(
@@ -1035,13 +912,11 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (empty docs) have no edges at member level and stay their own
     singletons — the eligibility semi-join below preserves that.
 
-    Per-round lineage truncation defaults to localCheckpoint (right for
-    local[N]); set $SPARK_GRAFT_CHECKPOINT_DIR to a fault-tolerant path
-    (HDFS/S3) on a real cluster to make every round durably checkpointed —
-    see `connected_components`. Round 13: the pair graph is now
-    materialized once per (session, corpus) like the gram sets it derives
-    from (`_rep_jaccard_pairs`), and sub-cap edge sets finish with a
-    bounded local union-find instead of distributed rounds
+    Each round truncates lineage with a pooled checkpoint
+    (``ckpt.pooled_checkpoint``) — see `connected_components`. The pair
+    graph is materialized once per (session, corpus) like the gram sets
+    it derives from (`_rep_jaccard_pairs`), and sub-cap edge sets finish
+    with a bounded local union-find instead of distributed rounds
     (CC_LOCAL_EDGES in `connected_components`) — together these removed
     ~2/3 of this op's measured sf0.1 wall time, which was pair-pipeline
     recompute plus per-round scheduler round-trips on a 241-edge graph."""
@@ -1050,9 +925,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = _shared_members(spark, sf_dir)
     doc_sets = _shared_gram_sets(spark, sf_dir)
     rep_pairs = _rep_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _ = connected_components(
-        rep_pairs, checkpoint_dir=os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    )
+    labels, _ = connected_components(rep_pairs)
     # expand: every member of a gram-ELIGIBLE group gets its rep's root
     # (own rep_id when the rep is an edge-less singleton); ineligible
     # members fall through the left joins and coalesce to themselves
@@ -1119,7 +992,6 @@ def _finish_local(edges: DataFrame) -> DataFrame:
 def connected_components(
     pairs: DataFrame,
     max_rounds: int = 64,
-    checkpoint_dir: str | None = None,
     local_cap: int = CC_LOCAL_EDGES,
 ) -> tuple[DataFrame, int]:
     """Connected components of an undirected edge list via alternating
@@ -1139,23 +1011,11 @@ def connected_components(
 
     Convergence test: the canonical edge set is a fixed point exactly when
     (count, Σ xxhash64(edge)) is unchanged — one tiny scalar action per
-    round. Lineage is truncated per round; HOW is selected by
-    ``checkpoint_dir``:
-
-    - None (default, sandbox/local): ``localCheckpoint`` — executor-local
-      blocks, fastest, but unreplicated: losing any executor mid-iteration
-      fails the job. Fine on local[N]; NOT the 100 TB posture.
-    - a path (production): ``sparkContext.setCheckpointDir`` + durable
-      ``checkpoint()`` — each round's edge set lands in fault-tolerant
-      storage (HDFS/S3), so executor loss replays only the current round.
-      Point it at the cluster's checkpoint filesystem. Each round's edge
-      set is ``persist()``-ed before the reliable checkpoint: without the
-      cache, Spark recomputes the whole round's lineage in the separate
-      job that writes the checkpoint files (localCheckpoint does not have
-      this problem — it persists blocks as a side effect of the first
-      computation). Superseded rounds are unpersisted once their
-      checkpoint is on disk. The session checkpoint dir is restored on
-      exit when the caller had one configured.
+    round. Lineage is truncated per round by a lazy pooled checkpoint
+    (``ckpt.pooled_checkpoint``; a snapshot is written eagerly). Once the
+    signature has materialized a round, every older round is superseded
+    and freed; the newest stays pooled, because the returned labels read
+    it, and is freed at the next ``release_transient_storage()``.
 
     Adaptive local finish: before each round the measured canonical edge
     count (from the convergence signature — no extra action) is compared
@@ -1168,37 +1028,19 @@ def connected_components(
     Returns (labels: (node, root=component min) for every node with ≥1
     edge, rounds executed). Singletons are absent — the caller left-joins
     and coalesces to self."""
-    sc = pairs.sparkSession.sparkContext
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        prev_ckpt_dir = sc.getCheckpointDir()
-        sc.setCheckpointDir(checkpoint_dir)
-    cached: list[DataFrame] = []  # durable mode: persisted per-round DFs
-    live: list[DataFrame] = []  # local mode: checkpointed DFs with blocks
+    live: list[DataFrame] = []  # pooled rounds, oldest first
 
     def truncate(e: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            e = e.persist()
-            cached.append(e)
-            return e.checkpoint(eager=False)
-        ck = e.localCheckpoint(eager=False)
+        ck = pooled_checkpoint(e, "cc_round", eager=False)
         live.append(ck)
         return ck
 
-    def release_cached() -> None:
-        # the sig() action just materialized this round's checkpoints, so
-        # every cached plan now reads from durable files — drop the caches
-        for e in cached:
-            e.unpersist()
-        cached.clear()
-        # local mode: the newest checkpoint holds the full edge set, so
-        # every older round's blocks are superseded — free them now instead
-        # of letting O(rounds × invocations) blocks pile up in executor
-        # storage for the life of the JVM (the BENCH_r03 2×-variance bug).
-        # The final round's blocks stay (the labels plan reads them) and
-        # are parked in the pool below for the NEXT invocation to free.
+    def release_superseded() -> None:
+        # the sig() action just materialized the newest round, which holds
+        # the full edge set: free every older round now instead of letting
+        # O(rounds) of them wait for the next release
         for e in live[:-1]:
-            free_local_checkpoint(e)
+            release(e)
         del live[:-1]
 
     def canon(e: DataFrame, a: str, b: str) -> DataFrame:
@@ -1244,36 +1086,27 @@ def connected_components(
         ).collect()[0]
         return (r.c, r.s)
 
-    try:
-        edges = truncate(canon(pairs, "doc_a", "doc_b"))
-        cur = sig(edges)
-        release_cached()
-        rounds = 0
-        converged = False
-        for _ in range(max_rounds):
-            if cur[0] <= local_cap:
-                # sub-cap graph (measured by the convergence signature,
-                # which is computed anyway): finish locally — valid at any
-                # round boundary because the star rewrites preserve both
-                # the component structure and the non-singleton node set
-                return _finish_local(edges), rounds
-            edges = truncate(star(edges, large=True))
-            edges = truncate(star(edges, large=False))
-            rounds += 1
-            nxt = sig(edges)
-            release_cached()
-            if nxt == cur:
-                converged = True
-                break
-            cur = nxt
-    finally:
-        if prev_ckpt_dir is not None:
-            sc.setCheckpointDir(prev_ckpt_dir)
-        # local mode: the final round's blocks back the returned labels
-        # plan — park them for release at the NEXT pooled-op invocation
-        for e in live:
-            park_local_checkpoint(e)
-        live.clear()
+    edges = truncate(canon(pairs, "doc_a", "doc_b"))
+    cur = sig(edges)
+    release_superseded()
+    rounds = 0
+    converged = False
+    for _ in range(max_rounds):
+        if cur[0] <= local_cap:
+            # sub-cap graph (measured by the convergence signature, which
+            # is computed anyway): finish locally — valid at any round
+            # boundary because the star rewrites preserve both the
+            # component structure and the non-singleton node set
+            return _finish_local(edges), rounds
+        edges = truncate(star(edges, large=True))
+        edges = truncate(star(edges, large=False))
+        rounds += 1
+        nxt = sig(edges)
+        release_superseded()
+        if nxt == cur:
+            converged = True
+            break
+        cur = nxt
     if not converged:
         # label extraction below assumes the star-forest fixed point —
         # running it on an unconverged edge set would silently emit SPLIT
@@ -1655,13 +1488,13 @@ def _rep_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     key only; the oracles join raw strings — the usual 2^-64 collision
     class).
 
-    Materialized ONCE per (session, corpus) via ``_shared_materialize``
+    Materialized ONCE per (session, corpus) via ``ckpt.shared_checkpoint``
     (r16, guide §1.2 step 1): dedup_substring and dedup_substring_scrub
     both start from this exact table, and each invocation was rebuilding
     the whole anchor index + chain pipeline privately — the same
     dedupe-the-build reasoning as ``_rep_jaccard_pairs``. The table is
     O(overlapping pairs) rows, far below the gram sets already cached."""
-    return _shared_materialize(
+    return shared_checkpoint(
         spark, sf_dir, "rep_substring_spans",
         lambda: _build_rep_substring_spans(spark, sf_dir),
     )

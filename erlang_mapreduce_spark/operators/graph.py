@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..ckpt import (
     guard_result,
-    pooled_local_checkpoint,
+    pooled_checkpoint,
     pooled_persist,
     release_transient_storage,
 )
@@ -89,11 +89,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles the node key twice, and an 8-byte fixed key hashes,
     compares, and ships several times cheaper than a variable-length
     string — the human-readable form is restored in one narrow final
-    projection. Edges+degrees are built once and cached (at 100 TB:
-    persisted to durable storage — same remedy as dedup_cluster_cc's
-    checkpoint_dir, dedup.py). Iteration count is FIXED, so the lineage
-    stays 3 rounds deep — no unbounded plan growth, no checkpoint needed
-    at this depth."""
+    projection. Edges+degrees are built once and persisted for the
+    invocation (``ckpt.pooled_persist``). Iteration count is FIXED, so the
+    lineage stays 3 rounds deep — no unbounded plan growth, no checkpoint
+    needed between rounds; only the tiny result is checkpointed."""
     release_transient_storage()  # free the previous invocation's blocks
     # pooled: the edge list derives from pairs twice (deg build + ed's
     # edge side) and the ranks init re-reads deg — without this cache the
@@ -150,12 +149,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # passes). Restoring Spark's default 1m floor lets AQE coalesce them
     # to a handful of tasks; the conf only binds at execution start, so
     # the result (one row per node — tiny) is materialized inside the
-    # scope via a pooled localCheckpoint and returned guarded.
+    # scope via a pooled checkpoint and returned guarded.
     with scoped_conf(
         spark,
         {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m"},
     ):
-        return guard_result(pooled_local_checkpoint(out))
+        return guard_result(pooled_checkpoint(out, "graph_pagerank"))
 
 
 @query(
@@ -209,7 +208,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash exactly (the oracle still computes at raw member level, so the
     hash match IS the blow-up identity)."""
     from .dedup import (
-        _materialize,
         _nonempty_reps,
         _rep_jaccard_pairs,
         _shared_gram_sets,
@@ -224,12 +222,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # neighbor sums, three orientation aliases, the weight joins) — each
     # would re-expand the whole pair-stream + verify lineage without this
     # one materialization of the (tiny, threshold-filtered) rep pairs
-    e = _materialize(
+    e = pooled_checkpoint(
         _rep_jaccard_pairs(spark, sf_dir).select(
             F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
         ),
         "tri_rep_edges",
-        sf_dir,
     )
     nbr = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # per-rep neighbor-size sums: S1 = Σ n(B), S2 = Σ C(n(B), 2)
@@ -259,7 +256,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = F.col("ku") < F.col("kv")
     # materialized like the edge list: three aliases consume the oriented
     # edges, and each would otherwise recompute the degree join
-    o = _materialize(
+    o = pooled_checkpoint(
         ek.select(
             F.when(lo, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(lo, F.col("v")).otherwise(F.col("u")).alias("dst"),
@@ -267,7 +264,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(lo, F.col("kv")).otherwise(F.col("ku")).alias("dstk"),
         ),
         "tri_oriented",
-        sf_dir,
     )
     wa, wb, wc = o.alias("wa"), o.alias("wb"), o.alias("wc")
     tri = (

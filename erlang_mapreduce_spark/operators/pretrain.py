@@ -35,11 +35,10 @@ Python only for the distinct-word vocabulary (Arrow-batched); packing is
 a per-shard window; mixing/splitting are md5-deterministic narrow maps;
 and the export is a shuffle-free ``partitionBy`` write whose read-back
 accounting closes the loop. Between macro-stages the intermediates are
-materialized once (`dedup._materialize`: pooled localCheckpoint locally,
-durable parquet snapshots under $SPARK_GRAFT_CHECKPOINT_DIR at scale) so
-no branch recomputes an upstream shuffle. The lazy composition through
-the decontaminate stage is plan-pinned in tests/test_plans.py (exchange
-budget), proving the stages fuse without replanning cliffs.
+materialized once (`ckpt.pooled_checkpoint`) so no branch recomputes an
+upstream shuffle. The lazy composition through the decontaminate stage is
+plan-pinned in tests/test_plans.py (exchange budget), proving the stages
+fuse without replanning cliffs.
 
 Reference analog: mapreduce.erl:40-55 is the reference's whole pipeline
 (read → filter → count → derive → sink); this is the same composition
@@ -51,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import release_transient_storage, scratch
+from ..ckpt import pooled_checkpoint, release_transient_storage, scratch
 from ..registry import query
 from ..tables import load, scan_parallel
 from .analysis import (
@@ -101,7 +100,6 @@ from .dedup import (
     SUBSTR_OCC_CAP,
     _doc_gram_sets,
     _doc_gram_sets_md5,
-    _materialize,
     _verify_jaccard,
     minhash_bands,
 )
@@ -811,10 +809,9 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran on ONE core (measured 6.6 s vs 0.75 s at sf0.1 for this
     # subtree alone). At 100 TB the scan already has >= cores splits and
     # scan_parallel is a no-op.
-    flagged = _materialize(
+    flagged = pooled_checkpoint(
         quality_flags(gate_and_scrub(scan_parallel(docs))),
         "pretrain_flags",
-        sf_dir=sf_dir,
     )
     g = flagged.agg(
         F.count("*").alias("c"),
@@ -839,25 +836,24 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     g5 = flagged.filter(F.col("rule_keep") & F.col("cls_keep")).select(
         "doc_id", "lang", "source", "scrubbed"
     )
-    g6 = _materialize(lines_dedup(g5), "pretrain_g6", sf_dir=sf_dir)
+    g6 = pooled_checkpoint(lines_dedup(g5), "pretrain_g6")
     s6l = g6.agg(
         F.count("*").alias("c"),
         F.sum(F.size(F.split("scrubbed", r"\s+"))).cast("bigint").alias("t"),
     ).first()
     rows.append((6, "dedup_lines", s6l["c"], s6l["t"] or 0))
 
-    dd = _materialize(exact_dedup(g6), "pretrain_dd", sf_dir=sf_dir)
+    dd = pooled_checkpoint(exact_dedup(g6), "pretrain_dd")
     rows.append((7, "dedup_exact", dd.count(), None))
 
-    sets = _materialize(
+    sets = pooled_checkpoint(
         _doc_gram_sets_md5(dd.select("doc_id", F.col("scrubbed").alias("text"))),
         "pretrain_sets",
-        sf_dir=sf_dir,
     )
-    mh = _materialize(minhash_survivors(dd, sets), "pretrain_mh", sf_dir=sf_dir)
+    mh = pooled_checkpoint(minhash_survivors(dd, sets), "pretrain_mh")
     rows.append((8, "dedup_minhash", mh.count(), None))
 
-    docs6 = _materialize(substring_clean(mh), "pretrain_docs6", sf_dir=sf_dir)
+    docs6 = pooled_checkpoint(substring_clean(mh), "pretrain_docs6")
     s6 = docs6.agg(
         F.count("*").alias("c"),
         F.sum(
@@ -870,9 +866,7 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     rows.append((9, "substring_scrub", s6["c"], s6["t"] or 0))
 
-    docs7 = _materialize(
-        decontaminate(docs, docs6), "pretrain_docs7", sf_dir=sf_dir
-    )
+    docs7 = pooled_checkpoint(decontaminate(docs, docs6), "pretrain_docs7")
     rows.append((10, "decontaminate", docs7.count(), None))
 
     # trained byte-BPE over the CLEANED corpus (production trains the
@@ -901,13 +895,12 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_rows=doc_word_rows_bytes,
         n_base=N_BYTES,
     ).select("doc_id", "n_tokens")
-    docs8 = _materialize(
+    docs8 = pooled_checkpoint(
         d7.join(tok, "doc_id").select(
             "doc_id", "lang", "source", "text",
             F.col("n_tokens").cast("bigint").alias("n_tokens"),
         ),
         "pretrain_docs8",
-        sf_dir=sf_dir,
     )
     s8 = docs8.agg(
         F.count("*").alias("c"),

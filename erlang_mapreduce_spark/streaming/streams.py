@@ -46,8 +46,7 @@ _PRUNE_GRACE_S = 600.0
 
 def _chunk_ns(sf_dir: str, table: str) -> str:
     """Namespace (two nested path components) for the on-disk chunk cache:
-    ``<leaf>-<md5(abspath, table)> / <md5(stat-fingerprint)>`` — the same
-    discriminator scheme as ``dedup._shared_materialize``, with the
+    ``<leaf>-<md5(abspath, table)> / <md5(stat-fingerprint)>``, with the
     fingerprint DELEGATED to ``tables.fingerprint`` so a future
     tightening of the fingerprint (its known size+mtime limit) reaches
     this cache too. Keying by basename alone aliased two corpora sharing
@@ -851,7 +850,7 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept out here so the op isolates the streaming-state semantics."""
     from ..ckpt import (
         guard_result,
-        pooled_local_checkpoint,
+        pooled_checkpoint,
         release_transient_storage,
     )
     from ..operators.dedup import _doc_gram_sets_md5, minhash_bands
@@ -905,10 +904,10 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce(F.col("dup") == 1, F.lit(False)).alias("is_dup"),
             )
         )
-        # eager localCheckpoint (pooled), NOT an O(docs) driver collect:
-        # the result must survive the scratch dir's removal, and executor
-        # blocks do that distributedly
-        return guard_result(pooled_local_checkpoint(out))
+        # eager pooled checkpoint, NOT an O(docs) driver collect: the
+        # result must survive the scratch dir's removal, and checkpoint
+        # storage does that distributedly
+        return guard_result(pooled_checkpoint(out, "stream_minhash_dedup"))
 
 
 from ..operators.bpe import (  # noqa: E402 — one tokenizer, one CTE chain

@@ -414,6 +414,31 @@ def test_trained_table_feeds_encode():
         assert got == toks, (word, got, toks)
 
 
+def test_second_training_on_unchanged_corpus_starts_no_job(
+    spark, sf_dir, tmp_path
+):
+    """The trained merge table is cached per (session, corpus path,
+    fingerprint, byte_level): training again on an unchanged corpus
+    starts no Spark job and returns the same table."""
+    import shutil
+
+    from tests.test_tables import _jobs_started
+
+    shutil.copyfile(
+        os.path.join(sf_dir, "documents.parquet"),
+        tmp_path / "documents.parquet",
+    )
+    d = str(tmp_path)
+    got = []
+
+    def train():
+        got.append(bpe._trained_table(spark, d))
+
+    assert _jobs_started(spark, train) >= 1
+    assert _jobs_started(spark, train) == 0, "retrained an unchanged corpus"
+    assert got[0] == got[1]
+
+
 def test_sql_apply_round_matches_apply_pair():
     """Run the ACTUAL `_apply_round` SQL fragment (not its Python mirror)
     in DuckDB over randomized token lists and every pair from the pool —

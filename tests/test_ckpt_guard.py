@@ -26,7 +26,7 @@ from erlang_mapreduce_spark.ckpt import (
 
 def _pooled_guarded_result(spark):
     """A guard_result over a pooled checkpoint, built straight from the
-    ckpt.py primitives — the composition every _materialize-using op has,
+    ckpt.py primitives — the composition every pooled-checkpoint op has,
     WITHOUT depending on any particular op's current internals (ops have
     migrated between pooled and shared storage across rounds; these tests
     must pin ckpt.py, not an op's composition of the day)."""
@@ -219,14 +219,13 @@ def test_none_fingerprint_is_uncacheable(tmp_path):
     shared materialization falls through to the builder (no entry that a
     later-appearing table could alias), and the streaming chunk namespace
     is unique per call (no .done sentinel reuse across error states)."""
-    from erlang_mapreduce_spark.operators import dedup
     from erlang_mapreduce_spark.streaming import streams
 
     missing = str(tmp_path / "no_such_corpus")
     sentinel = object()
     # spark is only touched after the fingerprint gate — None proves the
     # early return happened and nothing was cached
-    out = dedup._shared_materialize(None, missing, "x", lambda: sentinel)
+    out = ckpt.shared_checkpoint(None, missing, "x", lambda: sentinel)
     assert out is sentinel
 
     a = streams._chunk_ns(missing, "documents")
@@ -266,3 +265,44 @@ def test_scratch_nested_distinct_removed_and_pruned(
         assert os.listdir(app_dir) == [os.path.basename(outer)]
     assert not os.path.exists(outer)
     assert not root.exists(), "empty scratch parents were not pruned"
+
+
+def _snapshots(root, spark, desc):
+    return sorted((root / spark.sparkContext.applicationId).glob(f"{desc}-*"))
+
+
+@pytest.mark.parametrize("op", ["graph_pagerank", "stream_minhash_dedup"])
+def test_durable_mode_reaches_pooled_results(
+    spark, sf_dir, tmp_path, monkeypatch, op
+):
+    """With $SPARK_GRAFT_CHECKPOINT_DIR set, an op whose result is a pooled
+    checkpoint returns the same rows as in local mode and leaves its
+    snapshot under the dir."""
+    from erlang_mapreduce_spark.registry import QUERIES
+
+    local = sorted(QUERIES[op](spark, sf_dir).collect())
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path))
+    durable = QUERIES[op](spark, sf_dir)
+    assert _snapshots(tmp_path, spark, op), f"{op} left no snapshot"
+    assert sorted(durable.collect()) == local
+    release_transient_storage()
+
+
+def test_stale_pooled_snapshot_raises_and_is_deleted(
+    spark, tmp_path, monkeypatch
+):
+    """A pooled durable result forced after the next
+    release_transient_storage() raises CheckpointReleasedError, like a
+    local one, and its snapshot dir is deleted by the release."""
+    from erlang_mapreduce_spark.ckpt import guard_result, pooled_checkpoint
+
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path))
+    release_transient_storage()
+    base = pooled_checkpoint(spark.range(100).toDF("n"), "stale_probe")
+    res = guard_result(base.groupBy((base.n % 7).alias("k")).count())
+    (snap,) = _snapshots(tmp_path, spark, "stale_probe")
+    assert res.count() == 7
+    release_transient_storage()
+    assert not snap.exists(), "released snapshot still on disk"
+    with pytest.raises(CheckpointReleasedError):
+        res.count()

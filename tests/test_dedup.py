@@ -317,22 +317,20 @@ def test_cc_matches_union_find_on_random_graphs(spark, sf_dir):
             assert got == truth, f"seed {seed} cap {cap}"
 
 
-def test_cc_durable_checkpoint_mode(spark, sf_dir, tmp_path):
-    """checkpoint_dir set → durable RDD checkpoints per round (the 100 TB
-    posture: executor loss replays one round, not the whole job). Same
-    labels as localCheckpoint mode, and checkpoint files actually land in
-    the given directory."""
+def test_cc_durable_checkpoint_mode(spark, sf_dir, tmp_path, monkeypatch):
+    """$SPARK_GRAFT_CHECKPOINT_DIR set → durable snapshots per round (the
+    100 TB posture: executor loss replays one round, not the whole job).
+    Same labels as localCheckpoint mode, and checkpoint files actually
+    land in the given directory."""
     from erlang_mapreduce_spark.operators.dedup import connected_components
 
-    ckpt = str(tmp_path / "cc_ckpt")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "cc_ckpt"))
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "doc_a long, doc_b long"
     )
     # local_cap=0: this test exercises the durable per-round checkpoint
     # machinery, which the adaptive local finish would skip entirely
-    labels, rounds = connected_components(
-        chain, checkpoint_dir=ckpt, local_cap=0
-    )
+    labels, rounds = connected_components(chain, local_cap=0)
     got = {(r.node, r.root) for r in labels.collect()}
     assert got == {(i, 0) for i in range(21)}
     ckpt_files = [p for p in (tmp_path / "cc_ckpt").rglob("*") if p.is_file()]
@@ -340,19 +338,16 @@ def test_cc_durable_checkpoint_mode(spark, sf_dir, tmp_path):
 
 
 def test_gram_set_durable_mode_same_pairs(spark, sf_dir, tmp_path, monkeypatch):
-    """$SPARK_GRAFT_CHECKPOINT_DIR set → _shared_materialize snapshots the
-    shared member/rep-doc/gram-set tables to parquet under
-    <ckpt_dir>/<applicationId>/<sf-tag>/shared_*.parquet (the durable
-    100 TB posture, mirroring connected_components' two modes) and the
-    op's answer is unchanged; unset → the localCheckpoint shared LRU.
+    """$SPARK_GRAFT_CHECKPOINT_DIR set → ckpt.shared_checkpoint snapshots
+    the shared member/rep-doc/gram-set tables to parquet under
+    <ckpt_dir>/<applicationId>/<name>-<time_ns> (the durable 100 TB
+    posture, mirroring connected_components' two modes) and the op's
+    answer is unchanged; unset → the localCheckpoint shared LRU.
 
     The durable branch is PROVEN taken on a fresh key: the local-mode call
-    runs first, but its entries live in the separate ``ckpt._SHARED`` LRU
-    — the durable dict keys on (ckpt_dir, ...) and this test's tmp_path is
-    brand new, so the three snapshot files below can only exist if the
-    env-var branch actually built and wrote them."""
-    import os
-
+    runs first, but the shared LRU keys on the durable dir (None locally)
+    and this test's tmp_path is brand new, so the snapshot dirs below can
+    only exist if the env-var branch actually built and wrote them."""
     default = {
         (r.doc_a, r.doc_b, r.jaccard)
         for r in dedup_ngram_jaccard(spark, sf_dir).collect()
@@ -364,19 +359,15 @@ def test_gram_set_durable_mode_same_pairs(spark, sf_dir, tmp_path, monkeypatch):
     }
     assert durable == default
     app_dir = tmp_path / spark.sparkContext.applicationId
-    # the tag dir is "<basename>-<digest>" — the digest discriminates
-    # same-basename corpora and fingerprint changes (round-8 ADVICE fix)
-    tag_dirs = list(
-        app_dir.glob(f"{os.path.basename(os.path.normpath(sf_dir))}-*")
-    )
-    assert len(tag_dirs) == 1, f"expected one tag dir, got {tag_dirs}"
-    snaps = sorted(p.name for p in tag_dirs[0].glob("shared_*.parquet"))
+    # each snapshot is a fresh "<name>-<time_ns>" dir: the shared LRU key,
+    # not the path, discriminates corpora and fingerprint changes
+    snaps = sorted(p.name.rsplit("-", 1)[0] for p in app_dir.iterdir())
     assert snaps == [
-        "shared_gram_sets_xx.parquet",
-        "shared_rep_jaccard_pairs.parquet",  # shared since round 13
-        "shared_verbatim_members.parquet",
-        "shared_verbatim_rep_docs.parquet",
-    ], f"durable snapshots missing under {tag_dirs[0]}: {snaps}"
+        "gram_sets_xx",
+        "rep_jaccard_pairs",  # shared since round 13
+        "verbatim_members",
+        "verbatim_rep_docs",
+    ], f"durable snapshots missing under {app_dir}: {snaps}"
 
 
 def test_cluster_cc_durable_mode_end_to_end(spark, sf_dir, tmp_path,
@@ -727,7 +718,7 @@ def test_dedup_semantic_zero_norm_twins(spark, tmp_path):
 
 def test_substring_spans_shared_across_ops(spark, sf_dir):
     """r16: `_rep_substring_spans` is materialized once per (session,
-    corpus) via `_shared_materialize` and REUSED by dedup_substring and
+    corpus) via `ckpt.shared_checkpoint` and REUSED by dedup_substring and
     dedup_substring_scrub — the `_rep_jaccard_pairs` dedupe-the-build
     device. Pins (a) a `rep_substring_spans` key lands in the shared LRU
     after the first op, (b) the second op adds NO second spans key (it
@@ -739,18 +730,9 @@ def test_substring_spans_shared_across_ops(spark, sf_dir):
         dedup_substring_scrub,
     )
 
-    from erlang_mapreduce_spark.operators import dedup as dedup_mod
-
     def span_keys():
-        # _shared_materialize routes through _DURABLE_SHARED (not the
-        # LRU) when SPARK_GRAFT_CHECKPOINT_DIR is set — assert against
-        # whichever cache the mode actually uses (r16 ADVICE item 2)
-        cache = (
-            dedup_mod._DURABLE_SHARED
-            if os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-            else ckpt._SHARED
-        )
-        return {k for k in cache if "rep_substring_spans" in str(k)}
+        # one LRU serves both storage modes
+        return {k for k in ckpt._SHARED if "rep_substring_spans" in str(k)}
 
     a = dedup_substring(spark, sf_dir).collect()
     keys_after_first = span_keys()

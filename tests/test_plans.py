@@ -392,7 +392,7 @@ def test_dedup_substring_posting_list_shape(spark, sf_dir):
     and a bounded exchange budget — a regression to a gram self-join or
     a second window cannot land silently.
 
-    r16: the span table is `_shared_materialize`d across
+    r16: the span table is `ckpt.shared_checkpoint`ed across
     dedup_substring/dedup_substring_scrub (the `_rep_jaccard_pairs`
     device), so the OP plan reads the shared checkpoint — the pin now
     targets the span BUILDER's lazy plan, where the shape lives, and
