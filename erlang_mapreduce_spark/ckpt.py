@@ -14,6 +14,9 @@
 (``localCheckpoint``: fast, unreplicated, so losing an executor fails the
 query). With it set it is a parquet snapshot at a fresh
 ``<dir>/<applicationId>/<desc>-<time_ns>``, which survives executor loss.
+Snapshots do not outlive the process: the first one registers an exit
+hook that frees every held checkpoint and removes the emptied
+``<dir>/<applicationId>/``.
 
 Every grant carries a ``BlockLease``. Freeing the storage (dropping the
 blocks, or deleting the snapshot through the Hadoop FileSystem API) kills
@@ -24,6 +27,7 @@ both modes, not a Spark block-not-found or file-not-found error.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import functools
 import os
@@ -33,6 +37,7 @@ import warnings
 from collections import OrderedDict
 from typing import Callable, Iterator, NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 from .tables import fingerprint
@@ -147,19 +152,48 @@ def _durable_dir() -> str | None:
     return os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
 
 
+# <root>/<applicationId> dir of every snapshot written -> its SparkContext
+_APP_DIRS: dict[str, SparkContext] = {}
+
+
+def _hadoop_path(sc, path: str):
+    """``path`` as a Hadoop Path and the FileSystem that resolves it."""
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(sc._jsc.hadoopConfiguration())
+
+
+def _release_at_exit() -> None:
+    """Free every pooled and shared checkpoint, then remove each snapshot
+    app dir left empty. Registered at the first snapshot, after PySpark's
+    gateway hook, so it runs first, while the JVM is still up."""
+    release_transient_storage()
+    release_shared()
+    for app_dir, sc in _APP_DIRS.items():
+        if sc._jsc is None:  # stopped: its files are out of reach
+            continue
+        try:
+            p, fs = _hadoop_path(sc, app_dir)
+            if fs.exists(p) and not fs.listStatus(p):
+                fs.delete(p, False)
+        except Exception as e:
+            warnings.warn(f"could not remove {app_dir}: {e!r}")
+
+
 def _snapshot(df: DataFrame, root: str, desc: str) -> _Held:
     """Write ``df`` to a fresh parquet dir ``<root>/<applicationId>/
     <desc>-<time_ns>`` and hold the read-back; freeing deletes the dir."""
     spark = df.sparkSession
-    path = os.path.join(
-        root, spark.sparkContext.applicationId, f"{desc}-{time.time_ns()}"
-    )
+    sc = spark.sparkContext
+    app_dir = os.path.join(root, sc.applicationId)
+    if not _APP_DIRS:
+        atexit.register(_release_at_exit)
+    _APP_DIRS[app_dir] = sc
+    path = os.path.join(app_dir, f"{desc}-{time.time_ns()}")
     df.write.parquet(path)  # error-if-exists: never clobbers a twin
 
     def delete() -> None:
-        sc = spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
+        p, fs = _hadoop_path(sc, path)
+        fs.delete(p, True)
 
     return _Held(
         spark.read.parquet(path), BlockLease(f"snapshot {desc}"), delete

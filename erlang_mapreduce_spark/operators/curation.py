@@ -1430,9 +1430,11 @@ def _qc_score_ctes(p: str = "") -> str:
 # crosses the Arrow boundary (tokenizing stays in Spark, so no Python
 # unicode-semantics drift can change a hash), and each batch computes
 # per-doc (num, n_feats) in one pass with a word/bigram → weight memo
-# (Zipf amortizes the md5 cost to dict lookups). The UDF is pickled by
-# value, so each task starts from its own copy of the memo. The logit
-# divide/round stays a Spark expression, so its rounding is Spark's own.
+# (Zipf amortizes the md5 cost to dict lookups). The scorer body is a plain
+# module-level function, so the UDF pickles it by reference: a worker looks
+# it up in this module, and a reused worker keeps the memo across tasks.
+# The logit divide/round stays a Spark expression, so its rounding is
+# Spark's own.
 _QC_SCORES_STRUCT = T.StructType(
     [
         T.StructField("num", T.LongType()),
@@ -1456,8 +1458,7 @@ _QC_MEMO_CAP = 2_000_000
 _QC_MEMO_MAX_LEN = 32
 
 
-@F.pandas_udf(_QC_SCORES_STRUCT)
-def _qc_scores_arrow(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+def _qc_scores(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     W = _QC_W_TABLE
     memo = _QC_CONTRIB_MEMO
 
@@ -1501,7 +1502,9 @@ def _qc_scores_arrow(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 # scores below the staged projection, which evaluates the scorer twice:
 # without it test_quality_classifier_narrow_zero_exchange sees 2
 # ArrowEvalPython nodes.
-_qc_scores_arrow = _qc_scores_arrow.asNondeterministic()
+_qc_scores_arrow = F.pandas_udf(_QC_SCORES_STRUCT)(
+    _qc_scores
+).asNondeterministic()
 
 
 def with_qc_scores(df: DataFrame, text_col: str) -> DataFrame:

@@ -11,6 +11,10 @@ session factory whose defaults are chosen for scale-out behavior:
   on a real cluster this is overridden or left to AQE's coalescing).
 - UTC session timezone so timestamp semantics are stable across engines.
 - Arrow enabled for any pandas-UDF path (the only sanctioned Python hot path).
+- Python workers forked from the engine's own daemon
+  (``worker_daemon``): each worker inherits the imported package and a
+  stat-checked zipimport cache invalidation, so no worker imports the
+  package itself and no task re-reads ``pyspark.zip``'s directory.
 """
 
 from __future__ import annotations
@@ -48,6 +52,8 @@ _DEFAULTS = {
     # lost its official JSON line to exactly that overflow
     "spark.ui.showConsoleProgress": "false",
     "spark.driver.extraJavaOptions": "-Dlog4j2.level=error",
+    # the process that forks Python workers; every worker needs the package
+    "spark.python.daemon.module": "erlang_mapreduce_spark.worker_daemon",
 }
 
 
@@ -116,6 +122,13 @@ def get_spark(app_name: str = "erlang-mapreduce-spark") -> SparkSession:
             except (ValueError, OSError):
                 mem = "4g"
         builder = builder.config("spark.driver.memory", mem)
+        # local workers import the package from the driver's checkout,
+        # whatever the working directory; Spark merges this into the
+        # workers' path after its own pyspark entries
+        builder = builder.config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

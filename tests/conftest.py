@@ -52,6 +52,10 @@ _SLOW_TESTS = {
     "test_cc_matches_union_find_on_random_graphs",
     # 12-configuration zero-norm twin matrix (~15 s post-oracle-fix)
     "test_dedup_semantic_zero_norm_twins",
+    # fresh-process checks, one JVM start each (~25 s): workers import the
+    # package outside the checkout; durable snapshots are gone at exit
+    "test_workers_import_package_outside_checkout",
+    "test_durable_snapshots_removed_at_exit",
 }
 
 

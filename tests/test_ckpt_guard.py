@@ -306,3 +306,39 @@ def test_stale_pooled_snapshot_raises_and_is_deleted(
     assert not snap.exists(), "released snapshot still on disk"
     with pytest.raises(CheckpointReleasedError):
         res.count()
+
+
+def test_durable_snapshots_removed_at_exit(tmp_path, sf_dir):
+    """A process that exits holding durable shared snapshots leaves
+    nothing under $SPARK_GRAFT_CHECKPOINT_DIR: its exit hook frees every
+    snapshot and removes the emptied ``<dir>/<applicationId>/``."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = tmp_path / "durable"
+    script = (
+        f"import os, sys; sys.path.insert(0, {repo!r})\n"
+        "from erlang_mapreduce_spark import get_spark\n"
+        "from erlang_mapreduce_spark.registry import QUERIES\n"
+        "spark = get_spark('ckpt-exit-hook')\n"
+        f"QUERIES['dedup_simhash'](spark, {sf_dir!r}).collect()\n"
+        f"app = os.path.join({str(root)!r}, spark.sparkContext.applicationId)\n"
+        "assert os.listdir(app), 'no shared snapshot written'\n"
+    )
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CHECKPOINT_DIR=str(root),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert list(root.iterdir()) == []

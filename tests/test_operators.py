@@ -1160,3 +1160,17 @@ def test_with_qc_scores_matches_duckdb_oracle(spark, sf_dir):
     # the first four hostile rows have no features; the rest are scored
     assert all(first + i not in want for i in range(4))
     assert all(first + i in want for i in range(4, len(hostile)))
+
+
+def test_classifier_scorer_pickles_by_reference():
+    """The Arrow scorer's function travels by reference, so a reused
+    Python worker runs the module's own function and keeps its
+    word -> weight memo across tasks."""
+    import pickle
+
+    from pyspark import cloudpickle
+
+    from erlang_mapreduce_spark.operators import curation
+
+    fn = pickle.loads(cloudpickle.dumps(curation._qc_scores_arrow.func))
+    assert fn.__globals__ is curation.__dict__
