@@ -7,9 +7,9 @@ Four detectors, from exact-SQL-checkable to sketch-based:
   self-join (pairs must share ≥1 gram) — the scalable exact baseline: the
   join is an equi-join on gram, never a cross join.
 - dedup_minhash: shingle → 64 minhash permutations (md5-derived double
-  hashing, JVM-side + numpy) → 8 bands × 8 rows → band-bucket join →
-  exact-Jaccard verification of candidates. At 100 TB the band join
-  touches only colliding buckets; memory per doc is 64 longs regardless
+  hashing, JVM-side + numpy) → 8 bands × 8 rows → band-bucket posting
+  lists → exact-Jaccard verification of candidates. At 100 TB only
+  colliding buckets emit pairs; memory per doc is 64 longs regardless
   of doc size.
 - dedup_simhash: SimHash over md5-derived token hashes, banded for
   candidate generation, verified by hamming distance (bit_count(xor)) ≤ k.
@@ -26,7 +26,7 @@ candidates against exact Jaccard/hamming ground truth computed in-engine.
 from __future__ import annotations
 
 import pandas as pd  # module scope: pandas_udf type hints must resolve
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..ckpt import (
@@ -102,19 +102,47 @@ JACCARD_T = 0.5
 # cap is inert for the oracle while bounding the 100 TB expansion.
 GRAM_DF_CAP = 2_000
 
-_GRAMS_CTE = f"""
-WITH toks AS (
-    SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws
-    FROM documents
+def _grams_ctes(src: str = "documents", col: str = "text", p: str = "") -> str:
+    """{p}toks → {p}grams (each doc's distinct word N_GRAM-grams) →
+    {p}sizes (gram-set sizes) over any (doc_id, {col}) relation — the
+    DuckDB twin of `_doc_gram_sets`; ``p`` prefixes CTE names for
+    composition."""
+    return f"""{p}toks AS (
+    SELECT doc_id, string_split_regex(lower({col}), '\\s+') AS ws
+    FROM {src}
 ),
-grams AS (
+{p}grams AS MATERIALIZED (
     SELECT DISTINCT doc_id,
            array_to_string(ws[CAST(i AS INTEGER):CAST(i + {N_GRAM} - 1 AS INTEGER)], ' ') AS gram
     FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - {N_GRAM} + 2)) AS i
-          FROM toks)
+          FROM {p}toks)
 ),
-sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id)
-"""
+{p}sizes AS (SELECT doc_id, count(*) AS sz FROM {p}grams GROUP BY doc_id)"""
+
+
+def _jaccard_cte(p: str = "") -> str:
+    """{p}pairs: the (doc_a, doc_b, jaccard) rows of {p}inter (doc_a,
+    doc_b, ix = shared-gram count) at or above JACCARD_T."""
+    return f"""{p}pairs AS (
+    SELECT i.doc_a, i.doc_b,
+           CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) AS jaccard
+    FROM {p}inter i
+    JOIN {p}sizes sa ON sa.doc_id = i.doc_a
+    JOIN {p}sizes sb ON sb.doc_id = i.doc_b
+    WHERE CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) >= {JACCARD_T}
+)"""
+
+
+# every document pair sharing a gram, with its shared-gram count ix
+_INTER_CTES = f"""{_grams_ctes()},
+inter AS (
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
+    FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
+    GROUP BY 1, 2
+)"""
+
+# exact n-gram Jaccard pairs (dedup_ngram_jaccard's answer) as CTE `pairs`
+_JACCARD_CTES = f"{_INTER_CTES},\n{_jaccard_cte()}"
 
 
 def _verify_jaccard(cands: DataFrame, doc_sets: DataFrame) -> DataFrame:
@@ -146,46 +174,51 @@ def _verify_jaccard(cands: DataFrame, doc_sets: DataFrame) -> DataFrame:
     )
 
 
+def _posting_pairs(
+    rows: DataFrame, keys: list[str], item, cap: int | None = None
+) -> DataFrame:
+    """Posting lists → every pair inside each list: ``rows`` grouped by
+    ``keys``, each group's ``item`` values (a column name or Column)
+    collected and sorted, then one (*keys, a, b) row per i<j pair of the
+    sorted list — so a <= b, and a key shared by d rows yields C(d,2) rows.
+
+    One keyed shuffle builds the lists, never a self-join. The expansion
+    is streamed: posexplode emits one (list, i, a) row per member and a
+    second explode over slice(list, i + 2, …) emits each b, so no row ever
+    holds the C(d,2) pair array — peak per-row memory is one list. With
+    ``cap`` set, a count aggregate (fixed-size state) first drops keys
+    with fewer than 2 or more than ``cap`` rows, so only surviving keys
+    reach the collect and no list is longer than ``cap``; the count, the
+    semi-join and the collect all hash on ``keys``, so the partitioning
+    is reused rather than re-exchanged."""
+    if cap is not None:
+        keep = (
+            rows.groupBy(*keys)
+            .agg(F.count("*").alias("_n"))
+            .filter((F.col("_n") >= 2) & (F.col("_n") <= cap))
+            .select(*keys)
+        )
+        rows = rows.join(keep, keys)
+    lists = rows.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(item)).alias("_l")
+    )
+    return lists.select(
+        *keys, "_l", F.posexplode("_l").alias("_i", "a")
+    ).select(
+        *keys, "a", F.explode(F.expr("slice(_l, _i + 2, size(_l))")).alias("b")
+    )
+
+
 def _rare_pair_stream(doc_sets: DataFrame, df_cap: int = GRAM_DF_CAP) -> DataFrame:
     """(doc_id, ghs) → one (doc_a, doc_b) row per SHARED rare gram (so a
     pair appears once per gram it shares — `groupBy(pair).count()` on this
-    stream IS the rare-gram intersection size). Built as ONE shuffle: the
-    inverted index groups by gram hash, grams with document frequency
-    outside [2, df_cap] drop out (singletons witness nothing; stop-grams
-    above the cap fan out quadratically while witnessing almost no
-    high-Jaccard pair), and each surviving gram's sorted doc list expands
-    to its C(d,2) ordered pairs NARROWLY in two chained generators — no
-    self-join of the gram stream at all. The expansion is STREAMED:
-    posexplode emits one (ds, i, doc_a) row per member and a second
-    explode over slice(ds, i+2, …) emits each doc_b, so no operator ever
-    materializes the C(d,2) pair array in a single row — peak per-row
-    memory is one O(df_cap)-long doc list (~16 KB at the default cap),
-    not O(df_cap²) structs (~5e7 at the old 10k cap — the executor-OOM
-    shape this replaces). Aggregation state is also bounded: the cap
-    filters on a count aggregate BEFORE the list collect."""
+    stream IS the rare-gram intersection size): the gram posting lists of
+    `_posting_pairs`, with grams of document frequency outside [2, df_cap]
+    dropped (singletons witness nothing; stop-grams above the cap fan out
+    quadratically while witnessing almost no high-Jaccard pair)."""
     inv = doc_sets.select("doc_id", F.explode("ghs").alias("gh"))
-    # DF cap BEFORE any list is collected: a count aggregate (fixed-size
-    # state) decides which grams survive, and only survivors reach the
-    # collect_list — so aggregation state is bounded by df_cap ids per
-    # gram even when a stop-gram spans 10M documents. Both the semi-join
-    # and the collect group hash on gh, so the gram stream's partitioning
-    # is reused rather than re-exchanged.
-    keep = (
-        inv.groupBy("gh")
-        .agg(F.count("*").alias("df"))
-        .filter((F.col("df") >= 2) & (F.col("df") <= df_cap))
-        .select("gh")
-    )
-    byg = (
-        inv.join(keep, "gh")
-        .groupBy("gh")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-    )
-    return byg.select(
-        "ds", F.posexplode("ds").alias("i", "doc_a")
-    ).select(
-        "doc_a",
-        F.explode(F.expr("slice(ds, i + 2, size(ds))")).alias("doc_b"),
+    return _posting_pairs(inv, ["gh"], "doc_id", df_cap).select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
     )
 
 
@@ -236,8 +269,7 @@ def _verbatim_reps(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 def _expand_rep_pairs(
     rep_pairs: DataFrame,
     members: DataFrame,
-    eligible_reps: DataFrame,
-    self_value,
+    eligible: DataFrame,
     value_name: str,
 ) -> DataFrame:
     """Representative-level pairs → full member-level pairs.
@@ -247,14 +279,13 @@ def _expand_rep_pairs(
       grams ⇒ bit-identical metric — this is why the expansion is exact,
       not approximate). Two equi-joins on rep id, ordered by
       least/greatest.
-    - WITHIN-group: every pair inside a group whose representative is
-      `eligible` (has a nonempty gram/token set — empty docs never pair,
-      matching both the unfused op and the oracle) gets the metric's
-      self-value (jaccard 1.0 / hamming 0), which is exactly what the
-      full pipeline computes for a verbatim pair. Side effect vs the
-      unfused jaccard op: verbatim pairs are emitted even when every
-      shared gram exceeds GRAM_DF_CAP — a strict recall IMPROVEMENT that
-      moves the op closer to its own oracle (which has no cap)."""
+    - WITHIN-group: ``eligible`` is (rep_id, value_name): the reps whose
+      verbatim pairs qualify (a nonempty gram/token set — empty docs
+      never pair, matching the oracle) and the metric's value for a
+      verbatim pair (jaccard 1.0, hamming 0, or the whole text's token
+      count for the longest overlap), which is exactly what the full
+      pipeline computes for it. Verbatim pairs are emitted even when
+      every shared gram exceeds GRAM_DF_CAP, as the oracle (no cap) does."""
     mem_a = members.select(
         F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("da")
     )
@@ -270,10 +301,10 @@ def _expand_rep_pairs(
             value_name,
         )
     )
-    m1 = members.join(eligible_reps, "rep_id").select(
-        "rep_id", F.col("doc_id").alias("da")
+    m1 = members.join(eligible, "rep_id").select(
+        "rep_id", F.col("doc_id").alias("da"), value_name
     )
-    m2 = members.join(eligible_reps, "rep_id").select(
+    m2 = members.join(eligible.select("rep_id"), "rep_id").select(
         "rep_id", F.col("doc_id").alias("db")
     )
     within = (
@@ -282,7 +313,7 @@ def _expand_rep_pairs(
         .select(
             F.col("da").alias("doc_a"),
             F.col("db").alias("doc_b"),
-            self_value.alias(value_name),
+            value_name,
         )
     )
     return cross.unionByName(within)
@@ -291,18 +322,8 @@ def _expand_rep_pairs(
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-{_GRAMS_CTE.strip()},
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
-    FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) >= {JACCARD_T}
+WITH {_JACCARD_CTES}
+SELECT doc_a, doc_b, jaccard FROM pairs
 """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,10 +350,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = _shared_members(spark, sf_dir)
     doc_sets = _shared_gram_sets(spark, sf_dir)
     rep_pairs = _rep_jaccard_pairs(spark, sf_dir)
+    eligible = _nonempty_reps(doc_sets).withColumn("jaccard", F.lit(1.0))
     return guard_result(
-        _expand_rep_pairs(
-            rep_pairs, members, _nonempty_reps(doc_sets), F.lit(1.0), "jaccard"
-        )
+        _expand_rep_pairs(rep_pairs, members, eligible, "jaccard")
     )
 
 
@@ -347,12 +367,11 @@ def _rep_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Materialized ONCE per (session, corpus) via ``ckpt.shared_checkpoint``,
     like the gram sets it consumes: FIVE operators walk this graph
     (ngram_jaccard, cluster_cc, cluster_keep_best via cluster_cc,
-    cluster_downweight, plus graph_triangle_count), and before round 13
-    each invocation re-ran the inverted-index pair pipeline — the
-    dominant term in dedup_cluster_cc's wall time (measured ~2.1 s of its
-    ~3.5 s at sf0.1). The pair graph is orders of magnitude smaller than
-    the corpus (pairs over DISTINCT texts, threshold-filtered), so the
-    checkpoint is cheap in either storage mode."""
+    cluster_downweight, plus graph_triangle_count), so none of them
+    re-runs the inverted-index pair pipeline. The pair graph is orders of
+    magnitude smaller than the corpus (pairs over DISTINCT texts,
+    threshold-filtered), so the checkpoint is cheap in either storage
+    mode."""
 
     def build() -> DataFrame:
         doc_sets = _shared_gram_sets(spark, sf_dir)
@@ -475,8 +494,15 @@ def minhash_signature(ghs, gh2s):
     return ((h1[None, :] + perm[:, None] * h2[None, :]) % p).min(axis=1)
 
 
-def minhash_bands(doc_sets: DataFrame, string_keys: bool = False) -> DataFrame:
-    """(doc_id, ghs, gh2s) → (doc_id, band_id, band_hash).
+def _band_keys(
+    doc_sets: DataFrame, string_keys: bool = False
+) -> tuple[DataFrame, Column]:
+    """(doc_id, ghs, gh2s) → ((doc_id, sig) signatures, keys): ``keys`` is
+    the array Column of the N_BANDS LSH band keys of ``sig``, in band
+    order; a doc with an empty gram set gets no row. Callers explode
+    ``keys`` itself, never a projected column of it: Catalyst infers a
+    non-empty filter for a generator over a column and pushes it below the
+    projection, which would evaluate the signature UDF a second time.
 
     Standard double-hashing construction (Kirsch & Mitzenmacher): two base
     hashes per gram, permutation i = (h1 + i·h2) mod p — 2 hash
@@ -487,14 +513,10 @@ def minhash_bands(doc_sets: DataFrame, string_keys: bool = False) -> DataFrame:
     and DuckDB — the whole signature is cross-engine reproducible.
 
     The 64 permutation-mins are computed in an Arrow-batched pandas UDF
-    (one numpy broadcast-matmul per doc) — measured 2× faster than the
-    best JVM shape (explode + 64 codegen'd min aggs), which in turn beat
-    64 `array_min(transform(...))` higher-order calls by 1.8× (HOF
-    lambdas evaluate interpreted, outside codegen). The whole step is
-    NARROW: signatures derive from each doc's own row, so no exchange at
-    any scale; band keys then hash 8 consecutive signature entries
-    (xxhash64 — in-engine equality only; see dedup_minhash's collision
-    note).
+    (one numpy broadcast-matmul per doc). The whole step is NARROW:
+    signatures derive from each doc's own row, so no exchange at any
+    scale; band keys then hash 8 consecutive signature entries (xxhash64 —
+    in-engine equality only; see dedup_minhash's collision note).
 
     ``string_keys=True`` emits the raw '-'-joined signature slice as the
     band key instead of its xxhash64 (matching the oracle's string_agg
@@ -530,120 +552,129 @@ def minhash_bands(doc_sets: DataFrame, string_keys: bool = False) -> DataFrame:
             return F.concat_ws("-", *[e.cast("string") for e in elems])
         return F.xxhash64(*elems)
 
+    return sig, F.array(*[key(b) for b in range(N_BANDS)])
+
+
+def minhash_bands(doc_sets: DataFrame, string_keys: bool = False) -> DataFrame:
+    """(doc_id, ghs, gh2s) → (doc_id, band_id, band_hash) — `_band_keys`
+    exploded to one row per band (the key column is ``bkey`` with
+    ``string_keys=True``)."""
+    sig, keys = _band_keys(doc_sets, string_keys)
     out_col = "bkey" if string_keys else "band_hash"
-    return sig.select(
+    return sig.select("doc_id", F.posexplode(keys).alias("band_id", out_col))
+
+
+def _minhash_ctes(src: str = "documents", col: str = "text", p: str = "") -> str:
+    """The MinHash chain over any (doc_id, {col}) relation, the DuckDB
+    twin of `_minhash_pairs`: `_grams_ctes` → {p}gh (two md5 gram hashes)
+    → {p}sig (64 permutation mins) → {p}bands (string band keys) →
+    {p}cands (docs sharing a band bucket) → {p}inter → {p}pairs (exact
+    Jaccard >= JACCARD_T); ``p`` prefixes CTE names for composition."""
+    return f"""{_grams_ctes(src, col, p)},
+{p}gh AS (
+    SELECT doc_id,
+           ('0x' || substr(md5(gram), 1, 15))::BIGINT AS h1,
+           ('0x' || substr(md5(gram), 16, 15))::BIGINT AS h2
+    FROM {p}grams
+),
+{p}sig AS MATERIALIZED (
+    SELECT doc_id, p.i,
+           min(((h1 % {MERSENNE_P})
+                + p.i * ((h2 % {MERSENNE_P - 1}) + 1)) % {MERSENNE_P}) AS s
+    FROM {p}gh CROSS JOIN (SELECT unnest(range(0, {N_HASH})) AS i) p
+    GROUP BY doc_id, p.i
+),
+{p}bands AS (
+    SELECT doc_id, i // {N_HASH // N_BANDS} AS band_id,
+           string_agg(s::VARCHAR, '-' ORDER BY i) AS bkey
+    FROM {p}sig GROUP BY doc_id, i // {N_HASH // N_BANDS}
+),
+{p}cands AS (
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM {p}bands a
+    JOIN {p}bands b ON a.band_id = b.band_id AND a.bkey = b.bkey
+              AND a.doc_id < b.doc_id
+),
+{p}inter AS (
+    SELECT c.doc_a, c.doc_b, count(*) AS ix
+    FROM {p}cands c
+    JOIN {p}grams ga ON ga.doc_id = c.doc_a
+    JOIN {p}grams gb ON gb.doc_id = c.doc_b AND gb.gram = ga.gram
+    GROUP BY 1, 2
+),
+{_jaccard_cte(p)}"""
+
+
+def _minhash_pairs(doc_sets: DataFrame) -> DataFrame:
+    """(doc_id, ghs, gh2s) md5 gram sets → verified (doc_a, doc_b,
+    jaccard) near-duplicate pairs. Candidates are the pairs inside each
+    LSH band bucket's posting list (`_posting_pairs` keyed on (band_id,
+    band_hash), uncapped like the oracle), so the signature UDF runs once
+    per doc. A pair sharing several buckets is kept only from its first
+    shared band — each list entry carries the doc's band keys — so the
+    candidates are distinct without a shuffle. Every candidate is then
+    verified with exact Jaccard, so the output has no false positives and
+    the bands bound recall only."""
+    sig, keys = _band_keys(doc_sets)
+    bands = sig.select(
         "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        key(b).alias(out_col),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band_id", f"bb.{out_col}")
+        keys.alias("keys"),
+        F.posexplode(keys).alias("band_id", "band_hash"),
+    )
+    first_shared = F.array_position(
+        F.zip_with("a.keys", "b.keys", lambda x, y: x == y), True
+    )
+    cands = (
+        _posting_pairs(
+            bands, ["band_id", "band_hash"], F.struct("doc_id", "keys")
+        )
+        .filter(first_shared == F.col("band_id") + 1)
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+    )
+    return _verify_jaccard(cands, doc_sets.select("doc_id", "ghs"))
 
 
 @query(
     "dedup_minhash",
-    oracle=f"""
-{_GRAMS_CTE.strip()},
-gh AS (
-    SELECT doc_id,
-           ('0x' || substr(md5(gram), 1, 15))::BIGINT AS h1,
-           ('0x' || substr(md5(gram), 16, 15))::BIGINT AS h2
-    FROM grams
-),
-sig AS (
-    SELECT doc_id, p.i,
-           min(((h1 % {MERSENNE_P})
-                + p.i * ((h2 % {MERSENNE_P - 1}) + 1)) % {MERSENNE_P}) AS s
-    FROM gh CROSS JOIN (SELECT unnest(range(0, {N_HASH})) AS i) p
-    GROUP BY doc_id, p.i
-),
-bands AS (
-    SELECT doc_id, i // {N_HASH // N_BANDS} AS band_id,
-           string_agg(s::VARCHAR, '-' ORDER BY i) AS bkey
-    FROM sig GROUP BY doc_id, i // {N_HASH // N_BANDS}
-),
-cands AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a
-    JOIN bands b ON a.band_id = b.band_id AND a.bkey = b.bkey
-              AND a.doc_id < b.doc_id
-),
-inter AS (
-    SELECT c.doc_a, c.doc_b, count(*) AS ix
-    FROM cands c
-    JOIN grams ga ON ga.doc_id = c.doc_a
-    JOIN grams gb ON gb.doc_id = c.doc_b AND gb.gram = ga.gram
-    GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b,
-       CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.doc_a
-JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) >= {JACCARD_T}
-""",
+    oracle=f"WITH {_minhash_ctes()}\nSELECT doc_a, doc_b, jaccard FROM pairs",
 )
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs: shingle → 64-perm minhash → 8-band LSH
-    bucket join → candidates verified with EXACT Jaccard (so the output has
-    no false positives; bands only bound recall). Verified against exact
-    ground truth in tests/test_dedup.py AND an exact DuckDB oracle: every
-    ingredient — md5-derived double hashes (`_doc_gram_sets_md5`), the
-    (h1 + i·h2) mod p permutation mins, band grouping, Jaccard verify —
-    is deterministic integer arithmetic both engines compute identically,
-    so the "approximate" sketch has an exact cross-engine twin (the same
-    trick as sim_search_ann's hyperplane oracle). Sole caveat: Spark keys
-    band buckets by xxhash64 of the 8-row slice while the oracle compares
-    the slices directly — a false CANDIDATE needs a 2^-64 band-hash
-    collision and would still have to pass exact-Jaccard verification to
-    diverge; measure-zero, same class as the ANN oracle's sign-flip note.
+    bucket posting lists → candidates verified with EXACT Jaccard
+    (`_minhash_pairs`). Verified against exact ground truth in
+    tests/test_dedup.py AND an exact DuckDB oracle: every ingredient —
+    md5-derived double hashes (`_doc_gram_sets_md5`), the (h1 + i·h2)
+    mod p permutation mins, band grouping, Jaccard verify — is
+    deterministic integer arithmetic both engines compute identically, so
+    the "approximate" sketch has an exact cross-engine twin. Sole caveat:
+    Spark keys band buckets by xxhash64 of the 8-row slice while the
+    oracle compares the slices directly — a false CANDIDATE needs a 2^-64
+    band-hash collision and would still have to pass exact-Jaccard
+    verification to diverge.
 
     Shuffle budget — 3 exchanges, every one O(docs) or O(candidates),
-    never O(grams): the band self-join keyed on (band_id, band_hash), the
-    candidate distinct, and the verify join of candidate pairs back to
-    the gram-set table (gram sets AND signatures are narrow). Gram sets are built narrowly
-    (_doc_gram_sets), and Jaccard verification is a per-row
-    `array_intersect` — no groupBy, no sizes table, no second pass over
-    grams. The gram-set table feeds three consumers (bands + verify ×2);
-    `_shared_gram_sets_md5` builds it once per (session, corpus) as a
-    shared checkpoint (``ckpt.shared_checkpoint``).
+    never O(grams): the band posting-list collect keyed on (band_id,
+    band_hash), then the two verify joins of candidate pairs back to the
+    gram-set table (one per side; candidates are distinct without a
+    shuffle, see `_minhash_pairs`). Gram sets and signatures are narrow,
+    and the signature UDF runs once per doc. The gram-set table feeds the
+    bands and both verify joins; `_shared_gram_sets_md5` builds it once
+    per (session, corpus) as a shared checkpoint.
 
     Like dedup_ngram_jaccard, verbatim-duplicate groups collapse to one
     representative before signing and expand after: identical texts have
     identical signatures, so an R-clique would collide in EVERY band and
-    cost C(R,2) candidate rows per band — the collapse makes band-join
+    cost C(R,2) candidate rows per band — the collapse makes candidate
     cost a function of distinct texts (verbatim pairs re-enter as exact
     jaccard-1.0 rows, which is what verification yields for them)."""
     release_transient_storage()  # free the previous invocation's blocks
     members = _shared_members(spark, sf_dir)
     doc_sets = _shared_gram_sets_md5(spark, sf_dir)
-    bands = minhash_bands(doc_sets)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    rep_pairs = _verify_jaccard(cands, doc_sets)
+    eligible = _nonempty_reps(doc_sets).withColumn("jaccard", F.lit(1.0))
     return guard_result(
-        _expand_rep_pairs(
-            rep_pairs, members, _nonempty_reps(doc_sets), F.lit(1.0), "jaccard"
-        )
+        _expand_rep_pairs(_minhash_pairs(doc_sets), members, eligible, "jaccard")
     )
 
 
@@ -771,14 +802,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "simhash", "bb.band_id", "bb.band_val")
-    a = banded.alias("a")
-    b = banded.alias("b")
     rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        _posting_pairs(
+            banded, ["band_id", "band_val"], F.struct("doc_id", "simhash")
         )
         .select(
             F.col("a.doc_id").alias("doc_a"),
@@ -792,15 +818,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # a doc appears in sh iff it has ≥1 nonempty token — the oracle's
     # `WHERE len(tok) > 0` stream implies the same membership
-    eligible = sh.select(F.col("doc_id").alias("rep_id"))
+    eligible = sh.select(
+        F.col("doc_id").alias("rep_id"),
+        F.lit(0).cast(rep_pairs.schema["hamming"].dataType).alias("hamming"),
+    )
     return guard_result(
-        _expand_rep_pairs(
-            rep_pairs,
-            members,
-            eligible,
-            F.lit(0).cast(rep_pairs.schema["hamming"].dataType),
-            "hamming",
-        )
+        _expand_rep_pairs(rep_pairs, members, eligible, "hamming")
     )
 
 
@@ -842,25 +865,13 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared oracle scaffolding for the cluster ops: near-dup pairs (same
-# construction as dedup_ngram_jaccard's oracle) → undirected edges →
+# Shared oracle scaffolding for the cluster ops: dedup_ngram_jaccard's
+# oracle pairs (`_JACCARD_CTES`) → undirected edges →
 # transitive closure via recursive CTE → per-node component minimum, then
 # `labels` assigns every document its cluster id (singletons label
 # themselves).
 _CC_CTES = f"""
-WITH RECURSIVE {_GRAMS_CTE.split('WITH', 1)[1].strip()},
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
-    FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-),
-pairs AS (
-    SELECT doc_a, doc_b
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) >= {JACCARD_T}
-),
+WITH RECURSIVE {_JACCARD_CTES},
 edges AS (
     SELECT doc_a AS u, doc_b AS v FROM pairs
     UNION
@@ -1274,12 +1285,7 @@ CONTAIN_T = 0.8  # containment threshold: |A∩B| / |A| for the contained side
 @query(
     "dedup_containment",
     oracle=f"""
-{_GRAMS_CTE.strip()},
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
-    FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-),
+WITH {_INTER_CTES},
 hydrated AS (
     SELECT i.doc_a, i.doc_b, i.ix, sa.sz AS sa, sb.sz AS sb
     FROM inter i
@@ -1424,90 +1430,95 @@ SUBSTR_MIN_OLAP = 16  # report maximal verbatim overlaps of >= 16 tokens
 # expansion to C(2000,2) streamed rows per cap-level gram.
 SUBSTR_OCC_CAP = 2_000
 
-_SUBSTR_ORACLE = f"""
-WITH toks AS (
-    SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws
-    FROM documents
+
+def _substring_ctes(src: str = "documents", col: str = "text", p: str = "") -> str:
+    """The substring chain over any (doc_id, {col}) relation, the DuckDB
+    twin of `_substring_spans` + `_scrub_spans`: {p}toks → {p}pg
+    (positioned SUBSTR_K-grams) → {p}anch (shared-gram anchor pairs,
+    doc_a < doc_b) → {p}runs (gaps-and-islands run ids per diagonal) →
+    {p}sp (maximal runs of >= SUBSTR_MIN_OLAP tokens: doc_a, doc_b, sa,
+    sb, olap) → {p}remd (positions cut from the later doc) → {p}tokpos →
+    {p}kept (doc_id, clean_text, n_removed); ``p`` prefixes CTE names for
+    composition."""
+    return f"""{p}toks AS MATERIALIZED (
+    SELECT doc_id, string_split_regex(lower({col}), '\\s+') AS ws
+    FROM {src}
 ),
-pg AS (
+{p}pg AS MATERIALIZED (
     SELECT doc_id, CAST(i AS INTEGER) AS pos,
            array_to_string(
                ws[CAST(i AS INTEGER):CAST(i + {SUBSTR_K} - 1 AS INTEGER)],
                ' ') AS gram
     FROM (SELECT doc_id, ws,
                  unnest(range(1, len(ws) - {SUBSTR_K} + 2)) AS i
-          FROM toks)
+          FROM {p}toks)
 ),
-anch AS (
+{p}anch AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb
-    FROM pg a JOIN pg b ON a.gram = b.gram AND a.doc_id < b.doc_id
+    FROM {p}pg a JOIN {p}pg b ON a.gram = b.gram AND a.doc_id < b.doc_id
 ),
-runs AS (
-    SELECT doc_a, doc_b, pa, pa - pb AS diag,
+{p}runs AS (
+    SELECT doc_a, doc_b, pa, pb, pa - pb AS diag,
            pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb
                                    ORDER BY pa) AS grp
-    FROM anch
+    FROM {p}anch
 ),
-sp AS (
-    SELECT doc_a, doc_b, max(pa) - min(pa) + {SUBSTR_K} AS olap
-    FROM runs GROUP BY doc_a, doc_b, diag, grp
-)
-SELECT doc_a, doc_b, CAST(max(olap) AS BIGINT) AS olap_tokens
-FROM sp
-WHERE olap >= {SUBSTR_MIN_OLAP}
-GROUP BY doc_a, doc_b
-"""
+{p}sp AS (
+    SELECT doc_a, doc_b, min(pa) AS sa, min(pb) AS sb,
+           max(pa) - min(pa) + {SUBSTR_K} AS olap
+    FROM {p}runs GROUP BY doc_a, doc_b, diag, grp
+    HAVING max(pa) - min(pa) + {SUBSTR_K} >= {SUBSTR_MIN_OLAP}
+),
+{p}remd AS (
+    SELECT DISTINCT doc_b AS doc_id, CAST(sb + u AS INTEGER) AS pos
+    FROM {p}sp, unnest(range(0, olap)) AS t(u)
+),
+{p}tokpos AS (
+    SELECT doc_id, CAST(i AS INTEGER) AS pos, ws[CAST(i AS INTEGER)] AS tok
+    FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i
+          FROM {p}toks)
+),
+{p}kept AS MATERIALIZED (
+    SELECT t.doc_id,
+           coalesce(string_agg(CASE WHEN r.pos IS NULL THEN t.tok END,
+                               ' ' ORDER BY t.pos), '') AS clean_text,
+           count(r.pos) AS n_removed
+    FROM {p}tokpos t
+    LEFT JOIN {p}remd r ON r.doc_id = t.doc_id AND r.pos = t.pos
+    GROUP BY t.doc_id
+)"""
 
 
-def _rep_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Representative-level maximal verbatim overlap spans — the shared
-    engine under dedup_substring (pair-level longest-overlap report) and
-    dedup_substring_scrub (span removal): one row (doc_a, doc_b, sa, sb,
-    olap) per maximal shared token run of >= SUBSTR_MIN_OLAP tokens
-    between distinct representative texts, where sa/sb are the run's
-    1-based start positions in each text.
+def _word_toks(docs: DataFrame, col: str = "text") -> DataFrame:
+    """(doc_id, {col}) → (doc_id, ws, n): the lowercased whitespace token
+    array and its length — the tokenization both substring builders and
+    their oracle (`{p}toks`) share."""
+    return docs.select(
+        "doc_id", F.split(F.lower(col), r"\s+").alias("ws")
+    ).withColumn("n", F.size("ws"))
 
-    Matches are found as maximal chains of positionally-consecutive shared
+
+def _substring_spans(toks: DataFrame) -> DataFrame:
+    """(doc_id, ws, n) token arrays → (doc_a, doc_b, sa, sb, olap): one
+    row per maximal shared token run of >= SUBSTR_MIN_OLAP tokens between
+    two distinct docs (doc_a < doc_b), where sa/sb are the run's 1-based
+    start positions in each doc.
+
+    Matches are maximal chains of positionally-consecutive shared
     SUBSTR_K-gram anchors: two docs share an L-token run iff they share
     L-K+1 consecutive aligned anchors, so maximal anchor runs on a (doc_a,
     doc_b, pos_a - pos_b) diagonal ARE the maximal overlaps — the
     gaps-and-islands identity (run id = pos - row_number over the
-    diagonal) both engines state identically, which is what buys the
-    exact DuckDB oracles downstream (re-proved against brute force in
-    tests/test_property.py).
+    diagonal) both engines state identically (re-proved against brute
+    force in tests/test_property.py).
 
-    Never all-pairs, by the same inverted-index discipline as
-    dedup_ngram_jaccard: anchors meet only inside a gram's posting list
-    (ONE shuffle keyed by gram hash), the occurrence cap bounds each
-    list's pair fan-out (SUBSTR_OCC_CAP comment), and the expansion is
-    STREAMED via chained posexplode/slice generators — no C(o,2) array is
-    ever one row (the _rare_pair_stream shape, carrying (doc, pos) structs
-    so position survives into the chain stage). Exchanges downstream are
-    keyed by (pair, diagonal) — skew-bounded by real overlap length, not
-    corpus size. Anchors are xxhash64 of the gram string (in-engine join
-    key only; the oracles join raw strings — the usual 2^-64 collision
-    class).
-
-    Materialized ONCE per (session, corpus) via ``ckpt.shared_checkpoint``
-    (r16, guide §1.2 step 1): dedup_substring and dedup_substring_scrub
-    both start from this exact table, and each invocation was rebuilding
-    the whole anchor index + chain pipeline privately — the same
-    dedupe-the-build reasoning as ``_rep_jaccard_pairs``. The table is
-    O(overlapping pairs) rows, far below the gram sets already cached."""
-    return shared_checkpoint(
-        spark, sf_dir, "rep_substring_spans",
-        lambda: _build_rep_substring_spans(spark, sf_dir),
-    )
-
-
-def _build_rep_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lazy span pipeline behind `_rep_substring_spans` (see its
-    docstring for the algorithm); separated so the shared-materialize
-    wrapper stays one expression."""
-    reps = _shared_rep_docs(spark, sf_dir)
-    toks = reps.select(
-        "doc_id", F.split(F.lower("text"), r"\s+").alias("ws")
-    ).select("doc_id", "ws", F.size("ws").alias("n"))
+    Never all-pairs: anchors meet only inside a gram's posting list
+    (`_posting_pairs` over (doc_id, pos) structs, capped at
+    SUBSTR_OCC_CAP occurrences — see its comment). Exchanges downstream
+    are keyed by (pair, diagonal) — skew-bounded by real overlap length,
+    not corpus size. Anchors are xxhash64 of the gram string (in-engine
+    join key only; the oracles join raw strings — the usual 2^-64
+    collision class)."""
     pg = (
         toks.filter(F.col("n") >= SUBSTR_K)
         .select(
@@ -1524,42 +1535,20 @@ def _build_rep_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         # posexplode is 0-based; the oracle's positions are 1-based
         .select("doc_id", (F.col("p0") + 1).alias("pos"), "gh")
     )
-    # occurrence cap decided by a fixed-size count aggregate BEFORE any
-    # posting list is collected; both the semi-join and the collect hash
-    # on gh, so the gram stream's partitioning is reused
-    keep = (
-        pg.groupBy("gh")
-        .agg(F.count("*").alias("occ"))
-        .filter((F.col("occ") >= 2) & (F.col("occ") <= SUBSTR_OCC_CAP))
-        .select("gh")
-    )
-    byg = (
-        pg.join(keep, "gh")
-        .groupBy("gh")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "pos"))
-            ).alias("os")
-        )
-    )
     anch = (
-        byg.select("os", F.posexplode("os").alias("i", "ea"))
+        _posting_pairs(pg, ["gh"], F.struct("doc_id", "pos"), SUBSTR_OCC_CAP)
+        # sorted structs make a.doc_id <= b.doc_id; drop within-doc pairs
+        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
         .select(
-            "ea",
-            F.explode(F.expr("slice(os, i + 2, size(os))")).alias("eb"),
-        )
-        # sorted structs make ea.doc_id <= eb.doc_id; drop within-doc pairs
-        .filter(F.col("ea.doc_id") != F.col("eb.doc_id"))
-        .select(
-            F.col("ea.doc_id").alias("doc_a"),
-            F.col("eb.doc_id").alias("doc_b"),
-            F.col("ea.pos").alias("pa"),
-            F.col("eb.pos").alias("pb"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.pos").alias("pa"),
+            F.col("b.pos").alias("pb"),
         )
         .withColumn("diag", F.col("pa") - F.col("pb"))
     )
     w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
-    spans = (
+    return (
         anch.withColumn("grp", F.col("pa") - F.row_number().over(w))
         .groupBy("doc_a", "doc_b", "diag", "grp")
         .agg(
@@ -1570,126 +1559,114 @@ def _build_rep_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("olap") >= SUBSTR_MIN_OLAP)
         .select("doc_a", "doc_b", "sa", "sb", "olap")
     )
-    return spans
 
 
-@query("dedup_substring", oracle=_SUBSTR_ORACLE)
+def _scrub_spans(toks: DataFrame, spans: DataFrame) -> DataFrame:
+    """(doc_id, ws, n) token arrays + `_substring_spans` rows → (doc_id,
+    clean_text, n_removed): each doc's tokens joined by single spaces
+    with every span where it is the LATER (doc_b) side cut out
+    (keep-first), and the number of positions cut. Overlapping spans
+    union; a doc with no token row (NULL text) emits no row."""
+    rem = (
+        spans.select(
+            F.col("doc_b").alias("doc_id"),
+            F.explode(
+                F.sequence(F.col("sb"), F.col("sb") + F.col("olap") - 1)
+            ).alias("pos"),
+        )
+        .distinct()
+        .withColumn("rm", F.lit(1))
+    )
+    tokpos = toks.select(
+        "doc_id", F.posexplode("ws").alias("p0", "tok")
+    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "tok")
+    return (
+        tokpos.join(rem, ["doc_id", "pos"], "left")
+        .groupBy("doc_id")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.when(
+                                F.col("rm").isNull(),
+                                F.struct("pos", "tok"),
+                            )
+                        )
+                    ),
+                    lambda x: x.tok,
+                ),
+                " ",
+            ).alias("clean_text"),
+            F.sum(F.coalesce("rm", F.lit(0))).cast("long").alias("n_removed"),
+        )
+    )
+
+
+def _rep_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`_substring_spans` over the representative docs — the span table
+    dedup_substring (pair-level longest overlap) and dedup_substring_scrub
+    (span removal) both start from, materialized once per (session,
+    corpus) via ``ckpt.shared_checkpoint``. It is O(overlapping pairs)
+    rows, far below the gram sets already cached."""
+    return shared_checkpoint(
+        spark, sf_dir, "rep_substring_spans",
+        lambda: _build_rep_substring_spans(spark, sf_dir),
+    )
+
+
+def _build_rep_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy span plan behind `_rep_substring_spans`."""
+    return _substring_spans(_word_toks(_shared_rep_docs(spark, sf_dir)))
+
+
+@query(
+    "dedup_substring",
+    oracle=f"""
+WITH {_substring_ctes()}
+SELECT doc_a, doc_b, CAST(max(olap) AS BIGINT) AS olap_tokens
+FROM sp
+GROUP BY doc_a, doc_b
+""",
+)
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document substring dedup, pair-level report: for every pair
     of distinct documents sharing a verbatim token run >= SUBSTR_MIN_OLAP,
-    the LONGEST such overlap — `_rep_substring_spans` holds the span
-    machinery and the full design rationale; this op folds its maximal
-    spans to one row per pair and member-expands (identical texts =>
+    the LONGEST such overlap — the maximal spans of `_rep_substring_spans`
+    folded to one row per pair and member-expanded (identical texts =>
     identical positioned grams => identical max overlap, so carrying the
     rep value is exact even for texts with internal repeats — the extra
-    off-diagonal runs are never the max)."""
+    off-diagonal runs are never the max). A verbatim pair's longest
+    overlap is the whole text, so within-group pairs take the rep's token
+    count where it reaches SUBSTR_MIN_OLAP."""
     release_transient_storage()  # free the previous invocation's blocks
     members = _shared_members(spark, sf_dir)
-    reps = _shared_rep_docs(spark, sf_dir)
-    toks = reps.select(
-        "doc_id", F.split(F.lower("text"), r"\s+").alias("ws")
-    ).select("doc_id", F.size("ws").alias("n"))
+    toks = _word_toks(_shared_rep_docs(spark, sf_dir))
+    eligible = toks.filter(F.col("n") >= SUBSTR_MIN_OLAP).select(
+        F.col("doc_id").alias("rep_id"),
+        F.col("n").cast("long").alias("olap_tokens"),
+    )
     rep_pairs = (
         _rep_substring_spans(spark, sf_dir)
         .groupBy("doc_a", "doc_b")
         .agg(F.max("olap").cast("long").alias("olap_tokens"))
     )
-    # member expansion (identical texts => identical positioned grams =>
-    # identical max overlap, so carrying the rep value is exact)
-    mem_a = members.select(
-        F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("da")
+    return guard_result(
+        _expand_rep_pairs(rep_pairs, members, eligible, "olap_tokens")
     )
-    mem_b = members.select(
-        F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("db")
-    )
-    cross = (
-        rep_pairs.join(mem_a, "doc_a")
-        .join(mem_b, "doc_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "olap_tokens",
-        )
-    )
-    # within-group: a verbatim pair's longest overlap is the whole text
-    elig = toks.filter(F.col("n") >= SUBSTR_MIN_OLAP).select(
-        F.col("doc_id").alias("rep_id"),
-        F.col("n").cast("long").alias("olap_tokens"),
-    )
-    w1 = members.join(elig, "rep_id").select(
-        "rep_id", F.col("doc_id").alias("da"), "olap_tokens"
-    )
-    w2 = members.join(elig.select("rep_id"), "rep_id").select(
-        "rep_id", F.col("doc_id").alias("db")
-    )
-    within = (
-        w1.join(w2, "rep_id")
-        .filter(F.col("da") < F.col("db"))
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            "olap_tokens",
-        )
-    )
-    return guard_result(cross.unionByName(within))
 
 
-_SCRUB_ORACLE = f"""
-WITH toks AS (
-    SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws
-    FROM documents
-),
-pg AS (
-    SELECT doc_id, CAST(i AS INTEGER) AS pos,
-           array_to_string(
-               ws[CAST(i AS INTEGER):CAST(i + {SUBSTR_K} - 1 AS INTEGER)],
-               ' ') AS gram
-    FROM (SELECT doc_id, ws,
-                 unnest(range(1, len(ws) - {SUBSTR_K} + 2)) AS i
-          FROM toks)
-),
-anch AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb
-    FROM pg a JOIN pg b ON a.gram = b.gram AND a.doc_id < b.doc_id
-),
-runs AS (
-    SELECT doc_a, doc_b, pa, pb, pa - pb AS diag,
-           pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb
-                                   ORDER BY pa) AS grp
-    FROM anch
-),
-sp AS (
-    SELECT doc_a, doc_b, min(pb) AS sb,
-           max(pa) - min(pa) + {SUBSTR_K} AS olap
-    FROM runs GROUP BY doc_a, doc_b, diag, grp
-),
-remd AS (
-    SELECT DISTINCT doc_b AS doc_id, CAST(sb + u AS INTEGER) AS pos
-    FROM sp, unnest(range(0, olap)) AS t(u)
-    WHERE olap >= {SUBSTR_MIN_OLAP}
-),
-tokpos AS (
-    SELECT doc_id, CAST(i AS INTEGER) AS pos, ws[CAST(i AS INTEGER)] AS tok
-    FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i FROM toks)
-),
-kept AS (
-    SELECT t.doc_id,
-           coalesce(string_agg(CASE WHEN r.pos IS NULL THEN t.tok END,
-                               ' ' ORDER BY t.pos), '') AS clean_text,
-           count(r.pos) AS n_removed
-    FROM tokpos t
-    LEFT JOIN remd r ON r.doc_id = t.doc_id AND r.pos = t.pos
-    GROUP BY t.doc_id
-)
+@query(
+    "dedup_substring_scrub",
+    oracle=f"""
+WITH {_substring_ctes()}
 SELECT d.doc_id,
        CASE WHEN d.text IS NULL THEN NULL ELSE k.clean_text END
            AS clean_text,
        CAST(coalesce(k.n_removed, 0) AS BIGINT) AS n_removed
 FROM documents d LEFT JOIN kept k ON k.doc_id = d.doc_id
-"""
-
-
-@query("dedup_substring_scrub", oracle=_SCRUB_ORACLE)
+""",
+)
 def dedup_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document substring REMOVAL — the apply step of Lee et al.'s
     train-data dedup: every maximal verbatim overlap >= SUBSTR_MIN_OLAP
@@ -1719,60 +1696,25 @@ def dedup_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
       qualifying span needs olap >= MIN_OLAP <= token count, so no span
       can involve its text at all.
 
-    Token-level scrubbing therefore runs over DISTINCT texts only (rep
-    token stream, position-level anti-flag against the exploded span
-    union, one ordered re-join), and members take their class's answer
-    through the member map — the cleaned corpus is emitted per doc
-    (output-linear, this op's floor — same class as text_chunk_overlap)
-    while the token SHUFFLE scales with distinct text volume."""
+    Token-level scrubbing (`_scrub_spans`) therefore runs over DISTINCT
+    texts only, and members take their class's answer through the member
+    map — the cleaned corpus is emitted per doc (output-linear, this op's
+    floor) while the token SHUFFLE scales with distinct text volume."""
     release_transient_storage()  # free the previous invocation's blocks
     members = _shared_members(spark, sf_dir)
-    reps = _shared_rep_docs(spark, sf_dir)
-    toks = reps.select(
+    toks = _word_toks(_shared_rep_docs(spark, sf_dir))
+    rep_out = _scrub_spans(toks, _rep_substring_spans(spark, sf_dir)).select(
         F.col("doc_id").alias("rep_id"),
-        F.split(F.lower("text"), r"\s+").alias("ws"),
-    ).withColumn("n", F.size("ws"))
-    spans = _rep_substring_spans(spark, sf_dir)
-    # rep-level removal positions: spans where the group is the later side
-    rep_rem = (
-        spans.select(
-            F.col("doc_b").alias("rep_id"),
-            F.explode(
-                F.sequence(F.col("sb"), F.col("sb") + F.col("olap") - 1)
-            ).alias("pos"),
-        )
-        .distinct()  # overlapping spans union
-        .withColumn("rm", F.lit(1))
-    )
-    rep_toks = toks.select(
-        "rep_id", F.posexplode("ws").alias("p0", "tok")
-    ).select("rep_id", (F.col("p0") + 1).alias("pos"), "tok")
-    rep_out = (
-        rep_toks.join(rep_rem, ["rep_id", "pos"], "left")
-        .groupBy("rep_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("rm").isNull(),
-                                F.struct("pos", "tok"),
-                            )
-                        )
-                    ),
-                    lambda x: x.tok,
-                ),
-                " ",
-            ).alias("rep_clean"),
-            F.sum(F.coalesce("rm", F.lit(0))).cast("long").alias("rep_rm"),
-        )
+        F.col("clean_text").alias("rep_clean"),
+        F.col("n_removed").alias("rep_rm"),
     )
     # members take their class's answer (NULL-text groups produce no
     # token rows, so their members fall through both joins to NULL/0,
     # like the oracle)
     full = toks.select(
-        "rep_id", F.array_join("ws", " ").alias("full_text"), "n"
+        F.col("doc_id").alias("rep_id"),
+        F.array_join("ws", " ").alias("full_text"),
+        "n",
     )
     is_rep = F.col("doc_id") == F.col("rep_id")
     scrub_all = (~is_rep) & (F.col("n") >= SUBSTR_MIN_OLAP)

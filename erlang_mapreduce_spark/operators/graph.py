@@ -341,24 +341,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_oracle() -> str:
-    """The DuckDB twin, composed from dedup's gram CTEs so the edge set
-    is definitionally dedup_ngram_jaccard's oracle output."""
-    from .dedup import _GRAMS_CTE, JACCARD_T
+    """The DuckDB twin, composed from `dedup._JACCARD_CTES` so the edge
+    set is definitionally dedup_ngram_jaccard's oracle output."""
+    from .dedup import _JACCARD_CTES
 
     return f"""
-{_GRAMS_CTE.strip()},
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
-    FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-),
-eg AS (
-    SELECT doc_a AS u, doc_b AS v
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) >= {JACCARD_T}
-),
+WITH {_JACCARD_CTES},
+eg AS (SELECT doc_a AS u, doc_b AS v FROM pairs),
 deg AS (
     SELECT node, count(*) AS d
     FROM (SELECT u AS node FROM eg UNION ALL SELECT v AS node FROM eg)

@@ -90,18 +90,14 @@ from .curation import (
     with_qc_scores,
 )
 from .dedup import (
-    JACCARD_T,
-    MERSENNE_P,
-    N_BANDS,
-    N_GRAM,
-    N_HASH,
-    SUBSTR_K,
-    SUBSTR_MIN_OLAP,
-    SUBSTR_OCC_CAP,
     _doc_gram_sets,
     _doc_gram_sets_md5,
-    _verify_jaccard,
-    minhash_bands,
+    _minhash_ctes,
+    _minhash_pairs,
+    _scrub_spans,
+    _substring_ctes,
+    _substring_spans,
+    _word_toks,
 )
 from .pipeline import SEQ_BUDGET, _SHARD_SQL, _shard_col
 
@@ -168,11 +164,10 @@ def quality_flags(gated: DataFrame) -> DataFrame:
     `pipeline_pretrain_e2e` can materialize ONE corpus pass that feeds
     stages 2-6: the lazy stage chain re-ran the regex-heavy gate+scrub
     three times (stage-2/3 agg, stage-4 count, stage-5 materialize) and
-    the Gopher tokenize twice (r16 measurement: those two subtrees were
-    the dominant repeated work in the capstone's ~28 s cell). Still
-    ZERO exchanges and no joins — the same plan-budget class as the
-    filters it fuses; the classifier verdict crosses the Arrow boundary
-    as ONE narrow batched projection (`with_qc_scores`)."""
+    the Gopher tokenize twice. Still ZERO exchanges and no joins — the
+    same plan-budget class as the filters it fuses; the classifier
+    verdict crosses the Arrow boundary as ONE narrow batched projection
+    (`with_qc_scores`)."""
     ws, ls, n_sym = _gopher_arrays(F.col("scrubbed"))
     g = with_qc_scores(gated, "scrubbed").withColumns(
         {"_gws": ws, "_gls": ls, "_gsym": n_sym}
@@ -264,29 +259,13 @@ def exact_dedup(g6: DataFrame) -> DataFrame:
 
 
 def minhash_survivors(dd: DataFrame, sets_md5: DataFrame) -> DataFrame:
-    """Stage 8: dedup_minhash's banded-LSH candidates + exact-Jaccard
-    verify over the exact-deduped corpus, then drop the LATER side of
-    every verified pair (keep-first, like every dedup stage here).
-    ``sets_md5`` is `_doc_gram_sets_md5` over dd's scrubbed texts,
-    passed in so the op can materialize it once for its three consumers
-    (bands + verify ×2)."""
-    bands = minhash_bands(sets_md5)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    """Stage 8: dedup_minhash's verified pairs (`_minhash_pairs`) over the
+    exact-deduped corpus, then drop the LATER side of every verified pair
+    (keep-first, like every dedup stage here). ``sets_md5`` is
+    `_doc_gram_sets_md5` over dd's scrubbed texts, passed in so the op can
+    materialize it once for its three consumers (bands + verify ×2)."""
     drops = (
-        _verify_jaccard(cands, sets_md5.select("doc_id", "ghs"))
+        _minhash_pairs(sets_md5)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -295,102 +274,17 @@ def minhash_survivors(dd: DataFrame, sets_md5: DataFrame) -> DataFrame:
 
 def substring_clean(mh: DataFrame) -> DataFrame:
     """Stage 9: cross-document substring removal over the near-dedup
-    survivors — dedup_substring_scrub's machinery (positioned
-    SUBSTR_K-gram anchors in an occurrence-capped inverted index,
-    gaps-and-islands maximal runs, keep-first span deletion), run
-    directly at doc level: exact dedup already collapsed verbatim
-    groups, so no rep/member indirection is needed. Emits (doc_id, lang,
-    source, clean_text) — the lowercased whitespace-normalized token
-    stream with every >= SUBSTR_MIN_OLAP-token duplicated span cut from
-    the LATER document."""
-    toks = mh.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.split(F.lower("scrubbed"), r"\s+").alias("ws"),
-    ).withColumn("n", F.size("ws"))
-    pg = (
-        toks.filter(F.col("n") >= SUBSTR_K)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("n") - (SUBSTR_K - 1)),
-                    lambda i: F.xxhash64(
-                        F.array_join(F.slice("ws", i, SUBSTR_K), " ")
-                    ),
-                )
-            ).alias("p0", "gh"),
-        )
-        .select("doc_id", (F.col("p0") + 1).alias("pos"), "gh")
+    survivors — dedup_substring_scrub's span and scrub builders
+    (`_substring_spans`, `_scrub_spans`) run directly at doc level: exact
+    dedup already collapsed verbatim groups, so no rep/member indirection
+    is needed. Emits (doc_id, lang, source, clean_text) — the lowercased
+    whitespace-normalized token stream with every >= SUBSTR_MIN_OLAP-token
+    duplicated span cut from the LATER document."""
+    toks = _word_toks(mh, "scrubbed")
+    clean = _scrub_spans(toks, _substring_spans(toks)).select(
+        "doc_id", "clean_text"
     )
-    keep = (
-        pg.groupBy("gh")
-        .agg(F.count("*").alias("occ"))
-        .filter((F.col("occ") >= 2) & (F.col("occ") <= SUBSTR_OCC_CAP))
-        .select("gh")
-    )
-    byg = (
-        pg.join(keep, "gh")
-        .groupBy("gh")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "pos"))).alias("os"))
-    )
-    anch = (
-        byg.select("os", F.posexplode("os").alias("i", "ea"))
-        .select(
-            "ea",
-            F.explode(F.expr("slice(os, i + 2, size(os))")).alias("eb"),
-        )
-        .filter(F.col("ea.doc_id") != F.col("eb.doc_id"))
-        .select(
-            F.col("ea.doc_id").alias("doc_a"),
-            F.col("eb.doc_id").alias("doc_b"),
-            F.col("ea.pos").alias("pa"),
-            F.col("eb.pos").alias("pb"),
-        )
-        .withColumn("diag", F.col("pa") - F.col("pb"))
-    )
-    w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
-    spans = (
-        anch.withColumn("grp", F.col("pa") - F.row_number().over(w))
-        .groupBy("doc_a", "doc_b", "diag", "grp")
-        .agg(
-            F.min("pb").alias("sb"),
-            (F.max("pa") - F.min("pa") + SUBSTR_K).alias("olap"),
-        )
-        .filter(F.col("olap") >= SUBSTR_MIN_OLAP)
-    )
-    rem = (
-        spans.select(
-            F.col("doc_b").alias("doc_id"),
-            F.explode(
-                F.sequence(F.col("sb"), F.col("sb") + F.col("olap") - 1)
-            ).alias("pos"),
-        )
-        .distinct()
-        .withColumn("rm", F.lit(1))
-    )
-    tokpos = toks.select(
-        "doc_id", F.posexplode("ws").alias("p0", "tok")
-    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "tok")
-    clean = (
-        tokpos.join(rem, ["doc_id", "pos"], "left")
-        .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("rm").isNull(), F.struct("pos", "tok"))
-                        )
-                    ),
-                    lambda x: x["tok"],
-                ),
-                " ",
-            ).alias("clean_text")
-        )
-    )
-    return toks.select("doc_id", "lang", "source").join(clean, "doc_id")
+    return mh.select("doc_id", "lang", "source").join(clean, "doc_id")
 
 
 def decontaminate(raw_docs: DataFrame, docs6: DataFrame) -> DataFrame:
@@ -453,7 +347,7 @@ gated AS MATERIALIZED (
           / length(text) < 0.2
 )"""
 
-# Stages 4-6 — the r15 quality battery composed the order real pipelines
+# Stages 4-6 — the quality battery composed in the order real pipelines
 # run it (Gopher rules → model classifier → global line dedup, then the
 # document-level dedups): the gopher/classifier/line CTE chains are the
 # standalone ops' own shared templates retargeted at the gated scrubbed
@@ -517,108 +411,16 @@ dd AS MATERIALIZED (
 )"""
 
 _MINHASH_SQL = f"""
-mtoks AS (
-    SELECT doc_id, string_split_regex(lower(scrubbed), '\\s+') AS ws FROM dd
-),
-mgrams AS MATERIALIZED (
-    SELECT DISTINCT doc_id,
-           array_to_string(ws[CAST(i AS INTEGER):CAST(i + {N_GRAM} - 1 AS INTEGER)], ' ') AS gram
-    FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - {N_GRAM} + 2)) AS i
-          FROM mtoks)
-),
-msizes AS (SELECT doc_id, count(*) AS sz FROM mgrams GROUP BY doc_id),
-mgh AS (
-    SELECT doc_id,
-           ('0x' || substr(md5(gram), 1, 15))::BIGINT AS h1,
-           ('0x' || substr(md5(gram), 16, 15))::BIGINT AS h2
-    FROM mgrams
-),
-msig AS MATERIALIZED (
-    SELECT doc_id, p.i,
-           min(((h1 % {MERSENNE_P})
-                + p.i * ((h2 % {MERSENNE_P - 1}) + 1)) % {MERSENNE_P}) AS s
-    FROM mgh CROSS JOIN (SELECT unnest(range(0, {N_HASH})) AS i) p
-    GROUP BY doc_id, p.i
-),
-mbands AS (
-    SELECT doc_id, i // {N_HASH // N_BANDS} AS band_id,
-           string_agg(s::VARCHAR, '-' ORDER BY i) AS bkey
-    FROM msig GROUP BY doc_id, i // {N_HASH // N_BANDS}
-),
-mcands AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM mbands a
-    JOIN mbands b ON a.band_id = b.band_id AND a.bkey = b.bkey
-              AND a.doc_id < b.doc_id
-),
-minter AS (
-    SELECT c.doc_a, c.doc_b, count(*) AS ix
-    FROM mcands c
-    JOIN mgrams ga ON ga.doc_id = c.doc_a
-    JOIN mgrams gb ON gb.doc_id = c.doc_b AND gb.gram = ga.gram
-    GROUP BY 1, 2
-),
-mdrop AS MATERIALIZED (
-    SELECT DISTINCT i.doc_b AS doc_id
-    FROM minter i
-    JOIN msizes sa ON sa.doc_id = i.doc_a
-    JOIN msizes sb ON sb.doc_id = i.doc_b
-    WHERE CAST(ix AS DOUBLE) / (sa.sz + sb.sz - ix) >= {JACCARD_T}
-),
+{_minhash_ctes(src="dd", col="scrubbed", p="m")},
 mh AS MATERIALIZED (
-    SELECT * FROM dd WHERE doc_id NOT IN (SELECT doc_id FROM mdrop)
+    SELECT * FROM dd WHERE doc_id NOT IN (SELECT doc_b FROM mpairs)
 )"""
 
 _SCRUB_SQL = f"""
-stoks AS MATERIALIZED (
-    SELECT doc_id, lang, source,
-           string_split_regex(lower(scrubbed), '\\s+') AS ws
-    FROM mh
-),
-spg AS MATERIALIZED (
-    SELECT doc_id, CAST(i AS INTEGER) AS pos,
-           array_to_string(
-               ws[CAST(i AS INTEGER):CAST(i + {SUBSTR_K} - 1 AS INTEGER)],
-               ' ') AS gram
-    FROM (SELECT doc_id, ws,
-                 unnest(range(1, len(ws) - {SUBSTR_K} + 2)) AS i
-          FROM stoks)
-),
-sanch AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb
-    FROM spg a JOIN spg b ON a.gram = b.gram AND a.doc_id < b.doc_id
-),
-sruns AS (
-    SELECT doc_a, doc_b, pa, pb, pa - pb AS diag,
-           pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb
-                                   ORDER BY pa) AS grp
-    FROM sanch
-),
-ssp AS (
-    SELECT doc_a, doc_b, min(pb) AS sb,
-           max(pa) - min(pa) + {SUBSTR_K} AS olap
-    FROM sruns GROUP BY doc_a, doc_b, diag, grp
-),
-sremd AS (
-    SELECT DISTINCT doc_b AS doc_id, CAST(sb + u AS INTEGER) AS pos
-    FROM ssp, unnest(range(0, olap)) AS t(u)
-    WHERE olap >= {SUBSTR_MIN_OLAP}
-),
-stokpos AS (
-    SELECT doc_id, CAST(i AS INTEGER) AS pos, ws[CAST(i AS INTEGER)] AS tok
-    FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i FROM stoks)
-),
-skept AS MATERIALIZED (
-    SELECT t.doc_id,
-           coalesce(string_agg(CASE WHEN r.pos IS NULL THEN t.tok END,
-                               ' ' ORDER BY t.pos), '') AS clean_text
-    FROM stokpos t
-    LEFT JOIN sremd r ON r.doc_id = t.doc_id AND r.pos = t.pos
-    GROUP BY t.doc_id
-),
+{_substring_ctes(src="mh", col="scrubbed", p="s")},
 docs6 AS MATERIALIZED (
-    SELECT s.doc_id, s.lang, s.source, k.clean_text
-    FROM stoks s JOIN skept k USING (doc_id)
+    SELECT m.doc_id, m.lang, m.source, k.clean_text
+    FROM mh m JOIN skept k USING (doc_id)
 )"""
 
 _DECON_SQL = f"""
@@ -793,22 +595,16 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.append((1, "ingest", docs.count(), None))
 
     # ONE materialized corpus pass carries the scrub plus both quality
-    # verdicts (guide §1.2 step 1 / §2.4: remove repeated passes before
-    # per-task tuning). The lazy chain re-ran gate_and_scrub (two
-    # corpus-wide regexp_replace) THREE times — under the stage-2/3 agg,
-    # the stage-4 count, and the stage-5 materialize — and the Gopher
-    # tokenize twice; flags make stages 2-5 cheap scans of one
+    # verdicts, so gate_and_scrub (two corpus-wide regexp_replace) and the
+    # Gopher tokenize run once and stages 2-5 are cheap scans of one
     # checkpoint. Filtering rule_keep then cls_keep equals filtering the
-    # conjunction, so every stage count (and the oracle hash) is
-    # unchanged — verified against the DuckDB oracle after the rewrite.
-    # scan_parallel first (guide §2.5 input parallelism): the documents
-    # scan is a single ~50 MB split at bench SFs, and the flag pass's
-    # per-row work (two scrub regexes + the Gopher arrays + the
-    # classifier's interpreted hashed-ngram fold) is the most expensive
-    # narrow projection in the engine — left on the scan's own splits it
-    # ran on ONE core (measured 6.6 s vs 0.75 s at sf0.1 for this
-    # subtree alone). At 100 TB the scan already has >= cores splits and
-    # scan_parallel is a no-op.
+    # conjunction, so every stage count (and the oracle hash) is the same
+    # as the staged chain's. scan_parallel first: the documents scan can
+    # be a single split, and the flag pass's per-row work (two scrub
+    # regexes + the Gopher arrays + the classifier's hashed-ngram fold) is
+    # the most expensive narrow projection in the engine — left on the
+    # scan's own splits it would run on one core. When the scan already
+    # has >= cores splits, scan_parallel is a no-op.
     flagged = pooled_checkpoint(
         quality_flags(gate_and_scrub(scan_parallel(docs))),
         "pretrain_flags",
@@ -828,8 +624,8 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact order Gopher/RefinedWeb run before any document dedup —
     # counts come from the flag sums above (same one-pass agg). `or 0`
     # guards the degenerate all-filtered corpus: F.sum over zero rows is
-    # NULL where the previous g4.count()/g5.count() (and the oracle's
-    # count(*)) return 0 (r16 ADVICE item 1; stage 3 already guards t).
+    # NULL where the oracle's count(*) returns 0 (stage 3 guards t the
+    # same way).
     rows.append((4, "gopher_rules", g["c4"] or 0, None))
     rows.append((5, "quality_classifier", g["c5"] or 0, None))
 

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from ..ckpt import scratch
 from ..exact import md5_prefix_int
+from ..operators.dedup import _doc_gram_sets_md5, _minhash_ctes, minhash_bands
 from ..registry import query
 from ..session import scoped_conf
 from ..tables import fingerprint, load
@@ -773,43 +774,10 @@ _DOC_SCHEMA = T.StructType(
 )
 
 
-def _minhash_oracle_prefix() -> str:
-    """Shared CTE chain: documents → md5 gram hashes → 64-perm signatures
-    → string band keys — the dedup_minhash oracle's construction, reused
-    verbatim so the streaming dedup's flags are definitionally LSH flags
-    over the SAME index."""
-    from ..operators.dedup import (
-        _GRAMS_CTE,
-        MERSENNE_P,
-        N_BANDS,
-        N_HASH,
-    )
-
-    return f"""
-{_GRAMS_CTE.strip()},
-gh AS (
-    SELECT doc_id,
-           ('0x' || substr(md5(gram), 1, 15))::BIGINT AS h1,
-           ('0x' || substr(md5(gram), 16, 15))::BIGINT AS h2
-    FROM grams
-),
-sig AS (
-    SELECT doc_id, p.i,
-           min(((h1 % {MERSENNE_P})
-                + p.i * ((h2 % {MERSENNE_P - 1}) + 1)) % {MERSENNE_P}) AS s
-    FROM gh CROSS JOIN (SELECT unnest(range(0, {N_HASH})) AS i) p
-    GROUP BY doc_id, p.i
-),
-bands AS (
-    SELECT doc_id, CAST(i // {N_HASH // N_BANDS} AS INTEGER) AS band_id,
-           string_agg(s::VARCHAR, '-' ORDER BY i) AS bkey
-    FROM sig GROUP BY doc_id, i // {N_HASH // N_BANDS}
-)"""
-
-
 @query(
     "stream_minhash_dedup",
-    oracle=_minhash_oracle_prefix() + """,
+    oracle=f"""
+WITH {_minhash_ctes()},
 own AS (SELECT band_id, bkey, min(doc_id) AS owner FROM bands GROUP BY 1, 2),
 fl AS (
     SELECT b.doc_id,
@@ -853,13 +821,12 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         pooled_checkpoint,
         release_transient_storage,
     )
-    from ..operators.dedup import _doc_gram_sets_md5, minhash_bands
 
     # Scope the pooled-checkpoint lease snapshot to THIS invocation: without
-    # the release, repeated calls accumulate pooled blocks (the BENCH_r03
-    # leak class) and guard_result below would snapshot leases accrued by
-    # earlier runs, so LRU eviction of an unrelated entry could spuriously
-    # raise CheckpointReleasedError when this result is forced (r13 ADVICE).
+    # the release, repeated calls accumulate pooled blocks and guard_result
+    # below would snapshot leases accrued by earlier runs, so LRU eviction
+    # of an unrelated entry could spuriously raise CheckpointReleasedError
+    # when this result is forced.
     release_transient_storage()
     d = _materialize_chunks(sf_dir, "docs")
     state_schema = "band_id int, bkey string, owner long"

@@ -193,9 +193,18 @@ def test_gram_df_cap_drops_stop_grams(spark, sf_dir):
     """A gram above the DF cap must generate NO candidate pairs, while
     rare-gram pairs are unaffected. Synthetic corpus: every doc shares the
     stop-gram 'x y z'; only docs 1/2 share a rare gram (and are true
-    near-dups)."""
+    near-dups). Underneath, `_posting_pairs` must emit exactly the i<j
+    pairs of each sorted posting list (a multiset, so repeated items
+    count), checked against brute-force combinations over seeded random
+    buckets for a plain-id item and a (doc_id, pos) struct item, each
+    uncapped and capped."""
+    import itertools
+    import random
+    from collections import Counter, defaultdict
+
     from erlang_mapreduce_spark.operators.dedup import (
         _doc_gram_sets,
+        _posting_pairs,
         _rare_pair_stream,
     )
 
@@ -221,6 +230,38 @@ def test_gram_df_cap_drops_stop_grams(spark, sf_dir):
     }
     # cap 3 kills the stop-gram; only the rare-gram pair survives
     assert capped == {(1, 2)}
+
+    rng = random.Random(11)
+    rows = [
+        (rng.randrange(12), rng.randrange(40), rng.randrange(30))
+        for _ in range(300)
+    ]
+    buckets = defaultdict(list)
+    for k, d, p in rows:
+        buckets[k].append((d, p))
+    sizes = sorted(len(v) for v in buckets.values())
+    cap = sizes[len(sizes) // 2]
+    assert sizes[0] < cap < sizes[-1]  # the cap drops some buckets
+    df = spark.createDataFrame(rows, "k int, doc_id long, pos int")
+
+    def brute(key, cap):
+        out = Counter()
+        for vs in buckets.values():
+            if cap is None or 2 <= len(vs) <= cap:
+                out.update(itertools.combinations(sorted(map(key, vs)), 2))
+        return out
+
+    cases = [
+        ("doc_id", lambda v: v[0], lambda x: x),
+        (F.struct("doc_id", "pos"), lambda v: v, tuple),
+    ]
+    for item, key, cell in cases:
+        for c in (None, cap):
+            got = Counter(
+                (cell(r.a), cell(r.b))
+                for r in _posting_pairs(df, ["k"], item, c).collect()
+            )
+            assert got == brute(key, c), (item, c)
 
 
 def test_cc_large_small_star_beats_diameter(spark, sf_dir):
@@ -717,7 +758,7 @@ def test_dedup_semantic_zero_norm_twins(spark, tmp_path):
 
 
 def test_substring_spans_shared_across_ops(spark, sf_dir):
-    """r16: `_rep_substring_spans` is materialized once per (session,
+    """`_rep_substring_spans` is materialized once per (session,
     corpus) via `ckpt.shared_checkpoint` and REUSED by dedup_substring and
     dedup_substring_scrub — the `_rep_jaccard_pairs` dedupe-the-build
     device. Pins (a) a `rep_substring_spans` key lands in the shared LRU

@@ -240,7 +240,7 @@ def test_frame_sample_is_narrow(spark, sf_dir):
 
 def test_minhash_bands_no_key_exchange(spark, sf_dir):
     """Gram sets and signatures must be NARROW: the only exchange allowed
-    before the LSH band self-join is the round-robin parallelism bootstrap
+    before the band posting lists is the round-robin parallelism bootstrap
     (scan_parallel) — never a key-hash exchange over the gram stream."""
     from erlang_mapreduce_spark.operators.dedup import (
         _doc_gram_sets_md5,
@@ -252,6 +252,14 @@ def test_minhash_bands_no_key_exchange(spark, sf_dir):
     p = plan_of(minhash_bands(_doc_gram_sets_md5(docs)))
     assert "Exchange hashpartitioning" not in p, p
     assert "ArrowEvalPython" in p  # the numpy signature stage
+
+
+def test_dedup_minhash_signs_once(spark, sf_dir):
+    """dedup_minhash's executed plan evaluates the signature UDF once:
+    candidates come from the band posting lists of one signature pass,
+    never from a band self-join that signs each side separately."""
+    p = final_plan_of(QUERIES["dedup_minhash"](spark, sf_dir))
+    assert count_nodes(p, "ArrowEvalPython") == 1, p
 
 
 def test_tfidf_scalar_broadcast_not_repartition(spark, sf_dir):
@@ -392,12 +400,10 @@ def test_dedup_substring_posting_list_shape(spark, sf_dir):
     and a bounded exchange budget — a regression to a gram self-join or
     a second window cannot land silently.
 
-    r16: the span table is `ckpt.shared_checkpoint`ed across
-    dedup_substring/dedup_substring_scrub (the `_rep_jaccard_pairs`
-    device), so the OP plan reads the shared checkpoint — the pin now
-    targets the span BUILDER's lazy plan, where the shape lives, and
-    additionally asserts the op plan really does consume the checkpoint
-    (no private rebuild)."""
+    The span table is `ckpt.shared_checkpoint`ed across dedup_substring
+    and dedup_substring_scrub, so the pin targets the span BUILDER's lazy
+    plan, where the shape lives, and asserts the op plan consumes the
+    checkpoint (no private rebuild)."""
     from erlang_mapreduce_spark.operators.dedup import (
         _build_rep_substring_spans,
     )
@@ -494,8 +500,10 @@ def test_pretrain_capstone_stage_budgets(spark, sf_dir):
     the weight table memoized worker-side, never joined); the global
     line dedup spends <= 4
     (line-key agg + join-back + doc reassembly) with NO window; exact
-    dedup is ONE keyed shuffle; the minhash stage spends 3 (band
-    self-join + candidate distinct + verify hydration); substring scrub
+    dedup is ONE keyed shuffle; the minhash stage spends at most 3 (band
+    posting-list collect + drop-set distinct + the anti join back to the
+    corpus; verify hydration broadcasts at this scale) and signs each doc
+    once (one ArrowEvalPython); substring scrub
     5 with exactly one run window (the dedup_substring posting-list
     shape); decontaminate 2 (train-gram explode agg + the anti join —
     the eval side rides a broadcast). A regression anywhere (a gram
@@ -520,7 +528,7 @@ def test_pretrain_capstone_stage_budgets(spark, sf_dir):
     g5 = pt.classifier_filter(g4)
     p5 = plan_of(g5)
     assert count_nodes(p5, "Exchange") == 0, p5
-    # r17: the classifier is the Arrow-vectorized scorer — exactly ONE
+    # the classifier is the Arrow-vectorized scorer — exactly ONE
     # batched boundary crossing, never the row-at-a-time path
     assert "BatchEvalPython" not in p5, p5
     assert count_nodes(p5, "ArrowEvalPython") == 1, p5
@@ -541,7 +549,9 @@ def test_pretrain_capstone_stage_budgets(spark, sf_dir):
         ddc.select("doc_id", F.col("scrubbed").alias("text"))
     ).localCheckpoint()
     mh = pt.minhash_survivors(ddc, sets)
-    assert count_nodes(plan_of(mh), "Exchange") <= 3
+    pm = plan_of(mh)
+    assert count_nodes(pm, "Exchange") <= 3, pm
+    assert count_nodes(pm, "ArrowEvalPython") == 1, pm
 
     mhc = mh.localCheckpoint()
     docs6 = pt.substring_clean(mhc)
