@@ -1743,50 +1743,19 @@ SEM_COS_T = 0.4  # within-cell near-dup threshold (fixture-scaled; SemDeDup
 # uses ~0.95+ on web-image embeddings — the dial, not the algorithm)
 
 
-def _sem_assign_cte() -> str:
-    """DuckDB CTE chain extending similarity._ivf_cte(): assign every
-    embedding to its nearest trained centroid (int64-micro distances,
-    argmin ties to the lowest cell — the sim_search_ivf oracle shape) and
-    build per-cell centroid vectors as double lists for cosine scoring."""
-    from .similarity import IVF_DIM
+def _sem_oracle() -> str:
+    from .similarity import IVF_ITERS, IVF_K, _assign_ctes, _lloyd_ctes
 
-    return f"""
-edim AS MATERIALIZED (
-    SELECT vec_id, CAST(i AS INTEGER) AS dim, vm[CAST(i AS INTEGER)] AS val
-    FROM em, range(1, {IVF_DIM + 1}) t(i)
-),
-dists AS MATERIALIZED (
-    SELECT e.vec_id, c.cell,
-           sum((e.val - c.val) * (e.val - c.val)) AS d
-    FROM edim e JOIN cen c USING (dim)
-    GROUP BY 1, 2
-),
-assign AS MATERIALIZED (
-    SELECT vec_id, cell FROM (
-        SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY d, cell) AS rn
-        FROM dists
-    ) WHERE rn = 1
-),
+    return f"""{_lloyd_ctes(1, IVF_K, IVF_ITERS)}{_assign_ctes()},
 cvec AS MATERIALIZED (
     SELECT cell, list(CAST(val AS DOUBLE) ORDER BY dim) AS cv
-    FROM cen GROUP BY cell
+    FROM cb GROUP BY cell
 ),
-ev AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-"""
-
-
-def _sem_oracle() -> str:
-    from .similarity import _ivf_cte
-
-    return f"""
-{_ivf_cte().rstrip().rstrip(',')},
-{_sem_assign_cte().strip()},
+ev AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 mem AS MATERIALIZED (
     SELECT a.vec_id, a.cell,
            round(list_cosine_similarity(ev.v, cvec.cv), 6) AS cent_cos
-    FROM assign a JOIN ev USING (vec_id) JOIN cvec USING (cell)
+    FROM codes a JOIN ev USING (vec_id) JOIN cvec USING (cell)
 ),
 dups AS MATERIALIZED (
     SELECT b.vec_id
@@ -1820,14 +1789,14 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic sample (driver numpy over ≤IVF_TRAIN_CAP vectors —
     corpus-size-independent); verbatim-identical vectors collapse to one
     representative BEFORE pairing (see the inline proof — crawl corpora
-    are full of byte-identical embeddings, and the r14 scaling probe
-    measured the uncollapsed pair join at alpha 1.19 on replicated data
-    vs 0.03 collapsed); assignment is one narrow Arrow pass; the
-    within-cell candidate join is an equi-join on `cell` (no all-pairs,
+    are full of byte-identical embeddings, and without the collapse the
+    pair join grows with the square of each duplicate group); assignment
+    is one narrow Arrow pass; the within-cell candidate join is an
+    equi-join on `cell` (no all-pairs,
     no CartesianProduct — the global plan sweep checks) with the
     Arrow-vectorized cosine in the filter. At fixture scale K=16 cells
-    bound parallelism; at 100 TB K grows ~sqrt(N) (the IVF_K note,
-    similarity.py:309) so cells stay ~constant-size, the equi-join
+    bound parallelism; at 100 TB K grows ~sqrt(N) (the IVF_K note in
+    similarity.py) so cells stay ~constant-size, the equi-join
     shuffles O(N) rows, and per-cell pairwise work is
     O(distinct·cell_size) — SemDeDup's own scaling argument.
     Keep-rule determinism: ranks compare
@@ -1836,34 +1805,28 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine exact; recall vs brute force is pinned in
     tests/test_dedup.py). Reference scope: beyond mapreduce.erl (no
     reference counterpart); included per the LLM-pipeline brief."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    from .similarity import _MICRO, IVF_DIM, _cos_pandas, _train_centroids
+    from .similarity import (
+        IVF_ITERS,
+        IVF_K,
+        _cos_pandas,
+        _nearest_cell_udf,
+        _train_codebooks,
+    )
 
     e = scan_parallel(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    Cm = _train_centroids(e)
-    if Cm.size == 0:  # empty corpus: no row reaches the UDF, but the
-        Cm = np.zeros((1, IVF_DIM), dtype=np.int64)  # closure needs a shape
-
-    @pandas_udf("int")
-    def nearest_cell(v: pd.Series) -> pd.Series:
-        X = np.floor(np.stack(v.to_numpy()) * _MICRO).astype(np.int64)
-        d = ((X[:, None, :] - Cm[None, :, :]) ** 2).sum(-1)
-        return pd.Series(d.argmin(1))  # ties → lowest cell
-
+    C = _train_codebooks(e, 1, IVF_K, IVF_ITERS)[0]
+    nearest_cell = _nearest_cell_udf(C)
     cents = spark.createDataFrame(
-        [(cell, [float(x) for x in vec]) for cell, vec in enumerate(Cm.tolist())],
+        [(cell, [float(x) for x in vec]) for cell, vec in enumerate(C.tolist())],
         "cell int, cv array<double>",
     )
     # Arrow-vectorized cosine for BOTH scoring sites — the pair filter is
     # the op's hot path (O(Σ cell²) evaluations) and the interpreted
     # zip_with fold measured 10x the wall time at the probe's replicated
     # 10x scale; round-6 makes numpy's pairwise summation and DuckDB's
-    # sequential loop agree (the sim_search precedent, hash-green since r6)
+    # sequential loop agree (the sim_search precedent)
     cos = _cos_pandas()
     # VERBATIM COLLAPSE (the pair-op device of this module): identical
     # vectors share a cell, a centroid cosine, and pairwise cosine 1.0, so

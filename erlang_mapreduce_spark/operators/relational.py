@@ -15,7 +15,7 @@ DECIMAL (see exact.py) so the oracle hash is order-independent.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..exact import davg, davg_sql, dsum, dsum_sql, md5_prefix_int
@@ -1041,6 +1041,39 @@ KMV_K = 256  # minima retained per group (KMV standard error ~ 1/sqrt(k-2))
 _KMV_NUM = float((KMV_K - 1) << 60)
 
 
+def kmv_estimate(m: Column, kth: Column) -> Column:
+    """The KMV distinct-count estimate from ``m`` retained minima whose
+    KMV_K-th smallest hash is ``kth``: the exact count while m < KMV_K,
+    else (k-1)/u_(k) with u the 60-bit hash mapped to (0, 1)."""
+    return F.when(m < KMV_K, m.cast("double")).otherwise(
+        F.lit(_KMV_NUM) / kth.cast("double")
+    )
+
+
+def kmv_oracle(src: str, item: str, keys: str, key_exprs: str = "") -> str:
+    """DuckDB KMV oracle: the KMV_K smallest distinct md5-60 hashes of
+    ``item`` per ``keys`` group over ``src`` (a FROM clause, filters
+    included), folded by the `kmv_estimate` rule. ``key_exprs`` derives
+    the keys from ``src`` columns when they are not plain columns."""
+    return f"""
+WITH h AS (
+    SELECT DISTINCT {key_exprs or keys},
+           ('0x' || substr(md5(CAST({item} AS VARCHAR)), 1, 15))::BIGINT AS h
+    FROM {src}
+),
+r AS (
+    SELECT {keys}, h,
+           row_number() OVER (PARTITION BY {keys} ORDER BY h) AS rn
+    FROM h
+)
+SELECT {keys},
+       CAST(count(*) AS BIGINT) AS k_used,
+       CASE WHEN count(*) < {KMV_K} THEN CAST(count(*) AS DOUBLE)
+            ELSE {_KMV_NUM!r} / CAST(max(h) AS DOUBLE) END AS est_distinct
+FROM r WHERE rn <= {KMV_K} GROUP BY {keys}
+"""
+
+
 def kmv_sketch_partition(k: int):
     """Factory for the per-partition KMV pass of `agg_kmv_distinct`: fold
     Arrow batches into the k smallest DISTINCT hashes per group, bounded
@@ -1070,23 +1103,9 @@ def kmv_sketch_partition(k: int):
 
 @query(
     "agg_kmv_distinct",
-    oracle=f"""
-WITH h AS (
-    SELECT DISTINCT o_orderpriority,
-           ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT AS h
-    FROM orders WHERE o_custkey IS NOT NULL
-),
-r AS (
-    SELECT o_orderpriority, h,
-           row_number() OVER (PARTITION BY o_orderpriority ORDER BY h) AS rn
-    FROM h
-)
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS k_used,
-       CASE WHEN count(*) < {KMV_K} THEN CAST(count(*) AS DOUBLE)
-            ELSE {_KMV_NUM!r} / CAST(max(h) AS DOUBLE) END AS est_distinct
-FROM r WHERE rn <= {KMV_K} GROUP BY o_orderpriority
-""",
+    oracle=kmv_oracle(
+        "orders WHERE o_custkey IS NOT NULL", "o_custkey", "o_orderpriority"
+    ),
 )
 def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct customers per order priority via a K-MINIMUM-VALUES
@@ -1129,32 +1148,18 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return arr.select(
         F.col("grp").alias("o_orderpriority"),
         m.cast("long").alias("k_used"),
-        F.when(m < KMV_K, m.cast("double"))
-        .otherwise(F.lit(_KMV_NUM) / F.element_at("arr", KMV_K).cast("double"))
-        .alias("est_distinct"),
+        kmv_estimate(m, F.element_at("arr", KMV_K)).alias("est_distinct"),
     )
 
 
 @query(
     "rollup_sketch_hierarchy",
-    oracle=f"""
-WITH h AS (
-    SELECT DISTINCT event_type,
-           strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-           ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-    FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-),
-r AS (
-    SELECT event_type, day, h,
-           row_number() OVER (PARTITION BY event_type, day ORDER BY h) AS rn
-    FROM h
-)
-SELECT event_type, day,
-       CAST(count(*) AS BIGINT) AS k_used,
-       CASE WHEN count(*) < {KMV_K} THEN CAST(count(*) AS DOUBLE)
-            ELSE {_KMV_NUM!r} / CAST(max(h) AS DOUBLE) END AS est_distinct
-FROM r WHERE rn <= {KMV_K} GROUP BY event_type, day
-""",
+    oracle=kmv_oracle(
+        "events WHERE user_id IS NOT NULL AND ts IS NOT NULL",
+        "user_id",
+        "event_type, day",
+        "event_type, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day",
+    ),
 )
 def rollup_sketch_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical distinct-count rollup via KMV sketch MERGE — the
@@ -1214,7 +1219,5 @@ def rollup_sketch_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = F.count("*")
     return day_sk.groupBy("event_type", "day").agg(
         m.cast("long").alias("k_used"),
-        F.when(m < KMV_K, m.cast("double"))
-        .otherwise(F.lit(_KMV_NUM) / F.max("h").cast("double"))
-        .alias("est_distinct"),
+        kmv_estimate(m, F.max("h")).alias("est_distinct"),
     )

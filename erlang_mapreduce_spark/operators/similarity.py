@@ -12,8 +12,10 @@ north-star ANN).
 - sim_search_ivf / ivf_centroids: centroid-routed ANN. Training, int64
   micro routing (assignment + nprobe probe set), and the round-6 cosine
   re-rank are all cross-engine-exact, so BOTH the trained index table
-  and the end-to-end search carry exact-hash oracles (the search was
-  rows-only before round 8).
+  and the end-to-end search carry exact-hash oracles.
+- sim_search_pq / pq_codebooks: product quantization. IVF is its
+  single-subspace case: both train with `_train_codebooks` and both
+  oracles render from `_lloyd_ctes` + `_assign_ctes`.
 
 Two cosine implementations, used deliberately:
 - `cosine_col`: sequential double fold (zip_with + aggregate) —
@@ -54,7 +56,7 @@ def norm_col(a: Column) -> Column:
 
 
 def cosine_col(a: Column, b: Column) -> Column:
-    # Zero-norm convention (r15, matches _cos_pandas and DuckDB's
+    # Zero-norm convention (matches _cos_pandas and DuckDB's
     # list_cosine_similarity): -1.0, never NULL/NaN/divide-by-zero.
     # Under ANSI mode (Spark 4 default) the bare `/` ERRORS on a
     # zero-norm operand — a single zero embedding crashed the whole
@@ -76,7 +78,7 @@ def _cos_pandas():
     the top-k output is identical (asserted against the fold
     implementation in tests).
 
-    Zero-norm convention (r15): numpy's 0/0 is NaN, which Arrow hands to
+    Zero-norm convention: numpy's 0/0 is NaN, which Arrow hands to
     Spark as NULL — while every oracle scores cosine via DuckDB's
     list_cosine_similarity, which returns **-1.0** for any zero-norm
     operand. Unaligned, a zero embedding in a corpus makes top-k outputs
@@ -340,33 +342,13 @@ def _spread_hash(col: Column) -> Column:
     return md5_prefix_int(col, 15) % 4
 
 
-def _train_sample(e: DataFrame) -> DataFrame:
-    """The k-means training sample as a DataFrame: a deterministic 1-in-4
-    hash spread, total-ordered by vec_id, then hard-capped by LIMIT. The
-    LIMIT is what makes the driver-side collect safe at ANY corpus size —
-    at 100 TB this plan still moves at most IVF_TRAIN_CAP vectors
-    (~50 MB at dim 64) to the driver, vs the unbounded 25 % fraction a
-    bare hash filter would ship. tests/test_dedup.py pins the GlobalLimit
-    in this plan."""
-    return (
-        e.filter(_spread_hash(F.col("vec_id")) == 0)
-        .orderBy("vec_id")
-        .limit(IVF_TRAIN_CAP)
-        .select("v")
-    )
-
-
-def _sample_micros(e: DataFrame):
-    """The shared deterministic k-means training sample as an int64 micro
-    matrix (N, dim): md5 1-in-4 spread (full-corpus fallback when the
-    spread holds < IVF_K vectors — the probe is LIMIT-bounded so even the
-    branch decision never scans past IVF_K rows), total-ordered by
-    vec_id, hard-capped by LIMIT (driver-side collect safe at any corpus
-    size; the GlobalLimit is pinned in tests/test_dedup.py). Used by both
-    the IVF trainer and the PQ codebook trainer so the two indexes train
-    on the IDENTICAL sample."""
-    import numpy as np
-
+def _sample_df(e: DataFrame) -> DataFrame:
+    """The k-means training sample plan: (vec_id, vm) with vm the int64
+    micro vector. md5 1-in-4 spread, or the full corpus when the spread
+    holds fewer than IVF_K vectors; total-ordered by vec_id and capped by
+    LIMIT IVF_TRAIN_CAP, so the driver-side collect is bounded at any
+    corpus size. The fallback probe is LIMIT-bounded too: the branch
+    decision never scans past IVF_K rows."""
     em = e.select(
         "vec_id",
         F.expr(
@@ -374,42 +356,46 @@ def _sample_micros(e: DataFrame):
         ).alias("vm"),
     )
     spread = em.filter(_spread_hash(F.col("vec_id")) == 0)
-    # fallback probe: "does the spread hold at least IVF_K vectors?" needs
-    # only IVF_K rows, so LIMIT bounds the probe scan (a bare count() here
-    # would scan the full corpus just to pick a branch at 100 TB)
     base = spread if spread.limit(IVF_K).count() >= IVF_K else em
-    sample = base.orderBy("vec_id").limit(IVF_TRAIN_CAP).select("vm").collect()
+    return base.orderBy("vec_id").limit(IVF_TRAIN_CAP)
+
+
+def _sample_micros(e: DataFrame):
+    """The collected training sample as an int64 micro matrix (N, dim);
+    (0, 0) for an empty corpus."""
+    import numpy as np
+
+    sample = _sample_df(e).select("vm").collect()
     if not sample:
         return np.zeros((0, 0), dtype=np.int64)
     return np.array([r.vm for r in sample], dtype=np.int64)
 
 
-def _train_centroids(e: DataFrame):
-    """Lloyd's k-means on a DETERMINISTIC bounded sample, driver-side
-    numpy — the standard IVF recipe: the index structure is trained on a
-    sample, never the full corpus, so training cost is independent of
-    corpus size. Determinism is total, down to cross-ENGINE exactness:
-    vectors quantize to integer MICROS (floor(x·1e6) — the graph_pagerank
-    trick), distances/assignments are int64 arithmetic with ties to the
-    lowest cell, and each new centroid coordinate is
-    floor(double(Σ micros)/members) — every step an operation numpy and
-    DuckDB compute bit-identically, which is what lets `ivf_centroids`
-    carry an exact-hash oracle instead of a rows-only check. Sample =
-    md5-hash 1-in-4 spread, ordered by vec_id, LIMIT-capped; init = first
-    K sample vectors; no RNG anywhere. The centroid count clamps to the
-    sample size (a tiny fixture may yield < IVF_K vectors); an empty
-    corpus yields an empty (0, 0) centroid array. Returns int64 micro
-    centroids, shape (k, dim)."""
+def _micros(v: pd.Series):
+    """An Arrow batch of double vectors as an int64 micro matrix:
+    floor(x·1e6), the quantization the trainer's sample uses."""
     import numpy as np
 
-    X = _sample_micros(e)
-    if X.size == 0:
-        return np.zeros((0, 0), dtype=np.int64)
-    k = min(IVF_K, len(X))
+    return np.floor(np.stack(v.to_numpy()) * _MICRO).astype(np.int64)
+
+
+def _sq_dists(X, C):
+    """(n, k) int64 squared distances from the rows of X to the rows of C;
+    exact, since dim·(2·max micro)² ≪ 2^63."""
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+
+
+def _lloyd(X, k: int, iters: int):
+    """Lloyd's k-means on int64 micros: init = the first k rows, each round
+    assigns every row to its nearest cell (ties → lowest cell, numpy's
+    first-index argmin) and moves each non-empty cell to
+    floor(double(Σ micros)/members). Every step is arithmetic DuckDB
+    computes bit-identically, which is what `_lloyd_ctes` relies on."""
+    import numpy as np
+
     C = X[:k].copy()
-    for _ in range(IVF_ITERS):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        a = d.argmin(1)  # ties → lowest cell (numpy first index)
+    for _ in range(iters):
+        a = _sq_dists(X, C).argmin(1)
         for j in range(k):
             members = a == j
             if members.any():
@@ -419,43 +405,80 @@ def _train_centroids(e: DataFrame):
     return C
 
 
-def _ivf_cte() -> str:
-    """DuckDB twin of `_train_centroids`, IVF_ITERS Lloyd rounds unrolled
-    as chained CTEs (the graph_pagerank construction): micro-quantized
-    sample → per-dim long rows → per-round argmin assignment (row_number
-    ordered by (dist, cell) = numpy argmin's first-index tie-break) →
-    per-cell floored integer means, empty cells coalescing to their
-    previous coordinates. All arithmetic is int64 + one exact
-    double-divide per mean (sums < 2^53), so the centroid table
-    hash-matches the engine's bit for bit. Ends at ``cen(cell, dim,
-    val)``; shared by the `ivf_centroids` and `sim_search_ivf` oracles
-    (the PQ twin `_pq_cte` generalizes the same chain per subspace)."""
-    rounds = []
-    for i in range(1, IVF_ITERS + 1):
-        p = i - 1
-        rounds.append(f"""
+def _train_codebooks(e: DataFrame, m: int, k: int, iters: int):
+    """Integer k-means codebooks for every vector index, trained on one
+    deterministic bounded sample (`_sample_micros`) with no RNG: the
+    vector splits into m subspaces of dim // m dims and each runs
+    `_lloyd` independently. IVF is the single-subspace case
+    (m=1, k=IVF_K), PQ the m=PQ_M case. The cell count k clamps to the
+    sample size, and an empty corpus yields zero cells. Returns int64
+    micros of shape (m, k', dim // m)."""
+    import numpy as np
+
+    X = _sample_micros(e)
+    if X.size == 0:
+        return np.zeros((m, 0, IVF_DIM // m), dtype=np.int64)
+    k = min(k, len(X))
+    return np.stack([_lloyd(S, k, iters) for S in np.split(X, m, axis=1)])
+
+
+def _nearest_cell_udf(C):
+    """Arrow UDF routing each vector to its nearest row of the int64 micro
+    centroids C (ties → lowest cell). An empty C (empty corpus) is padded
+    to one zero cell: no row reaches the UDF, but its closure needs a
+    shape."""
+    import numpy as np
+
+    from pyspark.sql.functions import pandas_udf
+
+    if C.size == 0:
+        C = np.zeros((1, IVF_DIM), dtype=np.int64)
+
+    @pandas_udf("int")
+    def nearest_cell(v: pd.Series) -> pd.Series:
+        return pd.Series(_sq_dists(_micros(v), C).argmin(1))
+
+    return nearest_cell
+
+
+def _lloyd_ctes(m: int, k: int, iters: int) -> str:
+    """DuckDB twin of `_train_codebooks(e, m, k, iters)`: the same sample
+    (em → spread → pick → samp), the vector split into per-(sub, dim) long
+    rows, and `iters` Lloyd rounds unrolled as chained CTEs (the
+    graph_pagerank construction). Each round assigns by row_number ordered
+    by (dist, cell) — numpy argmin's first-index tie-break — and moves
+    each cell to its floored integer mean, empty cells keeping their
+    coordinates. All arithmetic is int64 plus one exact double divide per
+    mean (sums < 2^53), so the codebooks hash-match the engine's bit for
+    bit. Ends at ``cb(sub, cell, dim, val)``; `pos(i, sub, dim)` maps a
+    1-based vector position to its subspace coordinate."""
+    dsub = IVF_DIM // m
+    rounds = "".join(
+        f""",
 a{i} AS MATERIALIZED (
-    SELECT sid, cell FROM (
-        SELECT d.sid, d.cell,
-               row_number() OVER (PARTITION BY d.sid
+    SELECT sid, sub, cell FROM (
+        SELECT d.sid, d.sub, d.cell,
+               row_number() OVER (PARTITION BY d.sid, d.sub
                                   ORDER BY d.dist, d.cell) AS rn
-        FROM (SELECT s.sid, c.cell,
+        FROM (SELECT s.sid, s.sub, c.cell,
                      sum((s.val - c.val) * (s.val - c.val)) AS dist
-              FROM sdim s JOIN c{p} c USING (dim)
-              GROUP BY s.sid, c.cell) d
+              FROM sdim s JOIN c{i - 1} c ON c.sub = s.sub AND c.dim = s.dim
+              GROUP BY 1, 2, 3) d
     ) WHERE rn = 1
 ),
 c{i} AS MATERIALIZED (
-    SELECT c.cell, c.dim, coalesce(m.val, c.val) AS val
-    FROM c{p} c
+    SELECT c.sub, c.cell, c.dim, coalesce(m.val, c.val) AS val
+    FROM c{i - 1} c
     LEFT JOIN (
-        SELECT a{i}.cell, s.dim,
+        SELECT a.sub, a.cell, s.dim,
                CAST(floor(CAST(sum(s.val) AS DOUBLE) / count(*)) AS BIGINT)
                    AS val
-        FROM a{i} JOIN sdim s USING (sid)
-        GROUP BY 1, 2
-    ) m ON m.cell = c.cell AND m.dim = c.dim
-)""")
+        FROM a{i} a JOIN sdim s ON s.sid = a.sid AND s.sub = a.sub
+        GROUP BY 1, 2, 3
+    ) m ON m.sub = c.sub AND m.cell = c.cell AND m.dim = c.dim
+)"""
+        for i in range(1, iters + 1)
+    )
     return f"""
 WITH em AS MATERIALIZED (
     SELECT vec_id,
@@ -479,30 +502,59 @@ samp AS MATERIALIZED (
         SELECT vec_id, vm FROM em WHERE (SELECT use_all FROM pick)
     ) ORDER BY vec_id LIMIT {IVF_TRAIN_CAP}
 ),
+pos AS (
+    SELECT CAST(i AS INTEGER) AS i,
+           CAST((i - 1) // {dsub} AS INTEGER) AS sub,
+           CAST((i - 1) % {dsub} + 1 AS INTEGER) AS dim
+    FROM range(1, {IVF_DIM + 1}) t(i)
+),
 sdim AS MATERIALIZED (
-    SELECT sid, CAST(i AS INTEGER) AS dim, vm[CAST(i AS INTEGER)] AS val
-    FROM samp, range(1, {IVF_DIM + 1}) t(i)
+    SELECT sid, sub, dim, vm[i] AS val FROM samp, pos
 ),
 ranked AS MATERIALIZED (SELECT vm, row_number() OVER (ORDER BY sid) AS rn FROM samp),
 c0 AS MATERIALIZED (
-    SELECT CAST(rn - 1 AS INTEGER) AS cell, CAST(i AS INTEGER) AS dim,
-           vm[CAST(i AS INTEGER)] AS val
-    FROM ranked, range(1, {IVF_DIM + 1}) t(i)
-    WHERE rn <= {IVF_K}
-),{",".join(rounds)},
-cen AS MATERIALIZED (SELECT cell, dim, val FROM c{IVF_ITERS})
-"""
+    SELECT sub, CAST(rn - 1 AS INTEGER) AS cell, dim, vm[i] AS val
+    FROM ranked, pos
+    WHERE rn <= {k}
+){rounds},
+cb AS MATERIALIZED (SELECT sub, cell, dim, val FROM c{iters})"""
+
+
+def _assign_ctes() -> str:
+    """Continues `_lloyd_ctes`: every embedding's squared micro distance to
+    every cell of its subspaces, ``dists(vec_id, sub, cell, d)``, and its
+    nearest cell per subspace, ``codes(vec_id, sub, cell)`` (ties → lowest
+    cell). For IVF (one subspace) `codes` is the cell assignment."""
+    return """,
+edim AS MATERIALIZED (
+    SELECT vec_id, sub, dim, vm[i] AS val FROM em, pos
+),
+dists AS MATERIALIZED (
+    SELECT e.vec_id, e.sub, c.cell,
+           sum((e.val - c.val) * (e.val - c.val)) AS d
+    FROM edim e JOIN cb c ON c.sub = e.sub AND c.dim = e.dim
+    GROUP BY 1, 2, 3
+),
+codes AS MATERIALIZED (
+    SELECT vec_id, sub, cell FROM (
+        SELECT vec_id, sub, cell,
+               row_number() OVER (PARTITION BY vec_id, sub
+                                  ORDER BY d, cell) AS rn
+        FROM dists
+    ) WHERE rn = 1
+)"""
 
 
 @query(
     "ivf_centroids",
-    oracle=_ivf_cte() + "\nSELECT cell, dim, val AS c_micro FROM cen",
+    oracle=_lloyd_ctes(1, IVF_K, IVF_ITERS)
+    + "\nSELECT cell, dim, val AS c_micro FROM cb",
 )
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained IVF index STRUCTURE as a table — (cell, dim, c_micro)
     per centroid coordinate. This is sim_search_ivf's k-means made
     oracle-checkable end to end: training is deterministic integer-micro
-    arithmetic (see `_train_centroids`), so the DuckDB oracle re-derives
+    arithmetic (see `_train_codebooks`), so the DuckDB oracle re-derives
     the identical centroids by unrolling the same Lloyd rounds in SQL.
     Alongside pinning the index for the driver, this is also the shape a
     production pipeline persists/ships: the routing table IS a (small)
@@ -510,7 +562,7 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    C = _train_centroids(e)
+    C = _train_codebooks(e, 1, IVF_K, IVF_ITERS)[0]
     rows = [
         (cell, dim + 1, int(val))
         for cell, vec in enumerate(C.tolist())
@@ -523,25 +575,7 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_search_ivf",
-    oracle=_ivf_cte() + f""",
-edim AS (
-    SELECT vec_id, CAST(i AS INTEGER) AS dim, vm[CAST(i AS INTEGER)] AS val
-    FROM em, range(1, {IVF_DIM + 1}) t(i)
-),
-dists AS (
-    SELECT e.vec_id, c.cell,
-           sum((e.val - c.val) * (e.val - c.val)) AS d
-    FROM edim e JOIN cen c USING (dim)
-    GROUP BY 1, 2
-),
-assign AS (
-    SELECT vec_id, cell FROM (
-        SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY d, cell) AS rn
-        FROM dists
-    ) WHERE rn = 1
-),
+    oracle=_lloyd_ctes(1, IVF_K, IVF_ITERS) + _assign_ctes() + f""",
 probes AS (
     SELECT vec_id AS query_id, cell FROM (
         SELECT vec_id, cell,
@@ -555,7 +589,7 @@ rer AS (
     SELECT p.query_id, a.vec_id AS neighbor_id,
            round(list_cosine_similarity(qe.v, ne.v), 6) AS cos
     FROM probes p
-    JOIN assign a USING (cell)
+    JOIN codes a USING (cell)
     JOIN ev qe ON qe.vec_id = p.query_id
     JOIN ev ne ON ne.vec_id = a.vec_id
     WHERE a.vec_id <> p.query_id
@@ -579,41 +613,29 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     production IVF rebalances by splitting hot cells. Recall vs brute
     force is pinned in tests/test_dedup.py.
 
-    Routing runs on int64 MICROS against the micro centroids (squared
-    distances ≤ dim·(2·maxmicro)² ≪ 2^63 — exact), with numpy's
-    first-index/stable tie-breaks mirrored by the oracle's ``ORDER BY
-    d, cell``; the re-rank is the round-6 cosine both engines compute
-    identically. That makes the WHOLE search — routing, probe set,
-    approximation error included — exact-hash-checked against the
-    DuckDB twin, the same end-to-end guarantee sim_search_pq carries
-    (this op was rows-only before round 8)."""
+    Routing runs on int64 MICROS against the micro centroids, with
+    numpy's first-index/stable tie-breaks mirrored by the oracle's
+    ``ORDER BY d, cell``; the re-rank is the round-6 cosine both engines
+    compute identically. That makes the WHOLE search — routing, probe
+    set, approximation error included — exact-hash-checked against the
+    DuckDB twin, the same end-to-end guarantee sim_search_pq carries."""
     import numpy as np
+
+    from pyspark.sql.functions import pandas_udf
 
     e = scan_parallel(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    Cm = _train_centroids(e)
-    if Cm.size == 0:  # empty corpus: no row ever reaches the UDFs, but the
-        Cm = np.zeros((1, IVF_DIM), dtype=np.int64)  # closure needs a shape
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def nearest_cell(v: pd.Series) -> pd.Series:
-        X = np.floor(np.stack(v.to_numpy()) * _MICRO).astype(np.int64)
-        d = ((X[:, None, :] - Cm[None, :, :]) ** 2).sum(-1)
-        return pd.Series(d.argmin(1))  # ties → lowest cell
+    C = _train_codebooks(e, 1, IVF_K, IVF_ITERS)[0]
 
     @pandas_udf("array<int>")
     def probe_cells(v: pd.Series) -> pd.Series:
-        X = np.floor(np.stack(v.to_numpy()) * _MICRO).astype(np.int64)
-        d = ((X[:, None, :] - Cm[None, :, :]) ** 2).sum(-1)
         # stable sort ⇒ equal distances keep ascending cell order — the
         # oracle's ORDER BY (d, cell)
-        order = np.argsort(d, axis=1, kind="stable")
+        order = np.argsort(_sq_dists(_micros(v), C), axis=1, kind="stable")
         return pd.Series(list(order[:, :IVF_NPROBE]))
 
-    corpus = e.select("vec_id", "v", nearest_cell("v").alias("cell"))
+    corpus = e.select("vec_id", "v", _nearest_cell_udf(C)("v").alias("cell"))
     q = (
         e.filter(F.col("vec_id") < N_QUERIES)
         .select(
@@ -648,127 +670,23 @@ PQ_ITERS = 3
 PQ_SHORTLIST = 32  # ADC candidates kept per query before exact re-rank
 
 
-def _train_pq_codebooks(e: DataFrame):
-    """Per-subspace Lloyd's k-means on the SHARED deterministic sample
-    (`_sample_micros` — identical to the IVF trainer's): PQ_M independent
-    codebooks of PQ_KS centroids over PQ_DSUB-dim sub-vectors, all
-    arithmetic int64 micros with ties to the lowest cell and floored
-    integer means — the same cross-engine-exact recipe as
-    `_train_centroids`, which is what lets pq_codebooks AND the whole
-    sim_search_pq query carry exact-hash oracles. Returns int64 micros,
-    shape (PQ_M, k, PQ_DSUB); k clamps to the sample size."""
-    import numpy as np
-
-    X = _sample_micros(e)
-    if X.size == 0:
-        return np.zeros((PQ_M, 0, PQ_DSUB), dtype=np.int64)
-    books = []
-    k = min(PQ_KS, len(X))
-    for m in range(PQ_M):
-        S = X[:, m * PQ_DSUB : (m + 1) * PQ_DSUB]
-        C = S[:k].copy()
-        for _ in range(PQ_ITERS):
-            d = ((S[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            a = d.argmin(1)  # ties → lowest cell (numpy first index)
-            for j in range(k):
-                mem = a == j
-                if mem.any():
-                    C[j] = np.floor(
-                        S[mem].sum(0).astype(np.float64) / int(mem.sum())
-                    ).astype(np.int64)
-        books.append(C)
-    return np.stack(books)
-
-
-def _pq_cte() -> str:
-    """Shared DuckDB CTE chain deriving the PQ codebooks — the per-sub
-    generalization of `_ivf_centroid_oracle`'s Lloyd unrolling (identical
-    sample CTEs, one extra `sub` grouping column everywhere). Ends at
-    ``pcb(sub, cell, dim, val)``."""
-    rounds = []
-    for i in range(1, PQ_ITERS + 1):
-        p = i - 1
-        rounds.append(f"""
-pa{i} AS MATERIALIZED (
-    SELECT sid, sub, cell FROM (
-        SELECT d.sid, d.sub, d.cell,
-               row_number() OVER (PARTITION BY d.sid, d.sub
-                                  ORDER BY d.dist, d.cell) AS rn
-        FROM (SELECT s.sid, s.sub, c.cell,
-                     sum((s.val - c.val) * (s.val - c.val)) AS dist
-              FROM ssub s JOIN pc{p} c ON c.sub = s.sub AND c.dim = s.dim
-              GROUP BY 1, 2, 3) d
-    ) WHERE rn = 1
-),
-pc{i} AS MATERIALIZED (
-    SELECT c.sub, c.cell, c.dim, coalesce(m.val, c.val) AS val
-    FROM pc{p} c
-    LEFT JOIN (
-        SELECT a.sub, a.cell, s.dim,
-               CAST(floor(CAST(sum(s.val) AS DOUBLE) / count(*)) AS BIGINT)
-                   AS val
-        FROM pa{i} a JOIN ssub s ON s.sid = a.sid AND s.sub = a.sub
-        GROUP BY 1, 2, 3
-    ) m ON m.sub = c.sub AND m.cell = c.cell AND m.dim = c.dim
-)""")
-    return f"""
-WITH em AS MATERIALIZED (
-    SELECT vec_id,
-           list_transform(CAST(embedding AS DOUBLE[]),
-                          x -> CAST(floor(x * {_MICRO}) AS BIGINT)) AS vm
-    FROM embeddings
-),
-spread AS MATERIALIZED (
-    SELECT vec_id, vm FROM em
-    WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT
-          % 4 = 0
-),
-pick AS (
-    SELECT (SELECT count(*) FROM (SELECT 1 FROM spread LIMIT {IVF_K}))
-           < {IVF_K} AS use_all
-),
-samp AS MATERIALIZED (
-    SELECT vec_id AS sid, vm FROM (
-        SELECT vec_id, vm FROM spread WHERE NOT (SELECT use_all FROM pick)
-        UNION ALL
-        SELECT vec_id, vm FROM em WHERE (SELECT use_all FROM pick)
-    ) ORDER BY vec_id LIMIT {IVF_TRAIN_CAP}
-),
-ssub AS MATERIALIZED (
-    SELECT sid, CAST((i - 1) // {PQ_DSUB} AS INTEGER) AS sub,
-           CAST((i - 1) % {PQ_DSUB} + 1 AS INTEGER) AS dim,
-           vm[CAST(i AS INTEGER)] AS val
-    FROM samp, range(1, {IVF_DIM + 1}) t(i)
-),
-ranked AS MATERIALIZED (SELECT vm, row_number() OVER (ORDER BY sid) AS rn FROM samp),
-pc0 AS MATERIALIZED (
-    SELECT CAST((i - 1) // {PQ_DSUB} AS INTEGER) AS sub,
-           CAST(rn - 1 AS INTEGER) AS cell,
-           CAST((i - 1) % {PQ_DSUB} + 1 AS INTEGER) AS dim,
-           vm[CAST(i AS INTEGER)] AS val
-    FROM ranked, range(1, {IVF_DIM + 1}) t(i)
-    WHERE rn <= {PQ_KS}
-),{",".join(rounds)},
-pcb AS MATERIALIZED (SELECT sub, cell, dim, val FROM pc{PQ_ITERS})
-"""
-
-
 @query(
     "pq_codebooks",
-    oracle=_pq_cte() + "\nSELECT sub, cell, dim, val AS c_micro FROM pcb",
+    oracle=_lloyd_ctes(PQ_M, PQ_KS, PQ_ITERS)
+    + "\nSELECT sub, cell, dim, val AS c_micro FROM cb",
 )
 def pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained PRODUCT-QUANTIZATION index structure as a table —
     (sub, cell, dim, c_micro) per sub-centroid coordinate; the PQ
     counterpart of `ivf_centroids` and the artifact a production
     pipeline persists and broadcasts to every encoder/scorer. Training
-    is deterministic integer-micro Lloyd per subspace on the shared
-    bounded sample, so the DuckDB twin re-derives identical codebooks
-    by unrolling the same rounds with one extra `sub` column."""
+    is `_train_codebooks` with PQ_M subspaces on the same bounded sample
+    as IVF, so the DuckDB twin re-derives identical codebooks from the
+    same `_lloyd_ctes` template."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    C = _train_pq_codebooks(e)
+    C = _train_codebooks(e, PQ_M, PQ_KS, PQ_ITERS)
     rows = [
         (sub, cell, dim + 1, int(val))
         for sub, book in enumerate(C.tolist())
@@ -782,27 +700,7 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_search_pq",
-    oracle=_pq_cte() + f""",
-edim AS (
-    SELECT vec_id, CAST((i - 1) // {PQ_DSUB} AS INTEGER) AS sub,
-           CAST((i - 1) % {PQ_DSUB} + 1 AS INTEGER) AS dim,
-           vm[CAST(i AS INTEGER)] AS val
-    FROM em, range(1, {IVF_DIM + 1}) t(i)
-),
-dists AS (
-    SELECT e.vec_id, e.sub, c.cell,
-           sum((e.val - c.val) * (e.val - c.val)) AS d
-    FROM edim e JOIN pcb c ON c.sub = e.sub AND c.dim = e.dim
-    GROUP BY 1, 2, 3
-),
-codes AS (
-    SELECT vec_id, sub, cell FROM (
-        SELECT vec_id, sub, cell,
-               row_number() OVER (PARTITION BY vec_id, sub
-                                  ORDER BY d, cell) AS rn
-        FROM dists
-    ) WHERE rn = 1
-),
+    oracle=_lloyd_ctes(PQ_M, PQ_KS, PQ_ITERS) + _assign_ctes() + f""",
 adc AS (
     SELECT cx.vec_id AS neighbor_id, dq.vec_id AS query_id,
            sum(dq.d) AS adc
@@ -847,7 +745,7 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     al., "Product Quantization for Nearest Neighbor Search".
 
     Plan: encode and LUT passes are NARROW Arrow batches (numpy argmin
-    over int64 micros, ties to lowest cell — the `_train_centroids`
+    over int64 micros, ties to lowest cell — the `_lloyd`
     determinism recipe); ADC is a broadcast join of the 20-query LUT
     set against the codes stream with one JVM `aggregate` lookup-sum
     per pair (no Python in the scoring loop); the only width-P shuffle
@@ -864,31 +762,23 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = scan_parallel(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    C = _train_pq_codebooks(e)
+    C = _train_codebooks(e, PQ_M, PQ_KS, PQ_ITERS)
     if C.shape[1] == 0:  # empty corpus: closure must still broadcast
         C = np.zeros((PQ_M, 1, PQ_DSUB), dtype=np.int64)
     k = C.shape[1]
 
+    def sub_dists(v: pd.Series) -> list:
+        X = _micros(v)
+        return [_sq_dists(S, Cs) for S, Cs in zip(np.split(X, PQ_M, axis=1), C)]
+
     @pandas_udf("array<int>")
     def encode(v: pd.Series) -> pd.Series:
-        X = np.floor(np.stack(v.to_numpy()) * _MICRO).astype(np.int64)
-        codes = np.empty((len(X), PQ_M), dtype=np.int32)
-        for m in range(PQ_M):
-            S = X[:, m * PQ_DSUB : (m + 1) * PQ_DSUB]
-            d = ((S[:, None, :] - C[m][None, :, :]) ** 2).sum(-1)
-            codes[:, m] = d.argmin(1)
-        return pd.Series(list(codes))
+        codes = np.stack([d.argmin(1) for d in sub_dists(v)], axis=1)
+        return pd.Series(list(codes.astype(np.int32)))
 
     @pandas_udf("array<long>")
     def lut(v: pd.Series) -> pd.Series:
-        X = np.floor(np.stack(v.to_numpy()) * _MICRO).astype(np.int64)
-        out = np.empty((len(X), PQ_M * k), dtype=np.int64)
-        for m in range(PQ_M):
-            S = X[:, m * PQ_DSUB : (m + 1) * PQ_DSUB]
-            out[:, m * k : (m + 1) * k] = (
-                (S[:, None, :] - C[m][None, :, :]) ** 2
-            ).sum(-1)
-        return pd.Series(list(out))
+        return pd.Series(list(np.hstack(sub_dists(v))))
 
     codes = e.select("vec_id", encode("v").alias("codes"))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(

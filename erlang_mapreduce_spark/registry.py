@@ -46,28 +46,13 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver's per-round correctness pass walks ``queries()`` in dict
-# insertion order and stops after 50 ops. With 184 registered ops, insertion
-# order therefore decides which ops get a driver-verified row each round, so
-# this list rotates round-over-round to spread driver evidence across the
-# whole registry; tests/test_correctness.py re-proves the whole registry
-# locally each run (artifact CORRECTNESS_local_full.json).
-#
-# Round-16 window (this ordering), oldest-evidence-first policy:
-#   1-2:   curate_url_dedup + curate_domain_filter, NEW in r16 (zero
-#          driver evidence).
-#   3-41:  the 39 r12-evidence ops (the oldest evidence remaining
-#          after r15 cleared the r11 block — r15 VERDICT task 4).
-#   42:    text_bigram_freq (the flagship, in-window every round).
-#   43-50: the first 8 of the r13-evidence block (including
-#          pipeline_pretrain_e2e, so the driver re-proves the
-#          newly composed 15-stage capstone this round).
-# After r16: no op's driver evidence predates r13.
+# Registration order. The external driver checks the first 50 entries of
+# ``queries()`` in dict insertion order, so this list puts the ops with the
+# oldest driver evidence first; tests/test_correctness.py re-proves the
+# whole registry locally on every run.
 DRIVER_PRIORITY: list[str] = [
-    # --- 1-2: NEW in r16, zero driver evidence ---
     "curate_url_dedup",
     "curate_domain_filter",
-    # --- 3-41: the 39 r12-evidence ops (oldest remaining) ---
     "sink_python_datasource",
     "scan_python_arrow",
     "pipeline_seq_pack",
@@ -107,9 +92,7 @@ DRIVER_PRIORITY: list[str] = [
     "text_lang_id",
     "multimodal_frame_sample",
     "multimodal_resize",
-    # --- 42: the flagship (in-window every round per policy) ---
     "text_bigram_freq",
-    # --- 43-50: the head of the r13-evidence block ---
     "text_html_extract",
     "pipeline_pretrain_e2e",
     "sql_forecast_revenue",
@@ -118,7 +101,6 @@ DRIVER_PRIORITY: list[str] = [
     "text_sentence_split",
     "text_lm_perplexity",
     "text_pii_scrub",
-    # --- 51+: r13-evidence remainder ---
     "text_tfidf",
     "text_quality_score",
     "dedup_ngram_jaccard",
@@ -160,7 +142,6 @@ DRIVER_PRIORITY: list[str] = [
     "join_interval",
     "agg_hash_count",
     "agg_multi",
-    # --- r14 evidence ---
     "dedup_semantic",
     "sample_dsir",
     "agg_distinct",
@@ -210,7 +191,6 @@ DRIVER_PRIORITY: list[str] = [
     "stream_sliding",
     "stream_session",
     "text_decontaminate",
-    # --- r15 evidence (freshest) ---
     "quality_classifier_score",
     "text_gopher_rules",
     "dedup_lines_global",

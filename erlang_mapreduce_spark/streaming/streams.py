@@ -686,7 +686,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..operators.relational import _KMV_NUM, KMV_K  # noqa: E402
+from ..operators.relational import KMV_K, kmv_estimate, kmv_oracle  # noqa: E402
 
 
 def _kmv_min_k(df: DataFrame) -> DataFrame:
@@ -715,31 +715,13 @@ def _kmv_estimate(sketch: DataFrame) -> DataFrame:
     m = F.count("*")
     return sketch.groupBy("event_type").agg(
         m.cast("long").alias("k_used"),
-        F.when(m < KMV_K, m.cast("double"))
-        .otherwise(F.lit(_KMV_NUM) / F.max("h").cast("double"))
-        .alias("est_distinct"),
+        kmv_estimate(m, F.max("h")).alias("est_distinct"),
     )
 
 
 @query(
     "stream_kmv_distinct",
-    oracle=f"""
-WITH h AS (
-    SELECT DISTINCT event_type,
-           ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-    FROM events WHERE user_id IS NOT NULL
-),
-r AS (
-    SELECT event_type, h,
-           row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-    FROM h
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS k_used,
-       CASE WHEN count(*) < {KMV_K} THEN CAST(count(*) AS DOUBLE)
-            ELSE {_KMV_NUM!r} / CAST(max(h) AS DOUBLE) END AS est_distinct
-FROM r WHERE rn <= {KMV_K} GROUP BY event_type
-""",
+    oracle=kmv_oracle("events WHERE user_id IS NOT NULL", "user_id", "event_type"),
 )
 def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental distinct-user estimation over the stream — a KMV

@@ -154,28 +154,33 @@ def test_ann_recall_vs_brute_force(spark, sf_dir):
 
 
 def test_ivf_training_collect_is_bounded(spark, sf_dir):
-    """The IVF k-means sample plan must contain a hard LIMIT — the absolute
-    cap is what keeps the driver-side collect safe at any corpus size (a
-    bare fraction sample would ship 25% of a 100 TB corpus)."""
+    """The plan the k-means trainers collect must contain a hard LIMIT — the
+    absolute cap is what keeps the driver-side collect safe at any corpus
+    size (a bare fraction sample would ship 25% of a 100 TB corpus)."""
     from erlang_mapreduce_spark.operators.similarity import (
         IVF_TRAIN_CAP,
-        _train_sample,
+        _sample_df,
     )
 
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    plan = _train_sample(e)._jdf.queryExecution().optimizedPlan().toString()
+    plan = _sample_df(e)._jdf.queryExecution().optimizedPlan().toString()
     assert f"GlobalLimit {IVF_TRAIN_CAP}" in plan, plan
 
 
 def test_ivf_centroids_clamp_to_tiny_corpus(spark, sf_dir):
-    """Fewer vectors than IVF_K must not crash training (round-1 advice:
-    IndexError at C[k] on thin hash samples); centroid count clamps to the
-    corpus size, and an empty corpus degenerates gracefully."""
+    """Fewer vectors than cells must not crash training (an IndexError at
+    C[k] on thin hash samples): for the IVF and the PQ shapes alike the
+    cell count clamps to the corpus size, and an empty corpus yields no
+    cells."""
     from erlang_mapreduce_spark.operators.similarity import (
+        IVF_ITERS,
         IVF_K,
-        _train_centroids,
+        PQ_ITERS,
+        PQ_KS,
+        PQ_M,
+        _train_codebooks,
     )
 
     e = (
@@ -183,10 +188,12 @@ def test_ivf_centroids_clamp_to_tiny_corpus(spark, sf_dir):
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .limit(5)
     )
-    cents = _train_centroids(e)
-    assert 1 <= len(cents) <= 5 < IVF_K
     empty = e.filter(F.lit(False))
-    assert _train_centroids(empty).size == 0
+    for m, k, iters in [(1, IVF_K, IVF_ITERS), (PQ_M, PQ_KS, PQ_ITERS)]:
+        books = _train_codebooks(e, m, k, iters)
+        assert len(books) == m
+        assert 1 <= books.shape[1] <= 5 < k
+        assert _train_codebooks(empty, m, k, iters).size == 0
 
 
 def test_gram_df_cap_drops_stop_grams(spark, sf_dir):
@@ -702,7 +709,7 @@ def test_dedup_semantic_recall_and_keep_rule(spark, sf_dir):
 
 
 def test_dedup_semantic_zero_norm_twins(spark, tmp_path):
-    """Pins the zero-norm convention (r14 ADVICE): numpy scores a zero-norm
+    """Pins the zero-norm convention: numpy scores a zero-norm
     vector's cosines as NaN (which Spark SQL compares GREATER than any
     number) while DuckDB's list_cosine_similarity returns -1.0 — unguarded,
     the engines would disagree on duplicated zero embeddings. The op adopts

@@ -461,26 +461,22 @@ def test_transition_matrix_is_row_stochastic(spark, sf_dir):
 
 
 def test_ivf_centroids_within_sample_hull(spark, sf_dir):
-    """Every trained centroid coordinate is a (floored) mean of sampled
-    micro values, so it must lie inside the corpus-wide [min, max] micro
-    hull per dimension; cells are 0..k-1 with every dim present."""
+    """Every trained centroid coordinate — IVF centroids and PQ
+    sub-centroids alike — is a (floored) mean of sampled micro values, so
+    it must lie inside the corpus-wide [min, max] micro hull per
+    dimension; within each subspace, cells are 0..k-1 with every dim
+    present."""
     from pyspark.sql import functions as F
 
     from erlang_mapreduce_spark.operators.similarity import (
         IVF_DIM,
         IVF_K,
+        PQ_DSUB,
+        PQ_KS,
         _MICRO,
     )
     from erlang_mapreduce_spark.registry import QUERIES
 
-    cents = QUERIES["ivf_centroids"](spark, sf_dir).collect()
-    cells = {r.cell for r in cents}
-    assert cells == set(range(len(cells)))
-    assert len(cells) <= IVF_K
-    per_cell: dict = {}
-    for r in cents:
-        per_cell.setdefault(r.cell, set()).add(r.dim)
-    assert all(dims == set(range(1, IVF_DIM + 1)) for dims in per_cell.values())
     hull = (
         load(spark, sf_dir, "embeddings")
         .select(F.explode(F.col("embedding").cast("array<double>")).alias("x"))
@@ -488,7 +484,21 @@ def test_ivf_centroids_within_sample_hull(spark, sf_dir):
         .collect()[0]
     )
     lo, hi = int(hull.lo * _MICRO) - 1, int(hull.hi * _MICRO) + 1
-    assert all(lo <= r.c_micro <= hi for r in cents)
+    for op, dim, k in [
+        ("ivf_centroids", IVF_DIM, IVF_K),
+        ("pq_codebooks", PQ_DSUB, PQ_KS),
+    ]:
+        cents = QUERIES[op](spark, sf_dir).collect()
+        per_cell: dict = {}
+        for r in cents:
+            key = (getattr(r, "sub", 0), r.cell)
+            per_cell.setdefault(key, set()).add(r.dim)
+        for sub in {s for s, _ in per_cell}:
+            cells = {c for s, c in per_cell if s == sub}
+            assert cells == set(range(len(cells))), op
+            assert len(cells) <= k, op
+        assert all(d == set(range(1, dim + 1)) for d in per_cell.values()), op
+        assert all(lo <= r.c_micro <= hi for r in cents), op
 
 
 def test_cm_sketch_df_estimate_bounds(spark, sf_dir):
